@@ -24,7 +24,10 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from axonops_schema_registry_spark.operators.core import latest_per_key
-from axonops_schema_registry_spark.operators.text import normalize_name_snake
+from axonops_schema_registry_spark.operators.text import (
+    normalize_name_snake,
+    normalize_name_snake_str,
+)
 from axonops_schema_registry_spark.registry.compat import check_compatibility
 from axonops_schema_registry_spark.registry.registration import (
     import_batch,
@@ -105,10 +108,7 @@ class RegistryAnalytics:
         """POST /schemas/search/field (exact mode w/ naming variants)."""
         fields = self.fields().withColumn(
             "norm_name", normalize_name_snake(F.col("name")))
-        import re
-
-        norm_term = re.sub(r"[-\s]+", "_", re.sub(
-            r"([a-z0-9])([A-Z])", r"\1_\2", term)).lower()
+        norm_term = normalize_name_snake_str(term)
         return fields.filter(F.col("norm_name") == norm_term) \
                      .select("subject", "version", "name", "path", "type")
 

@@ -124,25 +124,24 @@ def ccnet_receipt(docs: DataFrame, budget_tokens: int = 120,
     # checkpoint runs on a driver thread while the main thread builds
     # and materializes the perplexity/classifier chain below — the
     # future resolves before the final receipt join needs the frame.
-    from concurrent.futures import ThreadPoolExecutor as _TPE
-
-    _pool = _TPE(max_workers=1)
-    f_ded = _pool.submit(lambda: ded_c.localCheckpoint(eager=True))
-    surv = (ln.filter(F.col("cleaned_text") != "")
-            .select("doc_id", "source",
-                    F.col("cleaned_text").alias("text")))
-    pb = perplexity_buckets(surv)            # checkpoints internally
-    hm = (surv.join(pb.filter(F.col("bucket") <= 1)
-                    .select("doc_id"), "doc_id")
-          .localCheckpoint(eager=False))     # count + fit + gate + mix
-    pos = hm.filter(F.col("source") == pos_source).select("doc_id")
-    top = (quality_filter_scores(hm, pos, n_buckets=4096)
-           .orderBy(F.desc("score_micro"), "doc_id").limit(n_quality)
-           .select("doc_id")
-           .localCheckpoint(eager=False))    # 100 rows; recompute =
-    #                                          the whole classifier
-    ded_c = f_ded.result()
-    _pool.shutdown()
+    # The with-block shuts the worker down on the exception path too.
+    with ThreadPoolExecutor(max_workers=1) as pool:
+        f_ded = pool.submit(lambda: ded_c.localCheckpoint(eager=True))
+        surv = (ln.filter(F.col("cleaned_text") != "")
+                .select("doc_id", "source",
+                        F.col("cleaned_text").alias("text")))
+        pb = perplexity_buckets(surv)        # checkpoints internally
+        hm = (surv.join(pb.filter(F.col("bucket") <= 1)
+                        .select("doc_id"), "doc_id")
+              .localCheckpoint(eager=False))  # count + fit + gate + mix
+        pos = hm.filter(F.col("source") == pos_source).select("doc_id")
+        top = (quality_filter_scores(hm, pos, n_buckets=4096)
+               .orderBy(F.desc("score_micro"), "doc_id")
+               .limit(n_quality)
+               .select("doc_id")
+               .localCheckpoint(eager=False))  # 100 rows; recompute =
+        #                                        the whole classifier
+        ded_c = f_ded.result()
     # Broadcast-tag the pool once: the head+middle count and the
     # quality-kept count come out of the SAME aggregate (an inner
     # join ≡ left-join + filter on the tag), fusing two receipt

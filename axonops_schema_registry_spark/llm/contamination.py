@@ -177,7 +177,8 @@ def split_leakage_flags(labeled: DataFrame,
     with ``broadcast_threshold`` set.  With the default ``None`` the
     short-circuit skips it entirely.  Callers that invoke this
     repeatedly with the switch armed should cache/localCheckpoint
-    ``labeled`` first (scripts/sf1_correctness_r13.py does)."""
+    ``labeled`` first (the sf1 correctness sweep at commit d15378d
+    did)."""
     train = labeled.filter(F.col(split_col) == "train")
     test = labeled.filter(F.col(split_col) == "test")
     if (broadcast_threshold is not None

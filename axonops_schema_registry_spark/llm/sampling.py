@@ -307,8 +307,8 @@ def _hashed_ngram_counts(docs: DataFrame, id_col: str, text_col: str,
     # satisfies the (id, b) clustering requirement, the groupBy runs
     # as ONE complete aggregate with NO second exchange: the r18
     # keyless form of this experiment was re-coalesced by AQE and
-    # measured neutral, which this form is not (A/B in
-    # scripts/r19_feat_ab.py).
+    # measured neutral, which this form is not (the A/B script is in
+    # the tree at commit d15378d).
     par = docs.sparkSession.sparkContext.defaultParallelism
     return (docs.select(F.col(id_col).alias("id"),
                         F.split(F.col(text_col), " ").alias("__ws"))

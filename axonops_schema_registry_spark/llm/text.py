@@ -277,14 +277,14 @@ def unigram_surprisal(docs: DataFrame, id_col: str = "doc_id",
     """
     # Shared token-frame DEFINITION, no cache (r19, VERDICT r18 ask
     # #1): the r18 .cache() here regressed ccb1 28% in the driver's
-    # record, and the interleaved cold-JVM A/B (scripts/r19_ccb1_ab.py,
-    # min-of-3 per arm: cache 1.843/1.849 s vs nocache 1.674/1.571 s)
-    # confirmed the cache-fill barrier costs more than the explode it
-    # saves — the fit half consumes tokens inside a pipelined
-    # map-side-combined aggregate, so recomputing the explode per half
-    # stays in whole-stage codegen while the cache serializes the
-    # frame through the block store first (§5: a cache is only a win
-    # when the subtree cost exceeds the materialization barrier).
+    # record, and the interleaved cold-JVM A/B (script at commit
+    # d15378d, min-of-3 per arm: cache 1.843/1.849 s vs nocache
+    # 1.674/1.571 s) confirmed the cache-fill barrier costs more than
+    # the explode it saves — the fit half consumes tokens inside a
+    # pipelined map-side-combined aggregate, so recomputing the explode
+    # per half stays in whole-stage codegen while the cache serializes
+    # the frame through the block store first (§5: a cache is only a
+    # win when the subtree cost exceeds the materialization barrier).
     # unigram_lm/surprisal_with_lm stay the independent
     # train-once/score-forever entry points.
     toks = _lm_tokens(docs, id_col, text_col)
@@ -674,6 +674,13 @@ def bpe_merges(docs: DataFrame, text_col: str = "text",
     #   * pairs OUTSIDE the fetched window have count <= the last
     #     fetched count, so a candidate tying that floor stops the
     #     batch (an invisible tie could win on the lex tie-break).
+    #   * an applied fold whose pa+pb equals a symbol minted earlier
+    #     would add its created pairs to that symbol's existing pairs,
+    #     and the bounds above do not sum the two, so such a fold
+    #     ends the batch.  Serial greedy BPE over character-initialised
+    #     words never mints one string twice (a search over every
+    #     two-word corpus of length-2..5 words on {a,b,c} found none),
+    #     so this guard keeps the contract without costing a job.
     # Each batch replays greedy EXACTLY (pinned against the pure-
     # Python reference in tests); what changes is driver round-trips
     # — 10 -> 5 election jobs on the bench corpus.
@@ -692,8 +699,10 @@ def bpe_merges(docs: DataFrame, text_col: str = "text",
         fetched_all = len(top) < top_m
         floor_cnt = int(top[-1]["pair_count"])
         applied: list[tuple[str, str, int]] = []
+        minted = {a + b for _, a, b, _ in merges}
+        remint = False
         for row in top:
-            if len(merges) + len(applied) >= k:
+            if len(merges) + len(applied) >= k or remint:
                 break
             a, b, cnt = row["lhs"], row["rhs"], int(row["pair_count"])
             if applied:
@@ -727,6 +736,8 @@ def bpe_merges(docs: DataFrame, text_col: str = "text",
                 if unsafe:
                     break
             applied.append((a, b, cnt))
+            remint = a + b in minted
+            minted.add(a + b)
         for a, b, cnt in applied:
             merges.append((len(merges) + 1, a, b, cnt))
             vocab = vocab.select(

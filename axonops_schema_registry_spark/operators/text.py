@@ -196,6 +196,14 @@ def normalize_name_snake(col: F.Column) -> F.Column:
     return F.lower(c)
 
 
+def normalize_name_snake_str(name: str) -> str:
+    """Python twin of :func:`normalize_name_snake` for driver-side
+    strings.  ``re.ASCII`` keeps ``\\s`` to the ASCII whitespace set
+    that Java's ``\\s`` matches in the Column version."""
+    s = re.sub(r"([a-z0-9])([A-Z])", r"\1_\2", name)
+    return re.sub(r"[-\s]+", "_", s, flags=re.ASCII).lower()
+
+
 def glob_to_regex(glob: str) -> str:
     """Translate a ``*``-glob into an anchored regex (F3;
     internal/api/handlers/analysis.go:684-715 — case-insensitive ``*`` only).

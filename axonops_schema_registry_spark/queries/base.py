@@ -7,8 +7,7 @@ The same registry backs:
 
 - ``__spark_entry__.queries()`` / ``oracle_sql()`` — the driver contract;
 - ``tests/test_queries_oracle.py`` — a local replica of the driver's
-  hash-compare gate (Spark result vs DuckDB oracle, order-insensitive);
-- ``bench.py`` — the headline benchmark set (``bench=True`` specs).
+  hash-compare gate (Spark result vs DuckDB oracle, order-insensitive).
 
 Float determinism contract
 --------------------------
@@ -39,7 +38,6 @@ class QuerySpec:
     oracle: str | None
     doc: str = ""
     tags: tuple[str, ...] = field(default=())
-    bench: bool = False
 
 
 def dsum(col: Column | str, scale: int = 2, alias: str | None = None) -> Column:

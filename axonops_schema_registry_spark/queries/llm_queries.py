@@ -5286,8 +5286,8 @@ def ctm5_split_near_leakage(spark: SparkSession,
     (test_banding_recall_guard_on_oracle_fixtures pins this by name
     for ctm5's exact config on both oracle corpora; the r13 scale
     smoke showed pairs AT J~0.81 can shatter 16-band recall).  sf1
-    hash-pin: scripts/r14_ctm5_scale.py (r14 appendix in
-    docs/SCALING.md)."""
+    hash-pin: the ctm5 scale script at commit d15378d (r14 appendix
+    in docs/SCALING.md)."""
     from axonops_schema_registry_spark.llm.contamination import (
         near_split_leakage,
     )
@@ -5909,7 +5909,7 @@ CCN1_ORACLE = _ccn1_oracle()
 
 SPECS: list[QuerySpec] = [
     QuerySpec("ng1_ngram_novelty", ng1_ngram_novelty, NG1_ORACLE,
-              tags=("llm", "text", "novelty", "agg"), bench=True),
+              tags=("llm", "text", "novelty", "agg")),
     QuerySpec("cur3_quality_dedup_split", cur3_quality_dedup_split,
               CUR3_ORACLE,
               tags=("llm", "curation", "composition", "dedup",
@@ -5924,17 +5924,14 @@ SPECS: list[QuerySpec] = [
               SPLIT1_ORACLE, tags=("llm", "sampling", "export")),
     QuerySpec("ctm4_split_leakage", ctm4_split_leakage, CTM4_ORACLE,
               tags=("llm", "contamination", "sampling",
-                    "composition"),
-              bench=True),
+                    "composition")),
     QuerySpec("ctm5_split_near_leakage", ctm5_split_near_leakage,
               CTM5_ORACLE,
-              tags=("llm", "contamination", "dedup", "sampling"),
-              bench=True),
+              tags=("llm", "contamination", "dedup", "sampling")),
     QuerySpec("ctm6_contamination_report", ctm6_contamination_report,
               CTM6_ORACLE,
               tags=("llm", "contamination", "dedup", "agg",
-                    "composition"),
-              bench=True),
+                    "composition")),
     QuerySpec("qn1_robust_length_normalization",
               qn1_robust_length_normalization, QN1_ORACLE,
               tags=("llm", "quality", "stats")),
@@ -5942,7 +5939,7 @@ SPECS: list[QuerySpec] = [
               OUT1_ORACLE, tags=("llm", "similarity", "quality",
                                  "window")),
     QuerySpec("pk1_sequence_packing", pk1_sequence_packing, PK1_ORACLE,
-              tags=("llm", "packing", "window", "agg"), bench=True),
+              tags=("llm", "packing", "window", "agg")),
     QuerySpec("pk2_segmented_packing", pk2_segmented_packing, PK2_ORACLE,
               tags=("llm", "packing", "window", "agg", "scale")),
     QuerySpec("pk3_whole_doc_packing", pk3_whole_doc_packing, PK3_ORACLE,
@@ -5950,14 +5947,13 @@ SPECS: list[QuerySpec] = [
     QuerySpec("bpe1_merge_candidates", bpe1_merge_candidates,
               BPE1_ORACLE, tags=("llm", "text", "tokenizer", "agg")),
     QuerySpec("bpe2_merge_table", bpe2_merge_table, BPE2_ORACLE,
-              tags=("llm", "text", "tokenizer", "iterative"),
-              bench=True),
+              tags=("llm", "text", "tokenizer", "iterative")),
     QuerySpec("bpe3_tokenize", bpe3_tokenize, BPE3_ORACLE,
               tags=("llm", "text", "tokenizer", "iterative")),
     QuerySpec("bpe4_fertility", bpe4_fertility, BPE4_ORACLE,
               tags=("llm", "text", "tokenizer", "stats")),
     QuerySpec("gq1_gopher_quality", gq1_gopher_quality, GQ1_ORACLE,
-              tags=("llm", "text", "quality", "agg"), bench=True),
+              tags=("llm", "text", "quality", "agg")),
     QuerySpec("gq2_repetition", gq2_repetition, GQ2_ORACLE,
               tags=("llm", "text", "quality")),
     QuerySpec("ch1_document_chunking", ch1_document_chunking, CH1_ORACLE,
@@ -5995,21 +5991,19 @@ SPECS: list[QuerySpec] = [
     QuerySpec("bp1_boilerplate_spans", bp1_boilerplate_spans, BP1_ORACLE,
               tags=("llm", "dedup", "boilerplate")),
     QuerySpec("es1_exact_substring_spans", es1_exact_substring_spans,
-              ES1_ORACLE, tags=("llm", "dedup", "substring", "window"),
-              bench=True),
-    # bench-only 100 TB form (VERDICT r10 ask #2): no oracle — output
-    # pinned equal to es1 in pytest; bench=True for regression tracking
+              ES1_ORACLE, tags=("llm", "dedup", "substring", "window")),
+    # 100 TB form (VERDICT r10 ask #2): no oracle — output pinned
+    # equal to es1 in pytest
     QuerySpec("es1h_exact_substring_spans_hashed",
               es1h_exact_substring_spans_hashed, None,
-              tags=("llm", "dedup", "substring", "window", "scale"),
-              bench=True),
+              tags=("llm", "dedup", "substring", "window", "scale")),
     QuerySpec("es2_span_removal", es2_span_removal, ES2_ORACLE,
               tags=("llm", "dedup", "substring")),
     QuerySpec("es3_decontamination_cut", es3_decontamination_cut,
               ES3_ORACLE,
               tags=("llm", "dedup", "contamination", "substring")),
     QuerySpec("ln1_line_dedup", ln1_line_dedup, LN1_ORACLE,
-              tags=("llm", "dedup", "paragraph"), bench=True),
+              tags=("llm", "dedup", "paragraph")),
     QuerySpec("ln2_line_decontamination", ln2_line_decontamination,
               LN2_ORACLE,
               tags=("llm", "dedup", "contamination", "paragraph")),
@@ -6019,19 +6013,15 @@ SPECS: list[QuerySpec] = [
               tags=("llm", "dedup", "stats", "skew")),
     QuerySpec("dsir1_importance_selection", dsir1_importance_selection,
               DSIR1_ORACLE,
-              tags=("llm", "sampling", "selection", "agg"),
-              bench=True),
+              tags=("llm", "sampling", "selection", "agg")),
     QuerySpec("qf1_quality_filter", qf1_quality_filter, QF1_ORACLE,
-              tags=("llm", "sampling", "quality", "agg"),
-              bench=True),
+              tags=("llm", "sampling", "quality", "agg")),
     QuerySpec("qf2_quality_gated_mixture", qf2_quality_gated_mixture,
               QF2_ORACLE,
-              tags=("llm", "sampling", "quality", "composition"),
-              bench=True),
+              tags=("llm", "sampling", "quality", "composition")),
     QuerySpec("ccn1_ccnet_pipeline", ccn1_ccnet_pipeline, CCN1_ORACLE,
               tags=("llm", "curation", "composition", "dedup",
-                    "sampling", "quality"),
-              bench=True),
+                    "sampling", "quality")),
     QuerySpec("shard1_export_manifest", shard1_export_manifest,
               SHARD1_ORACLE, tags=("llm", "export", "agg")),
     QuerySpec("cur2_cut_select_export", cur2_cut_select_export,
@@ -6044,7 +6034,7 @@ SPECS: list[QuerySpec] = [
     QuerySpec("dd1_exact_dedup", dd1_exact_dedup, DD1_ORACLE,
               tags=("llm", "dedup")),
     QuerySpec("dd2_minhash_lsh_dedup", dd2_minhash_lsh_dedup,
-              _JACCARD_ALLPAIRS_ORACLE, tags=("llm", "dedup"), bench=True),
+              _JACCARD_ALLPAIRS_ORACLE, tags=("llm", "dedup")),
     QuerySpec("dd3_simhash_dedup", dd3_simhash_dedup, DD3_ORACLE,
               tags=("llm", "dedup")),
     QuerySpec("dd7_incremental_dedup", dd7_incremental_dedup, DD7_ORACLE,
@@ -6052,7 +6042,7 @@ SPECS: list[QuerySpec] = [
     QuerySpec("ctm1_contamination_check", ctm1_contamination_check,
               CTM1_ORACLE, tags=("llm", "dedup", "contamination")),
     QuerySpec("cur1_curation_pass", cur1_curation_pass, CUR1_ORACLE,
-              tags=("llm", "dedup", "contamination", "pii"), bench=True),
+              tags=("llm", "dedup", "contamination", "pii")),
     QuerySpec("ctm2_bloom_contamination", ctm2_bloom_contamination,
               CTM1_ORACLE, tags=("llm", "contamination", "bloom")),
     QuerySpec("tx7_pii_scan", tx7_pii_scan, TX7_ORACLE,
@@ -6064,29 +6054,28 @@ SPECS: list[QuerySpec] = [
     QuerySpec("dd8_quality_representatives", dd8_quality_representatives,
               DD8_ORACLE, tags=("llm", "dedup", "window", "iterative")),
     QuerySpec("dd6_embedding_cosine_dedup", dd6_embedding_cosine_dedup,
-              DD6_ORACLE, tags=("llm", "dedup", "similarity"), bench=True),
-    # bench-only 100 TB form (VERDICT r10 ask #2): occupancy-targeted
+              DD6_ORACLE, tags=("llm", "dedup", "similarity")),
+    # 100 TB form (VERDICT r10 ask #2): occupancy-targeted
     # LSH bits — no oracle (dd6's SQL replay must keep the literal);
     # correctness pinned in tests/test_bench_variants.py
     QuerySpec("dd6b_embedding_cosine_dedup_scaled",
               dd6b_embedding_cosine_dedup_scaled, None,
-              tags=("llm", "dedup", "similarity", "scale"), bench=True),
+              tags=("llm", "dedup", "similarity", "scale")),
     QuerySpec("tx6_token_rarity", tx6_token_rarity, TX6_ORACLE,
               tags=("llm", "text")),
     QuerySpec("sk1_distinct_sketches", sk1_distinct_sketches, SK1_ORACLE,
               tags=("llm", "sketch")),
-    # nn1 is the exact-oracle baseline; the BENCH headline is the LSH
-    # path — the crossJoin must never be the number we optimize, it is a
+    # nn1 is the exact-oracle baseline; the production path is the LSH
+    # one — the crossJoin must never be the number we optimize, it is a
     # cartesian product at 100x corpus (round-1 verdict item 4)
     QuerySpec("nn1_cosine_topk", nn1_cosine_topk, NN1_ORACLE,
               tags=("llm", "similarity")),
     QuerySpec("nn2_lsh_ann_topk", nn2_lsh_ann_topk, NN2_ORACLE,
-              tags=("llm", "similarity"), bench=True),
+              tags=("llm", "similarity")),
     QuerySpec("nn3_ivf_ann_topk", nn3_ivf_ann_topk, NN3_ORACLE,
               tags=("llm", "similarity")),
     QuerySpec("nn5_multiprobe_lsh_topk", nn5_multiprobe_lsh_topk,
-              NN5_ORACLE, tags=("llm", "similarity", "ann"),
-              bench=True),
+              NN5_ORACLE, tags=("llm", "similarity", "ann")),
     QuerySpec("nn6_store_lookup_topk", nn6_store_lookup_topk,
               NN6_ORACLE,
               tags=("llm", "similarity", "ann", "streaming")),
@@ -6105,7 +6094,7 @@ SPECS: list[QuerySpec] = [
     QuerySpec("tx4_char_entropy", tx4_char_entropy, TX4_ORACLE,
               tags=("llm", "text")),
     QuerySpec("tx5_dataset_card", tx5_dataset_card, TX5_ORACLE,
-              tags=("llm", "text"), bench=True),
+              tags=("llm", "text")),
     QuerySpec("mm1_multimodal_decode", mm1_multimodal_decode, MM1_ORACLE,
               tags=("llm", "multimodal")),
     QuerySpec("mm3_pixel_decode", mm3_pixel_decode, MM3_ORACLE,
@@ -6120,12 +6109,11 @@ SPECS: list[QuerySpec] = [
               PPL1_ORACLE, tags=("llm", "text", "quality", "agg")),
     QuerySpec("ccb1_perplexity_buckets", ccb1_perplexity_buckets,
               CCB1_ORACLE,
-              tags=("llm", "text", "quality", "window", "agg"),
-              bench=True),
+              tags=("llm", "text", "quality", "window", "agg")),
     QuerySpec("mm2_header_decode", mm2_header_decode, MM2_ORACLE,
               tags=("llm", "multimodal")),
     QuerySpec("smp1_stratified_sample", smp1_stratified_sample,
-              SMP1_ORACLE, tags=("llm", "sampling"), bench=True),
+              SMP1_ORACLE, tags=("llm", "sampling")),
     QuerySpec("mix2_segmented_mixture", mix2_segmented_mixture,
               MIX1_ORACLE,
               tags=("llm", "sampling", "window", "scale")),

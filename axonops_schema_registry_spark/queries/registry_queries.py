@@ -2331,7 +2331,7 @@ SPECS: list[QuerySpec] = [
     QuerySpec("r3_schema_versions_view", r3_schema_versions_view, R3_ORACLE,
               tags=("registry", "agg")),
     QuerySpec("r4_registration_batch", r4_registration_batch, R4_ORACLE,
-              tags=("registry", "pipeline"), bench=True),
+              tags=("registry", "pipeline")),
     QuerySpec("c1_compatibility_matrix", c1_compatibility_matrix, C1_ORACLE,
               tags=("registry", "compat", "udf")),
     QuerySpec("f13_field_extraction", f13_field_extraction, F13_ORACLE,

@@ -1935,23 +1935,21 @@ SPECS: list[QuerySpec] = [
     QuerySpec("q9_product_profit", q9_product_profit, Q9_ORACLE,
               tags=("relational", "join", "agg")),
     QuerySpec("q1_pricing_summary", q1_pricing_summary, Q1_ORACLE,
-              doc="scan+agg flagship", tags=("agg", "bench"), bench=True),
+              doc="scan+agg flagship", tags=("agg",)),
     QuerySpec("q3_shipping_priority", q3_shipping_priority, Q3_ORACLE,
-              doc="join+agg+topk", tags=("join", "bench"), bench=True),
+              doc="join+agg+topk", tags=("join",)),
     QuerySpec("q5_local_supplier_volume", q5_local_supplier_volume, Q5_ORACLE,
-              doc="star join", tags=("join", "bench"), bench=True),
+              doc="star join", tags=("join",)),
     QuerySpec("q7_nation_volume", q7_nation_volume, Q7_ORACLE,
-              doc="two-dimension volume join", tags=("join", "bench"),
-              bench=True),
+              doc="two-dimension volume join", tags=("join",)),
     QuerySpec("q10_returned_items", q10_returned_items, Q10_ORACLE,
-              doc="returned-items topk", tags=("join", "bench"), bench=True),
+              doc="returned-items topk", tags=("join",)),
     QuerySpec("q14_promo_revenue_share", q14_promo_revenue_share, Q14_ORACLE,
-              doc="promo share ratio", tags=("join", "bench"), bench=True),
+              doc="promo share ratio", tags=("join",)),
     QuerySpec("q6_forecast_revenue", q6_forecast_revenue, Q6_ORACLE,
-              doc="pushdown filter agg", tags=("agg", "bench"), bench=True),
+              doc="pushdown filter agg", tags=("agg",)),
     QuerySpec("q18_large_orders", q18_large_orders, Q18_ORACLE,
-              doc="having semi-join topk", tags=("join", "bench"),
-              bench=True),
+              doc="having semi-join topk", tags=("join",)),
     QuerySpec("q4_order_priority", q4_order_priority, Q4_ORACLE,
               doc="EXISTS semi-join", tags=("join",)),
     QuerySpec("q12_priority_linestatus", q12_priority_linestatus,
@@ -1977,12 +1975,11 @@ SPECS: list[QuerySpec] = [
               doc="nested semi-join", tags=("join",)),
     QuerySpec("asof1_config_at_event_time", asof1_config_at_event_time,
               ASOF1_ORACLE, doc="as-of point-in-time join",
-              tags=("join", "window"), bench=True),
+              tags=("join", "window")),
     QuerySpec("rj1_events_in_windows", rj1_events_in_windows, RJ1_ORACLE,
-              doc="bucketed range join", tags=("join",), bench=True),
+              doc="bucketed range join", tags=("join",)),
     QuerySpec("hr1_hypertable_rollup", hr1_hypertable_rollup, HR1_ORACLE,
-              doc="hierarchical continuous aggregate", tags=("agg",),
-              bench=True),
+              doc="hierarchical continuous aggregate", tags=("agg",)),
     QuerySpec("s1_prefix_listing", s1_prefix_listing, S1_ORACLE, tags=("scan",)),
     QuerySpec("s2_point_lookup", s2_point_lookup, S2_ORACLE, tags=("scan",)),
     QuerySpec("s3_subject_version_lookup", s3_subject_version_lookup,
@@ -2011,9 +2008,9 @@ SPECS: list[QuerySpec] = [
     QuerySpec("a8_quality_scores", a8_quality_scores, A8_ORACLE, tags=("agg",)),
     QuerySpec("a9_complexity", a9_complexity, A9_ORACLE, tags=("agg",)),
     QuerySpec("a10_event_metrics", a10_event_metrics, A10_ORACLE,
-              tags=("agg", "bench"), bench=True),
+              tags=("agg",)),
     QuerySpec("w1_latest_per_subject", w1_latest_per_subject, W1_ORACLE,
-              tags=("window", "bench"), bench=True),
+              tags=("window",)),
     QuerySpec("w3_content_addressed_ids", w3_content_addressed_ids, W3_ORACLE,
               tags=("window",)),
     QuerySpec("w5_prior_version_delta", w5_prior_version_delta, W5_ORACLE,
@@ -2024,7 +2021,7 @@ SPECS: list[QuerySpec] = [
     QuerySpec("e2_subject_compare", e2_subject_compare, E2_ORACLE,
               tags=("setop",)),
     QuerySpec("e3_similarity_selfjoin", e3_similarity_selfjoin, E3_ORACLE,
-              tags=("setop", "bench"), bench=True),
+              tags=("setop",)),
     QuerySpec("e5_union_segments", e5_union_segments, E5_ORACLE,
               tags=("setop",)),
     QuerySpec("f2_regex_search", f2_regex_search, F2_ORACLE, tags=("string",)),

@@ -400,10 +400,9 @@ SPECS: list[QuerySpec] = [
     QuerySpec("st2_filtered_cef_lines", st2_filtered_cef_lines, ST2_ORACLE,
               tags=("streaming",)),
     QuerySpec("st9_token_bucket", st9_token_bucket, ST9_ORACLE,
-              tags=("streaming", "stateful"), bench=True),
+              tags=("streaming", "stateful")),
     QuerySpec("aud3_request_classification", aud3_request_classification,
-              AUD3_ORACLE, tags=("streaming", "audit", "agg"),
-              bench=True),
+              AUD3_ORACLE, tags=("streaming", "audit", "agg")),
     QuerySpec("aud2_event_type_analytics", aud2_event_type_analytics,
               AUD2_ORACLE, tags=("streaming", "registry")),
     QuerySpec("st6_rate_limit_flags", st6_rate_limit_flags, ST6_ORACLE,

@@ -90,15 +90,13 @@ def register_all(spark: SparkSession, sf_dir: str) -> None:
     spark.udf.register("normalize_schema", normalize_schema_udf)
 
     # scalar helpers (cold path, tiny args — plain Python UDFs are fine)
-    import re
+    from axonops_schema_registry_spark.operators.text import (
+        glob_to_regex,
+        normalize_name_snake_str,
+    )
 
-    from axonops_schema_registry_spark.operators.text import glob_to_regex
-
-    def _normalize_field_name(name: str) -> str:
-        s = re.sub(r"([a-z0-9])([A-Z])", r"\1_\2", name or "")
-        return re.sub(r"[-\s]+", "_", s).lower()
-
-    spark.udf.register("normalize_field_name", _normalize_field_name,
+    spark.udf.register("normalize_field_name",
+                       lambda name: normalize_name_snake_str(name or ""),
                        "string")
     spark.udf.register("glob_regex", glob_to_regex, "string")
 

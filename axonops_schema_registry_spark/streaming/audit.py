@@ -411,7 +411,8 @@ def coded_case_sql(sql: str) -> tuple[str, list[str]]:
     partial-aggregation hash over four string keys are pure overhead —
     coding the labels keeps each whole-stage-codegen unit far below the
     JVM 64 KB method limit (the one-stage string form overflowed it and
-    fell back to interpreted evaluation, BENCH_r06's aud3 regression)
+    fell back to interpreted evaluation: the round-6 aud3 regression,
+    recorded at commit d15378d)
     and shuffles 4 ints per group instead of 4 strings.  The decode is
     an array-literal lookup AFTER aggregation, over group-cardinality
     rows.

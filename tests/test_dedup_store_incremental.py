@@ -8,7 +8,8 @@ ingest (which exercises the repaired fps/bucket/token views), and
 identical to the one-shot batch operator over the concatenated corpus
 (the store's documented ground truth).  Pinned deterministically and
 with seeded random corpora; the cost shape (∝ batch, not store) is
-measured separately in scripts/reflag_smoke.py → docs/SCALING.md.
+measured separately by the reflag smoke script at commit d15378d
+(results in docs/SCALING.md).
 """
 
 from __future__ import annotations

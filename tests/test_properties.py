@@ -636,8 +636,8 @@ def test_bigram_surprisal_micro_unit_margin():
     swept here too (same exemption for ln(1)).  Observed margins
     (2026-08-15, ppl2+zf1 populations): sf0.001 ≈ 3.0e-3,
     sf0.01 ≈ 2.7e-4, sf0.1 ≈ 9.5e-4 — documented in COVERAGE.md;
-    the sf1 sweep (scripts/r14_ulp_margin.py) pins the 10x replica
-    margin in docs/SCALING.md."""
+    the sf1 sweep (the ulp-margin script at commit d15378d) pins the
+    10x replica margin in docs/SCALING.md."""
     import math
 
     import duckdb

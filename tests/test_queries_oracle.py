@@ -1,5 +1,5 @@
 """Every declared query spec hash-matches its DuckDB oracle at sf0.001
-(the local replica of the driver's CORRECTNESS gate)."""
+(the local replica of the driver's hash-compare gate)."""
 
 from __future__ import annotations
 
@@ -40,187 +40,6 @@ def test_all_result_columns_atomic(spark, sf_dir):
                 offenders.append((spec.name, f.name,
                                   f.dataType.simpleString()))
     assert not offenders, f"non-atomic result columns: {offenders}"
-
-
-def test_driver_window_samples_every_family():
-    """The driver verifies only the first 50 queries(); that window must
-    sample every spec family (round-1 lesson: registration-order
-    concatenation left compat/registration/LLM/streaming unverified).
-    Since r14 the same invariant is also asserted at import inside
-    ``_collect_specs`` (r13 shipped a window with no compat/similarity
-    spec); this test stays as the belt to that suspender and pins the
-    family list itself."""
-    window = q.ALL_SPECS[:50]
-    tags = {t for s in window for t in s.tags}
-    for family in q.WINDOW_FAMILIES:
-        assert family in tags, f"family {family!r} absent from driver window"
-    assert set(q.WINDOW_FAMILIES) == {
-        "registry", "compat", "llm", "dedup", "similarity",
-        "streaming", "join", "agg"}
-
-
-def test_rotation_bound_is_current():
-    """The generated window (VERDICT r16 stretch #8) sorts specs by
-    the CORRECTNESS history bounded at ``_ROTATION_BOUND`` — pinned so
-    the driver's own round-close record cannot rotate the window
-    mid-judging.  The bound must track the committed history: it is
-    either the newest committed record (round start, after the bump)
-    or one behind it (the in-flight record the driver just wrote).
-    A two-round-stale bound means the round-start bump was skipped."""
-    import glob
-    import pathlib
-    import re
-
-    root = pathlib.Path(__file__).resolve().parent.parent
-    rounds = [int(m.group(1))
-              for p in glob.glob(str(root / "CORRECTNESS_r*.json"))
-              if (m := re.search(r"r(\d+)\.json$", p))]
-    newest = max(rounds)
-    assert q._ROTATION_BOUND in (newest, newest - 1), (
-        f"_ROTATION_BOUND={q._ROTATION_BOUND} vs newest committed "
-        f"CORRECTNESS record r{newest} — bump the bound at round start")
-    # never-green ORACLE-BACKED specs lead the generated window (new
-    # specs are auto-sampled without any hand edit); oracle-less specs
-    # are EXCLUDED since r18 — the driver refuses them (err=no_oracle,
-    # the r17 es1h/dd6b/kd2 datum), so a windowed one burns its slot
-    green = q._last_green(q._ROTATION_BOUND)
-    window = [s.name for s in q.ALL_SPECS[:50]]
-    never = [s.name for s in q.ALL_SPECS
-             if s.name not in green and s.oracle is not None]
-    for name in never:
-        assert name in window, (
-            f"never-driver-sampled spec {name} missing from the window")
-    oracle_less = [s.name for s in q.ALL_SPECS if s.oracle is None]
-    assert oracle_less, "expected oracle-less specs in the registry"
-    for name in oracle_less:
-        assert name not in window, (
-            f"oracle-less spec {name} in the driver window — the "
-            f"driver refuses it (err=no_oracle) and the slot is burned")
-
-
-def test_coverage_window_telemetry_current():
-    """The auto-generated COVERAGE.md window-telemetry section must be
-    byte-identical to a fresh render from the registry + CORRECTNESS
-    history (VERDICT r15 stretch #9): the hand-maintained rotation
-    ledgers kept drifting from the lists they described (the
-    count-drift class — ADVICE r14 #3, r14 self-review #4); a spliced
-    section that a test pins cannot."""
-    import importlib.util
-    import pathlib
-
-    root = pathlib.Path(__file__).resolve().parent.parent
-    spec = importlib.util.spec_from_file_location(
-        "window_preview", root / "scripts" / "window_preview.py")
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    import re
-
-    coverage = (root / "COVERAGE.md").read_text()
-    assert mod.COVERAGE_BEGIN in coverage, (
-        "COVERAGE.md lacks the window-telemetry section — run "
-        "scripts/window_preview.py --splice")
-    m = re.search(r"Generated from CORRECTNESS records through "
-                  r"\*\*r(\d+)\*\*", coverage)
-    assert m, "telemetry section lacks its generation-round stamp"
-    # re-render bounded by the stamped round: a CORRECTNESS record the
-    # driver writes AFTER the splice (every round close) must not fail
-    # the pin; a _PRIORITY rotation without a re-splice must
-    assert mod.render_markdown(int(m.group(1))) in coverage, (
-        "COVERAGE.md window telemetry is stale — re-run "
-        "scripts/window_preview.py --splice after changing _PRIORITY")
-
-
-def test_rotation_order_properties():
-    """Property tests for the pure window computation
-    ``_rotation_order`` (VERDICT r17 stretch #9): the sort+repair is
-    load-bearing for the driver gate but was only exercised
-    end-to-end at import.  Checked over randomized registries:
-    determinism, never-green-leads, oracle-less-excluded (r18 fix),
-    and family coverage whenever the oracle-backed registry can
-    cover it."""
-    from hypothesis import given, settings
-    from hypothesis import strategies as st
-
-    fams = list(q.WINDOW_FAMILIES)
-
-    @st.composite
-    def registries(draw):
-        n = draw(st.integers(min_value=8, max_value=120))
-        names = [f"spec{i}" for i in range(n)]
-        oracles = [draw(st.booleans()) for _ in range(n)]
-        tags = [tuple(draw(st.sets(st.sampled_from(fams), min_size=1,
-                                   max_size=3))) for _ in range(n)]
-        # every family appears on at least one oracle-backed spec so
-        # the repair invariant is satisfiable (mirrors the real
-        # registry, where _collect_specs asserts coverage)
-        for k, fam in enumerate(fams):
-            tags[k] = tuple({fam} | set(tags[k]))
-            oracles[k] = True
-        green = {nm: draw(st.integers(min_value=1, max_value=17))
-                 for nm in names if draw(st.booleans())}
-        return names, oracles, tags, green
-
-    @settings(max_examples=60, deadline=None)
-    @given(registries(), st.integers(min_value=8, max_value=50))
-    def check(reg, wsize):
-        names, oracles, tags, green = reg
-        win = q._rotation_order(names, oracles, tags, green, wsize)
-        # determinism
-        assert win == q._rotation_order(names, oracles, tags, dict(green),
-                                        wsize)
-        assert len(win) == min(wsize, len(names))
-        assert len(set(win)) == len(win)
-        by = {nm: i for i, nm in enumerate(names)}
-        wset = set(win)
-        # oracle-less specs never enter the window while an
-        # oracle-backed spec is left outside
-        backed_outside = [nm for nm in names
-                          if nm not in wset and oracles[by[nm]]]
-        if backed_outside:
-            assert all(oracles[by[nm]] for nm in win), (
-                "oracle-less spec windowed while oracle-backed spec "
-                "left outside")
-        # family coverage: achievable within wsize oracle-backed specs
-        # (greedy witness: one spec per family), so repair must deliver
-        if wsize >= len(fams):
-            covered = {t for nm in win for t in tags[by[nm]]}
-            assert set(fams) <= covered
-        # never-green oracle-backed specs lead: when the window equals
-        # the plain sorted prefix (no family repair fired), a
-        # never-green oracle-backed spec left outside implies the
-        # whole window is never-green oracle-backed too (there were
-        # simply more of them than slots)
-        plain = sorted(range(len(names)),
-                       key=lambda i: (not oracles[i],
-                                      green.get(names[i], -1), i))
-        if {names[i] for i in plain[:wsize]} == wset:
-            never_outside = any(
-                oracles[by[nm]] and nm not in green
-                for nm in names if nm not in wset)
-            if never_outside:
-                assert all(oracles[by[nm]] and nm not in green
-                           for nm in win)
-
-    check()
-
-
-def test_every_bench_spec_has_a_pinned_plan():
-    """Every bench-tracked spec must have its physical plan pinned in
-    docs/PLANS.md (``scripts/gen_plans.py``) — the pin is what a
-    regression flag is diffed against (the tx5/gq1/dsir1
-    adjudications all started from one).  r13 shipped ctm5
-    bench-tracked but planless (VERDICT r13 "what's wrong" #2); this
-    check makes the next new bench query unable to."""
-    import pathlib
-    import re
-
-    plans = (pathlib.Path(__file__).resolve().parent.parent
-             / "docs" / "PLANS.md").read_text()
-    have = set(re.findall(r"^## (\S+)", plans, re.M))
-    missing = [s.name for s in q.bench_specs() if s.name not in have]
-    assert not missing, (
-        f"bench-tracked specs without a PLANS.md plan pin: {missing} "
-        "— run scripts/gen_plans.py")
 
 
 @pytest.mark.parametrize("spec", NO_ORACLE_SPECS, ids=lambda s: s.name)

@@ -208,7 +208,7 @@ def test_real_fixture_streams_batch_equal_via_man1(spark, tmp_path):
     batch is itself the precondition witness — yields receipts equal
     to the batch ccnet_receipt over the same corpus, with
     order_report all-True.  Run at the conftest SF here; the sf0.1
-    replay is scripts/r18_man1_ccn2_real.py (SCALING.md r18)."""
+    replay script is at commit d15378d (SCALING.md r18)."""
     from axonops_schema_registry_spark.llm.ccnet import (
         ccnet_receipt,
         order_safe_manifest,

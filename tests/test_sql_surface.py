@@ -34,6 +34,31 @@ def test_fields_view_and_search(spark):
         [("order-events-value", "customerId")]
 
 
+@pytest.mark.parametrize("name", [
+    "customerId", "CustomerId", "customer-id", "customer id",
+    "Customer  -Id", "field1Name", "v2Count", "HTTPServer", ""])
+def test_field_name_normalizers_agree(spark, name):
+    """The driver-side normaliser, the Column one and the SQL function
+    give one answer for every naming style."""
+    from pyspark.sql import functions as F
+
+    from axonops_schema_registry_spark.operators.text import (
+        normalize_name_snake,
+        normalize_name_snake_str,
+    )
+
+    row = (spark.createDataFrame([(name,)], "name string")
+           .select(normalize_name_snake(F.col("name")).alias("col"),
+                   F.expr("normalize_field_name(name)").alias("sql"))
+           .first())
+    assert normalize_name_snake_str(name) == row.col == row.sql
+
+
+def test_normalize_field_name_sql_null(spark):
+    assert spark.sql(
+        "SELECT normalize_field_name(NULL) AS n").first().n == ""
+
+
 def test_check_compat_sql(spark):
     row = spark.sql("""
         SELECT check_compat(
