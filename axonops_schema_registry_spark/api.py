@@ -165,7 +165,9 @@ class RegistryAnalytics:
     def register(self, incoming: DataFrame, mode: str = "BACKWARD",
                  modes: DataFrame | None = None,
                  levels: DataFrame | None = None) -> DataFrame:
-        """POST /subjects/{s}/versions as a batch job (§2.10 pipeline);
+        """POST /subjects/{s}/versions for a batch: one cogroup per
+        subject over the batch and that subject's stored history only
+        (:func:`registry.registration.register_batch`); caches nothing.
         ``modes`` enables write-mode gating (PUT /mode semantics) and
         ``levels`` per-subject configured compatibility (PUT /config)."""
         return register_batch(

@@ -1,54 +1,52 @@
-"""The registration pipeline (SURVEY.md §2.10) as one declarative Spark job.
+"""The registration pipeline (SURVEY.md §2.10) as one cogroup per subject.
 
 Reference write path (/root/reference/internal/registry/registry.go:63-220 +
 postgres/store.go:540-680): parse → canonicalize → fingerprint → dedup →
-compatibility gate → version allocation → append.  The reference needs DB
-transactions and optimistic retries for the version/ID race; in the batch
-model the race disappears — versions are assigned with a deterministic
-window over the batch order.
+compatibility gate → version allocation → append.  The reference takes a
+per-subject lock and runs that pipeline serially; the batch model keeps
+the per-subject serial order and drops the lock — subjects are
+independent, so they run in parallel, one group each.
 
-Pipeline stages (all lazy, one job):
-1. fingerprint incoming via the canonical-form pandas UDF (F10-F12);
-2. duplicate detection vs the existing corpus: left join against existing
-   live (subject, fingerprint) (J7);
-3. compatibility gate: EXACT sequential per-subject semantics via a
-   cogrouped ``applyInPandas`` — each candidate (in ``seq`` order) is
-   checked against the subject's history PLUS the same-batch candidates
-   accepted before it, exactly like the reference's serialized write path
-   (registry.go:63-220 takes a per-subject lock).  A candidate identical
-   to an earlier *accepted* candidate is a duplicate; identical to an
-   earlier *rejected* one is re-checked (and rejected as incompatible,
-   not duplicate) — both match sequential-server behavior.
-4. version assignment: ``prior_max + row_number()`` over accepted rows
-   (A2 without the transaction).
+Plan (lazy, one cogroup):
+1. write modes and configured levels resolve onto the incoming rows with
+   the broadcast joins of :mod:`registry.modes` — the block status and
+   the level ride along as columns;
+2. the existing corpus is cut to the batch's (ctx, subject) keys with a
+   broadcast ``left_semi`` join, so Python sees only the histories of the
+   subjects the batch writes to, never the rest of the corpus;
+3. ``groupBy(keys).cogroup(...).applyInPandas`` runs the whole write path
+   per subject, candidates in ``seq`` order (:func:`_register_subject`):
+   block → fingerprint → dedup vs the live history → compatibility gate →
+   version allocation.  A candidate identical to an earlier *accepted*
+   candidate is a duplicate; identical to an earlier *rejected* one is
+   re-checked (and rejected as incompatible, not duplicate) — both match
+   sequential-server behavior.
 
-Scale: every join/window keys on ``subject`` — co-partitioned end to end,
-a single shuffle lineage; history joins broadcast when small.  The
-sequential gate parallelizes across subjects (the reference serializes
-per subject too); per-group state is one subject's version history, which
-is bounded.  ``mode="NONE"`` short-circuits to a fully declarative plan
-with no Python stage.
+Fingerprints are computed in-process for the batch's subjects only (a few
+rows per subject), so no corpus-wide fingerprint pass and no cache is
+needed.  Level NONE is the same path with the compatibility check
+answering yes.  Per-group state is one subject's version history, which
+is bounded.
 """
 
 from __future__ import annotations
 
+import hashlib
+from collections import defaultdict
+
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from axonops_schema_registry_spark.registry.modes import (
+    with_resolved_level,
+    with_resolved_mode,
+    write_block_status,
+)
 from axonops_schema_registry_spark.registry.spark_udfs import (
-    fingerprint_udf,
+    canonical_fingerprint,
     ship_package,
 )
-
-def _gate_schema(ctx_col: str | None) -> str:
-    """Verdict schema — MUST carry the context column when one is in play:
-    contexts can reuse (subject, seq) pairs (seq restarts per tenant), so a
-    verdict keyed on (subject, seq) alone would cross-match across contexts
-    in the downstream joins."""
-    ctx = f"{ctx_col} string, " if ctx_col else ""
-    return f"{ctx}subject string, seq long, status string, n_issues int"
-
 
 def _reserved_set(metadata_json) -> set[str]:
     """'confluent:reserved' comma-list from a metadata JSON text
@@ -76,81 +74,116 @@ def _top_level_fields(schema_text: str, schema_type: str) -> set[str]:
             if "." not in (f["path"] or "")}
 
 
-def _sequential_gate(mode: str, ctx_col: str | None = None,
-                     validate_fields: bool = False):
-    """Per-subject sequential compat gate (cogrouped candidates × history).
+def _fingerprint(text, schema_type, native: bool):
+    """Dedup identity: SHA-256 of the raw text for opaque content, else
+    the strict canonical fingerprint (dedup must distinguish defaults)."""
+    if text is None:
+        return None
+    if native:
+        return hashlib.sha256(text.encode()).hexdigest()
+    return canonical_fingerprint(text, schema_type, strict=True)
 
-    Candidates arrive pre-filtered of duplicates vs the existing corpus;
-    history is the subject's live rows.  Accepted candidates join the
-    in-memory history/fingerprint set so later candidates see them —
-    the intra-batch pass the purely join-based gate lacked.
 
-    When candidates carry a ``__level`` column (per-subject configured
-    compatibility, resolved subject → global → ``mode`` default like the
-    reference's GetConfigFull chain), it overrides ``mode`` for that
-    subject's group.
+def _group_key(value):
+    """Compatibility-group value as a dict key (NULL is one group)."""
+    return None if pd.isna(value) else value
 
-    With ``validate_fields`` the reserved-field rules run after the
-    compat check on each candidate's RAW ``__metadata`` against the
-    latest stored metadata (registry.go:175-180, 1483-1512): a reserved
-    name colliding with a top-level schema field, or a previously
-    reserved name dropped from the request metadata, rejects the row
-    with status ``reserved_conflict`` (the reference's 409).  Stored
-    metadata inherits from the previous version when a request carries
-    none — AFTER validation, like maybeSetMetadataRuleSet."""
 
-    def gate(cand: pd.DataFrame, hist: pd.DataFrame) -> pd.DataFrame:
+def _register_subject(ctx_col: str | None, native_fingerprint: bool,
+                      grouped: bool, validate_fields: bool):
+    """The serial write path for one (ctx, subject): candidates × history.
+
+    ``cand`` holds the subject's batch rows with ``__block`` (the write-mode
+    block status, NULL when writes are allowed) and ``__level`` (the
+    resolved compatibility level); ``hist`` holds the subject's stored
+    rows, soft-deleted ones included.  Per candidate, in ``seq`` order:
+
+    1. a blocked row short-circuits with its block status;
+    2. fingerprint (:func:`_fingerprint`);
+    3. a fingerprint already live in the (group's) history, or accepted
+       earlier in this batch, is a ``duplicate``;
+    4. the compatibility check runs against the (group's) live history
+       plus this batch's earlier acceptances.  With ``validate_fields``
+       the reserved-field rules run next, on the candidate's RAW
+       ``__metadata`` against the latest stored metadata
+       (registry.go:175-180, 1483-1512): a reserved name colliding with a
+       top-level schema field, or a previously reserved name dropped from
+       the request, rejects the row as ``reserved_conflict`` (the
+       reference's 409).  Stored metadata inherits from the previous
+       version when a request carries none — AFTER validation, like
+       maybeSetMetadataRuleSet;
+    5. an accepted row gets ``max(version over ALL rows, deleted
+       included) + running count`` — version numbers are never reused
+       (store.go:553-557), and allocation stays per subject across
+       compatibility groups.
+
+    With ``grouped`` the dedup and the gate see only the history of the
+    candidate's own ``__group`` (registry.go:1399-1431)."""
+
+    def column(df: pd.DataFrame, name: str, present: bool = True) -> list:
+        return df[name].tolist() if present else [None] * len(df)
+
+    def register(cand: pd.DataFrame, hist: pd.DataFrame) -> pd.DataFrame:
         from axonops_schema_registry_spark.registry.compat import (
             check_compatibility,
         )
 
-        cand = cand.sort_values("seq")
-        hist = hist.sort_values("version")
-        level = mode
-        if "__level" in cand.columns and len(cand):
-            level = cand["__level"].iloc[0] or mode
-        texts = hist["old_text"].tolist()
-        latest_meta = None
-        if validate_fields and len(hist) and \
-                "__metadata" in hist.columns:
-            latest_meta = hist["__metadata"].iloc[-1]
-        accepted_fps: set[str] = set()
-        # itertuples mangles leading-underscore names — pull the
-        # metadata column out positionally instead
-        cand_meta = (cand["__metadata"].tolist()
-                     if validate_fields and "__metadata" in cand.columns
-                     else [None] * len(cand))
-        out = []
-        for i, row in enumerate(cand.itertuples(index=False)):
-            key = ((getattr(row, ctx_col), row.subject, row.seq)
-                   if ctx_col else (row.subject, row.seq))
-            if row.fingerprint in accepted_fps:
-                out.append(key + ("duplicate", 0))
-                continue
-            ok, msgs = check_compatibility(
-                row.schema_text, texts, level, row.schema_type)
-            if not ok:
-                out.append(key + ("incompatible", len(msgs)))
-                continue
-            if validate_fields:
-                raw_meta = cand_meta[i]
-                reserved = _reserved_set(raw_meta)
-                issues = len(_reserved_set(latest_meta) - reserved)
-                issues += len(reserved & _top_level_fields(
-                    row.schema_text, row.schema_type))
-                if issues:
-                    out.append(key + ("reserved_conflict", issues))
-                    continue
-                latest_meta = raw_meta if raw_meta is not None \
-                    else latest_meta
-            texts.append(row.schema_text)
-            accepted_fps.add(row.fingerprint)
-            out.append(key + ("registered", 0))
-        cols = (([ctx_col] if ctx_col else [])
-                + ["subject", "seq", "status", "n_issues"])
-        return pd.DataFrame(out, columns=cols)
+        # per gate group: [live texts oldest first, their fingerprints plus
+        # this batch's accepted ones, latest stored metadata]
+        state: dict = defaultdict(lambda: [[], set(), None])
+        version = 0
+        if len(hist):  # an empty cogroup side arrives without columns
+            hist = hist.sort_values("version", kind="stable")
+            version = int(hist["version"].max())
+            live = hist[hist["deleted"].eq(False)]
+            for text, stype, group, meta in zip(
+                    column(live, "schema_text"), column(live, "schema_type"),
+                    column(live, "__group", grouped),
+                    column(live, "__metadata", validate_fields)):
+                g = state[_group_key(group)]
+                g[0].append(text)
+                g[1].add(_fingerprint(text, stype, native_fingerprint))
+                g[2] = meta
 
-    return gate
+        cand = cand.sort_values("seq", kind="stable")
+        status, assigned, n_issues = [], [], []
+        for block, level, text, stype, group, meta in zip(
+                column(cand, "__block"), column(cand, "__level"),
+                column(cand, "schema_text"), column(cand, "schema_type"),
+                column(cand, "__group", grouped),
+                column(cand, "__metadata", validate_fields)):
+            verdict, issues = block or "registered", 0
+            if block is None:
+                g = state[_group_key(group)]
+                fp = _fingerprint(text, stype, native_fingerprint)
+                if fp in g[1]:
+                    verdict = "duplicate"
+                else:
+                    ok, msgs = check_compatibility(text, g[0], level, stype)
+                    if not ok:
+                        verdict, issues = "incompatible", len(msgs)
+                    elif validate_fields:
+                        reserved = _reserved_set(meta)
+                        issues = len(_reserved_set(g[2]) - reserved)
+                        issues += len(reserved & _top_level_fields(text,
+                                                                   stype))
+                        if issues:
+                            verdict = "reserved_conflict"
+                        elif meta is not None:
+                            g[2] = meta
+                if verdict == "registered":
+                    g[0].append(text)
+                    g[1].add(fp)
+                    version += 1
+            status.append(verdict)
+            assigned.append(version if verdict == "registered" else None)
+            n_issues.append(issues)
+        out = cand[([ctx_col] if ctx_col else []) + ["subject", "seq"]]
+        return out.assign(status=status,
+                          assigned_version=pd.array(assigned, dtype="Int32"),
+                          n_issues=n_issues)
+
+    return register
 
 
 def register_batch(spark: SparkSession, existing: DataFrame,
@@ -182,8 +215,11 @@ def register_batch(spark: SparkSession, existing: DataFrame,
     j6_config_fallback is the read-side twin).  With ``ctx_col`` set and
     a (registry_ctx, subject, level) table, the FULL 4-tier chain
     applies: per-(ctx, subject) → ctx global → __GLOBAL context global
-    → ``mode``.  Broadcast joins only; the sequential gate reads the
-    resolved level per group.
+    → ``mode``.  Broadcast joins only; the gate reads the resolved level
+    per row.
+
+    ``native_fingerprint``: dedup on SHA-256 of the raw text instead of
+    the strict canonical form — for opaque (RAW) content.
 
     ``ctx_col``: multi-tenant context column present in BOTH ``existing``
     and ``incoming`` (the reference scopes every registry operation by
@@ -198,6 +234,10 @@ def register_batch(spark: SparkSession, existing: DataFrame,
     other groups is invisible, exactly the reference's filter — while
     version allocation stays per subject (store.go:553-557).
 
+    ``metadata_col`` + ``validate_fields``: the reserved-field rules on
+    the request metadata (see :func:`_register_subject`); the column must
+    be present in BOTH frames.
+
     Soft-delete lifecycle (postgres/store.go:617-625,
     delete_and_reregister.feature): DEDUP and the COMPAT HISTORY consider
     only live rows — a schema whose fingerprint exists solely on deleted
@@ -205,155 +245,48 @@ def register_batch(spark: SparkSession, existing: DataFrame,
     rows including deleted ones (store.go:553-557), so version numbers are
     never reused.
 
-    Returns (subject, seq, status, assigned_version, n_issues) with status
-    ∈ {registered, duplicate, incompatible}.
+    Returns ([ctx,] subject, seq, status, assigned_version, n_issues) with
+    status ∈ {registered, duplicate, incompatible, reserved_conflict,
+    readonly_mode, import_mode}; ``seq`` keeps the incoming column's type.
     """
     ship_package(spark)
     mode = (mode or "BACKWARD").upper()
-    base_keys = ([ctx_col] if ctx_col else []) + ["subject"]
+    keys = ([ctx_col] if ctx_col else []) + ["subject"]
+    vf = validate_fields and metadata_col is not None
+    extra = (([F.col(group_col).alias("__group")] if group_col else [])
+             + ([F.col(metadata_col).alias("__metadata")] if vf else []))
 
-    # -- stage 0: write-mode gate (before any schema work) -----------------
-    blocked = None
+    # duplicates are harmless on the build side of a semi join
+    batch_keys = incoming.select(*keys)
     if modes is not None:
-        from axonops_schema_registry_spark.registry.modes import (
-            with_resolved_mode,
-            write_block_status,
-        )
-
-        flagged = with_resolved_mode(incoming, modes, ctx_col=ctx_col) \
+        incoming = with_resolved_mode(incoming, modes, ctx_col=ctx_col) \
             .withColumn("__block", write_block_status())
-        blocked = flagged.filter(F.col("__block").isNotNull()).select(
-            *(([ctx_col] if ctx_col else []) + ["subject"]), "seq",
-            F.col("__block").alias("status"),
-            F.lit(None).cast("int").alias("assigned_version"),
-            F.lit(0).alias("n_issues"))
-        incoming = (flagged.filter(F.col("__block").isNull())
-                    .drop("__block", "resolved_mode"))
-
-    if native_fingerprint:
-        # opaque (non-schema) content: sha2 over raw text stays entirely
-        # JVM-side — no Python workers in the fingerprint stage.  Use for
-        # RAW corpora; parsed schema types need the canonical-form UDF.
-        def fp(text_col: str, _type_col: str):
-            return F.sha2(F.col(text_col), 256)
     else:
-        fp = fingerprint_udf(strict=True)  # dedup must distinguish defaults
+        incoming = incoming.withColumn("__block", F.lit(None).cast("string"))
+    if levels is not None:
+        incoming = with_resolved_level(incoming, levels, ctx_col=ctx_col,
+                                       default=mode) \
+            .withColumnRenamed("resolved_level", "__level")
+    else:
+        incoming = incoming.withColumn("__level", F.lit(mode))
+    cand = incoming.select(*keys, "seq", "schema_type", "schema_text",
+                           "__block", "__level", *extra)
 
     if "deleted" not in existing.columns:
         existing = existing.withColumn("deleted", F.lit(False))
-    # cached: existing feeds dedup, the compat history AND prior-max —
-    # without the cache the fingerprint UDF would run 3x over the corpus.
-    # Lifetime: registered for facade-level release
-    # (operators.core.release_plan_caches); at 100 TB prefer writing
-    # fingerprints as a corpus column (they're content-stable) so this
-    # stage caches nothing.
-    from axonops_schema_registry_spark.operators.core import plan_cache
+    hist = (existing.join(F.broadcast(batch_keys), keys, "left_semi")
+            .select(*keys, "version", "schema_type", "schema_text",
+                    "deleted", *extra))
 
-    existing_fp = plan_cache(existing.withColumn(
-        "fingerprint", fp("schema_text", "schema_type")))
-    existing_live = existing_fp.filter(~F.col("deleted"))
-    inc = plan_cache(incoming.withColumn(
-        "fingerprint", fp("schema_text", "schema_type")))
-
-    # -- stage 2: dedup vs the existing corpus (live rows only) -----------
-    # with a compatibility group, idempotency scopes to the group too
-    # (reference dedup requires metadata equality, registry.go:121-131)
-    dup_keys = base_keys + ["fingerprint"] + ([group_col] if group_col else [])
-    dup_vs_existing = existing_live.select(*dup_keys).distinct() \
-        .withColumn("dup_existing", F.lit(True))
-    inc = (inc
-           .join(dup_vs_existing, dup_keys, "left")
-           .withColumn("dup_existing",
-                       F.coalesce(F.col("dup_existing"), F.lit(False))))
-    candidates = inc.filter(~F.col("dup_existing"))
-
-    # -- stage 3: compatibility gate --------------------------------------
-    gate_keys = base_keys + ([group_col] if group_col else [])
-    vf = validate_fields and metadata_col is not None
-    if mode == "NONE" and levels is None and not vf:
-        # no gate → every non-duplicate registers; sequential semantics
-        # degenerate to first-occurrence-wins, expressible declaratively
-        # with zero Python stages
-        w_batch = Window.partitionBy(*dup_keys).orderBy("seq")
-        flagged = candidates.withColumn(
-            "__dup_in_batch", F.row_number().over(w_batch) > 1)
-        verdict = flagged.select(
-            *base_keys, "seq",
-            F.when(F.col("__dup_in_batch"), "duplicate")
-             .otherwise("registered").alias("status"),
-            F.lit(0).alias("n_issues"))
-    else:
-        gate_in = candidates.select(
-            *base_keys, "seq", "schema_type", "schema_text",
-            "fingerprint",
-            *([group_col] if group_col else []),
-            *([F.col(metadata_col).alias("__metadata")] if vf else []))
-        if levels is not None:
-            from axonops_schema_registry_spark.registry.modes import (
-                with_resolved_level,
-            )
-
-            gate_in = (with_resolved_level(gate_in, levels,
-                                           ctx_col=ctx_col, default=mode)
-                       .withColumnRenamed("resolved_level", "__level"))
-        history = existing_live.select(
-            *base_keys, "version", F.col("schema_text").alias("old_text"),
-            *([group_col] if group_col else []),
-            *([F.col(metadata_col).alias("__metadata")] if vf else []))
-        verdict = (gate_in
-                   .groupBy(*gate_keys)
-                   .cogroup(history.groupBy(*gate_keys))
-                   .applyInPandas(_sequential_gate(mode, ctx_col=ctx_col,
-                                                   validate_fields=vf),
-                                  _gate_schema(ctx_col)))
-
-    # -- stage 4: version assignment (max over ALL rows incl. deleted) ----
-    prior_max = existing_fp.groupBy(*base_keys).agg(
-        F.max("version").alias("prior_max"))
-    verdict_keys = base_keys + ["seq"]
-    accepted = (candidates.join(
-        verdict.filter(F.col("status") == "registered")
-               .select(*verdict_keys), verdict_keys))
-    w_assign = Window.partitionBy(*base_keys).orderBy("seq")
-    # no broadcast hint: prior_max is one row per CORPUS subject (can be
-    # millions at fleet scale) while the batch side is small — AQE
-    # broadcasts whichever side actually is small
-    assigned = (accepted
-                .join(prior_max, base_keys, "left")
-                .withColumn("assigned_version",
-                            (F.coalesce(F.col("prior_max"), F.lit(0))
-                             + F.row_number().over(w_assign)).cast("int")))
-
-    # -- assemble statuses -------------------------------------------------
-    dupes_existing = inc.filter(F.col("dup_existing")).select(
-        *base_keys, "seq", F.lit("duplicate").alias("status"),
-        F.lit(None).cast("int").alias("assigned_version"),
-        F.lit(0).alias("n_issues"))
-    dupes_in_batch = (candidates
-                      .join(verdict.filter(F.col("status") == "duplicate")
-                                   .select(*verdict_keys),
-                            verdict_keys)
-                      .select(*base_keys, "seq",
-                              F.lit("duplicate").alias("status"),
-                              F.lit(None).cast("int")
-                              .alias("assigned_version"),
-                              F.lit(0).alias("n_issues")))
-    rejected = (candidates
-                .join(verdict.filter(F.col("status").isin(
-                          "incompatible", "reserved_conflict"))
-                             .select(*verdict_keys, "status", "n_issues"),
-                      verdict_keys)
-                .select(*base_keys, "seq", "status",
-                        F.lit(None).cast("int").alias("assigned_version"),
-                        "n_issues"))
-    registered = assigned.select(
-        *base_keys, "seq", F.lit("registered").alias("status"),
-        "assigned_version", F.lit(0).alias("n_issues"))
-    out = (registered.unionByName(rejected)
-           .unionByName(dupes_in_batch).unionByName(dupes_existing))
-    if blocked is not None:
-        out = out.unionByName(blocked)
-    return out
+    ctx_ddl = f"{ctx_col} string, " if ctx_col else ""
+    seq_ddl = incoming.schema["seq"].dataType.simpleString()
+    out_ddl = (f"{ctx_ddl}subject string, seq {seq_ddl}, status string, "
+               "assigned_version int, n_issues int")
+    return (cand.groupBy(*keys)
+            .cogroup(hist.groupBy(*keys))
+            .applyInPandas(_register_subject(
+                ctx_col, native_fingerprint, group_col is not None, vf),
+                out_ddl))
 
 
 def import_batch(spark: SparkSession, existing: DataFrame,
@@ -373,10 +306,6 @@ def import_batch(spark: SparkSession, existing: DataFrame,
       IMPORT mode, handlers.go:1656-1664).
     """
     if modes is not None:
-        from axonops_schema_registry_spark.registry.modes import (
-            with_resolved_mode,
-        )
-
         incoming = with_resolved_mode(incoming, modes)
     # No broadcast hint: ``existing`` is the full corpus (the BIG side at
     # scale) — the shuffle keys on schema_id and AQE picks broadcast when

@@ -89,15 +89,6 @@ def canonical_fingerprint(schema_text: str, schema_type: str = "AVRO",
     return hashlib.sha256(schema_text.encode()).hexdigest()
 
 
-def fingerprint_udf(strict: bool = False):
-    @F.pandas_udf("string")
-    def _fp(text: pd.Series, stype: pd.Series) -> pd.Series:
-        return pd.Series([canonical_fingerprint(t, s, strict=strict)
-                          for t, s in zip(text, stype)])
-
-    return _fp
-
-
 def extract_fields_udf():
     @F.pandas_udf(FIELD_STRUCT_DDL)
     def _fields(text: pd.Series, stype: pd.Series) -> pd.Series:

@@ -74,24 +74,30 @@ class StreamingRegistry:
     def __call__(self, batch_df: DataFrame, epoch_id: int) -> None:
         """Register one micro-batch; append accepted rows to the corpus."""
         batch_df = batch_df.cache()
-        if not batch_df.take(1):
-            return
-        corpus = self.corpus()
-        result = register_batch(
-            self.spark, corpus, batch_df, mode=self.mode,
-            native_fingerprint=self.native_fingerprint).cache()
-        stamped = result.withColumn("epoch", F.lit(epoch_id))
-        if self.status_path is not None:
-            stamped.write.mode("append").parquet(self.status_path)
-        if self.track_statuses:
-            self.statuses.extend(stamped.collect())
-        accepted = (result.filter(F.col("status") == "registered")
-                    .join(batch_df, ["subject", "seq"])
-                    .select("subject",
-                            F.col("assigned_version").alias("version"),
-                            "schema_type", "schema_text",
-                            F.lit(False).alias("deleted")))
-        accepted.write.mode("append").parquet(self.corpus_path)
+        result = None
+        try:
+            if not batch_df.take(1):
+                return
+            result = register_batch(
+                self.spark, self.corpus(), batch_df, mode=self.mode,
+                native_fingerprint=self.native_fingerprint).cache()
+            stamped = result.withColumn("epoch", F.lit(epoch_id))
+            if self.status_path is not None:
+                stamped.write.mode("append").parquet(self.status_path)
+            if self.track_statuses:
+                self.statuses.extend(stamped.collect())
+            accepted = (result.filter(F.col("status") == "registered")
+                        .join(batch_df, ["subject", "seq"])
+                        .select("subject",
+                                F.col("assigned_version").alias("version"),
+                                "schema_type", "schema_text",
+                                F.lit(False).alias("deleted")))
+            accepted.write.mode("append").parquet(self.corpus_path)
+        finally:
+            # a long-running stream must not pin two frames per batch
+            if result is not None:
+                result.unpersist()
+            batch_df.unpersist()
 
 
 def run_registration_stream(spark: SparkSession, requests_dir: str,

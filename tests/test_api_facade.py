@@ -71,6 +71,19 @@ def test_register_through_facade(spark, reg):
     assert out["registered"].assigned_version == 3
 
 
+def test_register_pins_nothing(spark, reg):
+    """A long-lived session calling register() must not grow the set of
+    persisted RDDs: register caches nothing."""
+    persistent = spark.sparkContext._jsc.getPersistentRDDs()
+    before = persistent.size()
+    incoming = spark.createDataFrame(
+        [("user-value", 1, "AVRO", AVRO_USER_V3),
+         ("user-value", 2, "AVRO", AVRO_USER_V2_BAD)],
+        "subject string, seq int, schema_type string, schema_text string")
+    reg.register(incoming).collect()
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == before
+
+
 def test_corpus_backed_facade(corpus_reg):
     assert corpus_reg.latest().count() > 0
     view = corpus_reg.versions_view().collect()

@@ -112,3 +112,36 @@ def test_streaming_registration_compat_gate(spark, tmp_path):
     assert registry.statuses[0].status == "incompatible"
     assert registry.corpus().filter(F.col("subject") == "user-value") \
         .count() == 2  # unchanged
+
+
+def test_streaming_registration_releases_batch_caches(spark, tmp_path):
+    """Each micro-batch caches its input and its result; both must be
+    released when the batch ends, the empty-batch early return included,
+    or a long-running stream pins two frames per trigger."""
+    corpus_path = str(tmp_path / "corpus4")
+    req_dir = str(tmp_path / "requests4")
+    ckpt = str(tmp_path / "ckpt4")
+    os.makedirs(req_dir)
+    before = spark.sparkContext._jsc.getPersistentRDDs().size()
+
+    registry = StreamingRegistry(spark, corpus_path,
+                                 mode="BACKWARD_TRANSITIVE",
+                                 track_statuses=True)
+    registry.bootstrap(fixture_schemas(spark))
+    _write_requests(os.path.join(req_dir, "b1.parquet"),
+                    [("user-value", 1, "AVRO", AVRO_USER_V3)])
+    _write_requests(os.path.join(req_dir, "b2.parquet"),
+                    [("user-value", 2, "AVRO", AVRO_USER_V2_BAD)])
+    # an empty request file: an empty micro-batch (the early return)
+    pq.write_table(pa.table({"subject": pa.array([], pa.string()),
+                             "seq": pa.array([], pa.int64()),
+                             "schema_type": pa.array([], pa.string()),
+                             "schema_text": pa.array([], pa.string())}),
+                   os.path.join(req_dir, "b3.parquet"))
+    q = run_registration_stream(spark, req_dir, registry, ckpt)
+    q.awaitTermination(180)
+
+    assert [r.status for r in sorted(registry.statuses,
+                                     key=lambda r: r.seq)] == \
+        ["registered", "incompatible"]
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == before
