@@ -5,7 +5,8 @@ schema registry (axonops/axonops-schema-registry, a Go OLTP-style metadata
 server — see SURVEY.md) as an idiomatic Spark library:
 
 - ``catalog``   — typed loaders for the driver's parquet tables.
-- ``session``   — a tuned SparkSession builder (AQE, Arrow, 32 shuffle parts).
+- ``session``   — a tuned SparkSession builder (AQE, Arrow, one shuffle
+                  partition per task slot).
 - ``queries``   — the operator inventory from SURVEY.md §2, each entry a
                   DataFrame builder + a DuckDB oracle SQL string.
 - ``registry``  — the registry domain library: Avro/JSON canonicalization,

@@ -21,6 +21,7 @@ granularity BEFORE the (cheap, dimension-sized) global ordering step.
 
 from __future__ import annotations
 
+import threading
 from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, Window
@@ -210,8 +211,10 @@ def as_of_join(left: DataFrame, right: DataFrame, key: str,
 
 
 #: Library-created .cache() frames awaiting release — see
-#: :func:`plan_cache` / :func:`release_plan_caches`.
+#: :func:`plan_cache` / :func:`release_plan_caches`.  Guarded by
+#: ``_PLAN_CACHES_LOCK``: queries on one session may run in threads.
 _PLAN_CACHES: list[DataFrame] = []
+_PLAN_CACHES_LOCK = threading.Lock()
 
 
 def plan_cache(df: DataFrame) -> DataFrame:
@@ -226,7 +229,9 @@ def plan_cache(df: DataFrame) -> DataFrame:
     before every timed run), and callers that must not cache at all
     keep their ``cache_tokens``-style gates.
     """
-    _PLAN_CACHES.append(df.cache())
+    df.cache()
+    with _PLAN_CACHES_LOCK:
+        _PLAN_CACHES.append(df)
     return df
 
 
@@ -234,9 +239,16 @@ def release_plan_caches() -> None:
     """Unpersist every frame :func:`plan_cache` has recorded — the
     facade-level "caller clears" contract: invoke after consuming a
     query's results in a shared, long-running session.  Blocking=False:
-    eviction proceeds asynchronously, new queries can start at once."""
-    while _PLAN_CACHES:
-        df = _PLAN_CACHES.pop()
+    eviction proceeds asynchronously, new queries can start at once.
+
+    Thread-safe: the recorded frames are taken under the lock, so two
+    concurrent releases each unpersist a disjoint share.  It is still
+    session-global: a release also frees caches that another in-flight
+    query recorded and may still be reading (it then recomputes)."""
+    with _PLAN_CACHES_LOCK:
+        frames = _PLAN_CACHES[:]
+        _PLAN_CACHES.clear()
+    for df in frames:
         try:
             df.unpersist()
         except Exception:

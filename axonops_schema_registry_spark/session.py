@@ -4,9 +4,14 @@ The settings here are the ones that matter at 100 TB, applied identically in
 local test mode:
 
 - AQE on (runtime re-planning, skew-join splitting, partition coalescing).
-- ``spark.sql.shuffle.partitions`` sized for the local harness; on a real
-  cluster this is overridden (or left to AQE's coalescing with a high
-  initial value).
+- ``spark.sql.shuffle.partitions`` equal to the session's task slots,
+  ``sparkContext.defaultParallelism``: ``cpus`` in local mode, the total
+  executor cores on a cluster.  AQE cannot coalesce a stateful streaming
+  operator, so this is the number of state stores (and state-store tasks
+  per micro-batch) every stream starts with: one per core.  Batch
+  queries start AQE's coalescing from the same count.  A stream resumed
+  from a checkpoint keeps the partition count it started with; Spark
+  restores it from the offset log, whatever this session says.
 - Arrow execution for the few pandas UDFs (compat checkers, canonicalizers).
 - UTC session timezone so timestamp semantics match the DuckDB oracle.
 """
@@ -23,10 +28,9 @@ def get_spark(app_name: str = "axonops-schema-registry-spark",
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or None
     master = f"local[{cpus}]" if cpus else "local[*]"
-    return (
+    spark = (
         SparkSession.builder.master(master)
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", "32")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -46,3 +50,8 @@ def get_spark(app_name: str = "axonops-schema-registry-spark",
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )
+    # One shuffle partition per task slot; the slots are only known once
+    # the context exists (local[*] and cluster masters).
+    spark.conf.set("spark.sql.shuffle.partitions",
+                   str(spark.sparkContext.defaultParallelism))
+    return spark

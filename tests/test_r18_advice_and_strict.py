@@ -297,7 +297,7 @@ def test_receipt_compaction_lifecycle(spark, tmp_path):
                   re.final_receipt(spark).collect()) == want
 
 
-@pytest.mark.slow  # driver-window opt-in (pytest.ini)
+# Not slow-marked: the default gate keeps this stream ≡ batch check.
 def test_strict_mode_ordered_feed_matches_batch(spark, tmp_path):
     """strict=True on an ordered feed is behavior-identical to the
     default: all epochs accepted, receipts batch-equal."""

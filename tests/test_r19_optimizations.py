@@ -203,3 +203,98 @@ def test_es2_hash_grams_twin_is_output_identical(spark, sf_dir):
                                          min_count=2,
                                          hash_grams=False).collect())
     assert hashed == raw and len(hashed) > 0
+
+
+def test_concurrent_plan_cache_release_is_safe(spark):
+    """Threads that cache and release frames on one session at once:
+    no release raises and no frame is left persisted."""
+    import threading
+    import time
+
+    from axonops_schema_registry_spark.operators.core import (
+        _PLAN_CACHES,
+        plan_cache,
+        release_plan_caches,
+    )
+
+    release_plan_caches()  # drain anything earlier tests left behind
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+    n_threads, per_thread = 4, 3
+    cached = threading.Barrier(n_threads)
+    errors: list[Exception] = []
+
+    def work(t: int) -> None:
+        try:
+            for k in range(per_thread):
+                df = plan_cache(spark.range(50 + 10 * t + k)
+                                .selectExpr("id * 2 AS v"))
+                assert df.count() == 50 + 10 * t + k
+            cached.wait(60)       # every thread releases at once
+            release_plan_caches()
+        except Exception as exc:  # surfaced by the assert below
+            errors.append(exc)
+
+    threads = [threading.Thread(target=work, args=(t,))
+               for t in range(n_threads)]
+    for th in threads:
+        th.start()
+    for th in threads:
+        th.join(120)
+    assert not any(th.is_alive() for th in threads)
+    assert errors == []
+    assert len(_PLAN_CACHES) == 0
+    for _ in range(50):       # unpersist is asynchronous
+        if set(jsc.getPersistentRDDs().keySet()) <= before:
+            break
+        time.sleep(0.1)
+    assert set(jsc.getPersistentRDDs().keySet()) <= before
+
+
+def test_plan_cache_registry_survives_racing_releases(monkeypatch):
+    """Many threads caching and releasing stand-in frames, with a tiny
+    thread switch interval: no release raises and every recorded frame
+    is released exactly once."""
+    import sys
+    import threading
+
+    from axonops_schema_registry_spark.operators import core
+
+    class Frame:
+        def __init__(self) -> None:
+            self.released = 0
+
+        def cache(self):
+            return self
+
+        def unpersist(self):
+            self.released += 1
+
+    monkeypatch.setattr(core, "_PLAN_CACHES", [])
+    frames = [Frame() for _ in range(4000)]
+    errors: list[Exception] = []
+
+    def cacher(share):
+        for f in share:
+            core.plan_cache(f)
+            if len(core._PLAN_CACHES) > 3:
+                try:
+                    core.release_plan_caches()
+                except Exception as exc:
+                    errors.append(exc)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=cacher, args=(frames[t::8],))
+                   for t in range(8)]
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(60)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(th.is_alive() for th in threads)
+    core.release_plan_caches()
+    assert errors == []
+    assert [f.released for f in frames] == [1] * len(frames)
