@@ -1,6 +1,7 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
-``entry(spark)`` runs the flagship star-join (q5 shape) at sf0.001;
+``entry(spark)`` runs the registry's latest-schema read at sf0.001
+(``r1_latest_live_schema``, GET /subjects/{s}/versions/latest);
 ``queries()`` / ``oracle_sql()`` expose the full operator registry from
 ``axonops_schema_registry_spark.queries`` (one entry per implemented
 operator from SURVEY.md §2, each with a DuckDB oracle where the semantics
@@ -21,8 +22,8 @@ from axonops_schema_registry_spark import queries as _q  # noqa: E402
 
 
 def entry(spark: SparkSession) -> DataFrame:
-    """Flagship query on /root/testdata/sf0.001; driver checks rows>0."""
-    return _q.SPEC_BY_NAME["q5_local_supplier_volume"].build(
+    """Latest live schema per subject at sf0.001; at least one row."""
+    return _q.SPEC_BY_NAME["r1_latest_live_schema"].build(
         spark, "/root/testdata/sf0.001")
 
 

@@ -34,9 +34,6 @@ TABLES = (
     "embeddings",
 )
 
-#: Dimension tables small enough to broadcast at any scale factor.
-BROADCAST_TABLES = frozenset({"region", "nation", "supplier", "part", "customer"})
-
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 

@@ -23,7 +23,7 @@ given identical operands.
 from __future__ import annotations
 
 from collections.abc import Callable
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -36,8 +36,6 @@ class QuerySpec:
     name: str
     build: Callable[[SparkSession, str], DataFrame]
     oracle: str | None
-    doc: str = ""
-    tags: tuple[str, ...] = field(default=())
 
 
 def dsum(col: Column | str, scale: int = 2, alias: str | None = None) -> Column:

@@ -5908,233 +5908,149 @@ CCN1_ORACLE = _ccn1_oracle()
 
 
 SPECS: list[QuerySpec] = [
-    QuerySpec("ng1_ngram_novelty", ng1_ngram_novelty, NG1_ORACLE,
-              tags=("llm", "text", "novelty", "agg")),
+    QuerySpec("ng1_ngram_novelty", ng1_ngram_novelty, NG1_ORACLE),
     QuerySpec("cur3_quality_dedup_split", cur3_quality_dedup_split,
-              CUR3_ORACLE,
-              tags=("llm", "curation", "composition", "dedup",
-                    "sampling")),
+              CUR3_ORACLE),
     QuerySpec("cap1_cluster_cap_sampling", cap1_cluster_cap_sampling,
-              CAP1_ORACLE,
-              tags=("llm", "dedup", "sampling", "window",
-                    "iterative")),
+              CAP1_ORACLE),
     QuerySpec("ppl2_bigram_perplexity", ppl2_bigram_perplexity,
-              PPL2_ORACLE, tags=("llm", "text", "quality", "agg")),
+              PPL2_ORACLE),
     QuerySpec("split1_dataset_split", split1_dataset_split,
-              SPLIT1_ORACLE, tags=("llm", "sampling", "export")),
-    QuerySpec("ctm4_split_leakage", ctm4_split_leakage, CTM4_ORACLE,
-              tags=("llm", "contamination", "sampling",
-                    "composition")),
+              SPLIT1_ORACLE),
+    QuerySpec("ctm4_split_leakage", ctm4_split_leakage, CTM4_ORACLE),
     QuerySpec("ctm5_split_near_leakage", ctm5_split_near_leakage,
-              CTM5_ORACLE,
-              tags=("llm", "contamination", "dedup", "sampling")),
+              CTM5_ORACLE),
     QuerySpec("ctm6_contamination_report", ctm6_contamination_report,
-              CTM6_ORACLE,
-              tags=("llm", "contamination", "dedup", "agg",
-                    "composition")),
+              CTM6_ORACLE),
     QuerySpec("qn1_robust_length_normalization",
-              qn1_robust_length_normalization, QN1_ORACLE,
-              tags=("llm", "quality", "stats")),
+              qn1_robust_length_normalization, QN1_ORACLE),
     QuerySpec("out1_embedding_outliers", out1_embedding_outliers,
-              OUT1_ORACLE, tags=("llm", "similarity", "quality",
-                                 "window")),
-    QuerySpec("pk1_sequence_packing", pk1_sequence_packing, PK1_ORACLE,
-              tags=("llm", "packing", "window", "agg")),
-    QuerySpec("pk2_segmented_packing", pk2_segmented_packing, PK2_ORACLE,
-              tags=("llm", "packing", "window", "agg", "scale")),
-    QuerySpec("pk3_whole_doc_packing", pk3_whole_doc_packing, PK3_ORACLE,
-              tags=("llm", "packing", "udf", "agg")),
+              OUT1_ORACLE),
+    QuerySpec("pk1_sequence_packing", pk1_sequence_packing, PK1_ORACLE),
+    QuerySpec("pk2_segmented_packing", pk2_segmented_packing, PK2_ORACLE),
+    QuerySpec("pk3_whole_doc_packing", pk3_whole_doc_packing, PK3_ORACLE),
     QuerySpec("bpe1_merge_candidates", bpe1_merge_candidates,
-              BPE1_ORACLE, tags=("llm", "text", "tokenizer", "agg")),
-    QuerySpec("bpe2_merge_table", bpe2_merge_table, BPE2_ORACLE,
-              tags=("llm", "text", "tokenizer", "iterative")),
-    QuerySpec("bpe3_tokenize", bpe3_tokenize, BPE3_ORACLE,
-              tags=("llm", "text", "tokenizer", "iterative")),
-    QuerySpec("bpe4_fertility", bpe4_fertility, BPE4_ORACLE,
-              tags=("llm", "text", "tokenizer", "stats")),
-    QuerySpec("gq1_gopher_quality", gq1_gopher_quality, GQ1_ORACLE,
-              tags=("llm", "text", "quality", "agg")),
-    QuerySpec("gq2_repetition", gq2_repetition, GQ2_ORACLE,
-              tags=("llm", "text", "quality")),
-    QuerySpec("ch1_document_chunking", ch1_document_chunking, CH1_ORACLE,
-              tags=("llm", "packing", "chunking")),
-    QuerySpec("qz1_int8_quantization", qz1_int8_quantization, QZ1_ORACLE,
-              tags=("llm", "similarity", "quantization")),
-    QuerySpec("rel1_release_report", rel1_release_report, REL1_ORACLE,
-              tags=("llm", "dedup", "contamination", "quality", "pii",
-                    "agg")),
-    QuerySpec("wn1_winnowing", wn1_winnowing, WN1_ORACLE,
-              tags=("llm", "dedup", "fingerprint")),
+              BPE1_ORACLE),
+    QuerySpec("bpe2_merge_table", bpe2_merge_table, BPE2_ORACLE),
+    QuerySpec("bpe3_tokenize", bpe3_tokenize, BPE3_ORACLE),
+    QuerySpec("bpe4_fertility", bpe4_fertility, BPE4_ORACLE),
+    QuerySpec("gq1_gopher_quality", gq1_gopher_quality, GQ1_ORACLE),
+    QuerySpec("gq2_repetition", gq2_repetition, GQ2_ORACLE),
+    QuerySpec("ch1_document_chunking", ch1_document_chunking, CH1_ORACLE),
+    QuerySpec("qz1_int8_quantization", qz1_int8_quantization, QZ1_ORACLE),
+    QuerySpec("rel1_release_report", rel1_release_report, REL1_ORACLE),
+    QuerySpec("wn1_winnowing", wn1_winnowing, WN1_ORACLE),
     QuerySpec("ctm3_semantic_contamination", ctm3_semantic_contamination,
-              CTM3_ORACLE, tags=("llm", "contamination", "ann")),
-    QuerySpec("qz2_pq_encode", qz2_pq_encode, QZ2_ORACLE,
-              tags=("llm", "similarity", "quantization")),
-    QuerySpec("nn4_pq_adc_topk", nn4_pq_adc_topk, NN4_ORACLE,
-              tags=("llm", "similarity", "ann", "quantization")),
-    QuerySpec("ev1_ann_recall", ev1_ann_recall, EV1_ORACLE,
-              tags=("llm", "similarity", "ann", "evaluation")),
-    QuerySpec("ev2_lsh_recall", ev2_lsh_recall, EV2_ORACLE,
-              tags=("llm", "similarity", "ann", "evaluation")),
-    QuerySpec("ev3_planted_recall", ev3_planted_recall, EV3_ORACLE,
-              tags=("llm", "similarity", "ann", "evaluation")),
-    QuerySpec("sem1_semantic_dedup", sem1_semantic_dedup, SEM1_ORACLE,
-              tags=("llm", "dedup", "similarity", "iterative")),
+              CTM3_ORACLE),
+    QuerySpec("qz2_pq_encode", qz2_pq_encode, QZ2_ORACLE),
+    QuerySpec("nn4_pq_adc_topk", nn4_pq_adc_topk, NN4_ORACLE),
+    QuerySpec("ev1_ann_recall", ev1_ann_recall, EV1_ORACLE),
+    QuerySpec("ev2_lsh_recall", ev2_lsh_recall, EV2_ORACLE),
+    QuerySpec("ev3_planted_recall", ev3_planted_recall, EV3_ORACLE),
+    QuerySpec("sem1_semantic_dedup", sem1_semantic_dedup, SEM1_ORACLE),
     QuerySpec("sem2_cluster_mixture", sem2_cluster_mixture,
-              SEM2_ORACLE,
-              tags=("llm", "similarity", "sampling", "mixture")),
-    QuerySpec("tx8_normalize", tx8_normalize, TX8_ORACLE,
-              tags=("llm", "text", "normalization")),
-    QuerySpec("tx9_encoding_scan", tx9_encoding_scan, TX9_ORACLE,
-              tags=("llm", "text", "quality")),
-    QuerySpec("lab1_label_cohesion", lab1_label_cohesion, LAB1_ORACLE,
-              tags=("llm", "similarity", "quality", "agg")),
-    QuerySpec("bp1_boilerplate_spans", bp1_boilerplate_spans, BP1_ORACLE,
-              tags=("llm", "dedup", "boilerplate")),
+              SEM2_ORACLE),
+    QuerySpec("tx8_normalize", tx8_normalize, TX8_ORACLE),
+    QuerySpec("tx9_encoding_scan", tx9_encoding_scan, TX9_ORACLE),
+    QuerySpec("lab1_label_cohesion", lab1_label_cohesion, LAB1_ORACLE),
+    QuerySpec("bp1_boilerplate_spans", bp1_boilerplate_spans, BP1_ORACLE),
     QuerySpec("es1_exact_substring_spans", es1_exact_substring_spans,
-              ES1_ORACLE, tags=("llm", "dedup", "substring", "window")),
+              ES1_ORACLE),
     # 100 TB form (VERDICT r10 ask #2): no oracle — output pinned
     # equal to es1 in pytest
     QuerySpec("es1h_exact_substring_spans_hashed",
-              es1h_exact_substring_spans_hashed, None,
-              tags=("llm", "dedup", "substring", "window", "scale")),
-    QuerySpec("es2_span_removal", es2_span_removal, ES2_ORACLE,
-              tags=("llm", "dedup", "substring")),
+              es1h_exact_substring_spans_hashed, None),
+    QuerySpec("es2_span_removal", es2_span_removal, ES2_ORACLE),
     QuerySpec("es3_decontamination_cut", es3_decontamination_cut,
-              ES3_ORACLE,
-              tags=("llm", "dedup", "contamination", "substring")),
-    QuerySpec("ln1_line_dedup", ln1_line_dedup, LN1_ORACLE,
-              tags=("llm", "dedup", "paragraph")),
+              ES3_ORACLE),
+    QuerySpec("ln1_line_dedup", ln1_line_dedup, LN1_ORACLE),
     QuerySpec("ln2_line_decontamination", ln2_line_decontamination,
-              LN2_ORACLE,
-              tags=("llm", "dedup", "contamination", "paragraph")),
-    QuerySpec("kd1_key_skew_profile", kd1_key_skew_profile, KD1_ORACLE,
-              tags=("llm", "dedup", "stats", "skew")),
-    QuerySpec("kd2_lsh_bucket_profile", kd2_lsh_bucket_profile, None,
-              tags=("llm", "dedup", "stats", "skew")),
+              LN2_ORACLE),
+    QuerySpec("kd1_key_skew_profile", kd1_key_skew_profile, KD1_ORACLE),
+    QuerySpec("kd2_lsh_bucket_profile", kd2_lsh_bucket_profile, None),
     QuerySpec("dsir1_importance_selection", dsir1_importance_selection,
-              DSIR1_ORACLE,
-              tags=("llm", "sampling", "selection", "agg")),
-    QuerySpec("qf1_quality_filter", qf1_quality_filter, QF1_ORACLE,
-              tags=("llm", "sampling", "quality", "agg")),
+              DSIR1_ORACLE),
+    QuerySpec("qf1_quality_filter", qf1_quality_filter, QF1_ORACLE),
     QuerySpec("qf2_quality_gated_mixture", qf2_quality_gated_mixture,
-              QF2_ORACLE,
-              tags=("llm", "sampling", "quality", "composition")),
-    QuerySpec("ccn1_ccnet_pipeline", ccn1_ccnet_pipeline, CCN1_ORACLE,
-              tags=("llm", "curation", "composition", "dedup",
-                    "sampling", "quality")),
+              QF2_ORACLE),
+    QuerySpec("ccn1_ccnet_pipeline", ccn1_ccnet_pipeline, CCN1_ORACLE),
     QuerySpec("shard1_export_manifest", shard1_export_manifest,
-              SHARD1_ORACLE, tags=("llm", "export", "agg")),
+              SHARD1_ORACLE),
     QuerySpec("cur2_cut_select_export", cur2_cut_select_export,
-              CUR2_ORACLE,
-              tags=("llm", "curation", "composition", "export")),
+              CUR2_ORACLE),
     QuerySpec("qs1_length_quantiles", qs1_length_quantiles,
-              QS1_ORACLE, tags=("llm", "stats", "agg")),
-    QuerySpec("ti1_tfidf_terms", ti1_tfidf_terms, TI1_ORACLE,
-              tags=("llm", "text", "join", "window")),
-    QuerySpec("dd1_exact_dedup", dd1_exact_dedup, DD1_ORACLE,
-              tags=("llm", "dedup")),
+              QS1_ORACLE),
+    QuerySpec("ti1_tfidf_terms", ti1_tfidf_terms, TI1_ORACLE),
+    QuerySpec("dd1_exact_dedup", dd1_exact_dedup, DD1_ORACLE),
     QuerySpec("dd2_minhash_lsh_dedup", dd2_minhash_lsh_dedup,
-              _JACCARD_ALLPAIRS_ORACLE, tags=("llm", "dedup")),
-    QuerySpec("dd3_simhash_dedup", dd3_simhash_dedup, DD3_ORACLE,
-              tags=("llm", "dedup")),
-    QuerySpec("dd7_incremental_dedup", dd7_incremental_dedup, DD7_ORACLE,
-              tags=("llm", "dedup", "streaming")),
+              _JACCARD_ALLPAIRS_ORACLE),
+    QuerySpec("dd3_simhash_dedup", dd3_simhash_dedup, DD3_ORACLE),
+    QuerySpec("dd7_incremental_dedup", dd7_incremental_dedup, DD7_ORACLE),
     QuerySpec("ctm1_contamination_check", ctm1_contamination_check,
-              CTM1_ORACLE, tags=("llm", "dedup", "contamination")),
-    QuerySpec("cur1_curation_pass", cur1_curation_pass, CUR1_ORACLE,
-              tags=("llm", "dedup", "contamination", "pii")),
+              CTM1_ORACLE),
+    QuerySpec("cur1_curation_pass", cur1_curation_pass, CUR1_ORACLE),
     QuerySpec("ctm2_bloom_contamination", ctm2_bloom_contamination,
-              CTM1_ORACLE, tags=("llm", "contamination", "bloom")),
-    QuerySpec("tx7_pii_scan", tx7_pii_scan, TX7_ORACLE,
-              tags=("llm", "text", "pii")),
-    QuerySpec("dd4_dedup_clusters", dd4_dedup_clusters, DD4_ORACLE,
-              tags=("llm", "dedup", "iterative")),
+              CTM1_ORACLE),
+    QuerySpec("tx7_pii_scan", tx7_pii_scan, TX7_ORACLE),
+    QuerySpec("dd4_dedup_clusters", dd4_dedup_clusters, DD4_ORACLE),
     QuerySpec("dd5_cross_source_dup_matrix", dd5_cross_source_dup_matrix,
-              DD5_ORACLE, tags=("llm", "dedup")),
+              DD5_ORACLE),
     QuerySpec("dd8_quality_representatives", dd8_quality_representatives,
-              DD8_ORACLE, tags=("llm", "dedup", "window", "iterative")),
+              DD8_ORACLE),
     QuerySpec("dd6_embedding_cosine_dedup", dd6_embedding_cosine_dedup,
-              DD6_ORACLE, tags=("llm", "dedup", "similarity")),
+              DD6_ORACLE),
     # 100 TB form (VERDICT r10 ask #2): occupancy-targeted
     # LSH bits — no oracle (dd6's SQL replay must keep the literal);
     # correctness pinned in tests/test_bench_variants.py
     QuerySpec("dd6b_embedding_cosine_dedup_scaled",
-              dd6b_embedding_cosine_dedup_scaled, None,
-              tags=("llm", "dedup", "similarity", "scale")),
-    QuerySpec("tx6_token_rarity", tx6_token_rarity, TX6_ORACLE,
-              tags=("llm", "text")),
-    QuerySpec("sk1_distinct_sketches", sk1_distinct_sketches, SK1_ORACLE,
-              tags=("llm", "sketch")),
+              dd6b_embedding_cosine_dedup_scaled, None),
+    QuerySpec("tx6_token_rarity", tx6_token_rarity, TX6_ORACLE),
+    QuerySpec("sk1_distinct_sketches", sk1_distinct_sketches, SK1_ORACLE),
     # nn1 is the exact-oracle baseline; the production path is the LSH
     # one — the crossJoin must never be the number we optimize, it is a
     # cartesian product at 100x corpus (round-1 verdict item 4)
-    QuerySpec("nn1_cosine_topk", nn1_cosine_topk, NN1_ORACLE,
-              tags=("llm", "similarity")),
-    QuerySpec("nn2_lsh_ann_topk", nn2_lsh_ann_topk, NN2_ORACLE,
-              tags=("llm", "similarity")),
-    QuerySpec("nn3_ivf_ann_topk", nn3_ivf_ann_topk, NN3_ORACLE,
-              tags=("llm", "similarity")),
+    QuerySpec("nn1_cosine_topk", nn1_cosine_topk, NN1_ORACLE),
+    QuerySpec("nn2_lsh_ann_topk", nn2_lsh_ann_topk, NN2_ORACLE),
+    QuerySpec("nn3_ivf_ann_topk", nn3_ivf_ann_topk, NN3_ORACLE),
     QuerySpec("nn5_multiprobe_lsh_topk", nn5_multiprobe_lsh_topk,
-              NN5_ORACLE, tags=("llm", "similarity", "ann")),
+              NN5_ORACLE),
     QuerySpec("nn6_store_lookup_topk", nn6_store_lookup_topk,
-              NN6_ORACLE,
-              tags=("llm", "similarity", "ann", "streaming")),
-    QuerySpec("zf1_zipf_diagnostics", zf1_zipf_diagnostics, ZF1_ORACLE,
-              tags=("llm", "text", "stats", "agg")),
-    QuerySpec("ev5_ivf_recall", ev5_ivf_recall, EV5_ORACLE,
-              tags=("llm", "similarity", "ann", "eval")),
+              NN6_ORACLE),
+    QuerySpec("zf1_zipf_diagnostics", zf1_zipf_diagnostics, ZF1_ORACLE),
+    QuerySpec("ev5_ivf_recall", ev5_ivf_recall, EV5_ORACLE),
     QuerySpec("ev4_multiprobe_recall", ev4_multiprobe_recall,
-              EV4_ORACLE, tags=("llm", "similarity", "evaluation")),
-    QuerySpec("tx1_language_id", tx1_language_id, TX1_ORACLE,
-              tags=("llm", "text")),
-    QuerySpec("tx2_token_stats", tx2_token_stats, TX2_ORACLE,
-              tags=("llm", "text")),
-    QuerySpec("tx3_rolling_fingerprint", tx3_rolling_fingerprint, TX3_ORACLE,
-              tags=("llm", "text")),
-    QuerySpec("tx4_char_entropy", tx4_char_entropy, TX4_ORACLE,
-              tags=("llm", "text")),
-    QuerySpec("tx5_dataset_card", tx5_dataset_card, TX5_ORACLE,
-              tags=("llm", "text")),
-    QuerySpec("mm1_multimodal_decode", mm1_multimodal_decode, MM1_ORACLE,
-              tags=("llm", "multimodal")),
-    QuerySpec("mm3_pixel_decode", mm3_pixel_decode, MM3_ORACLE,
-              tags=("llm", "multimodal", "udf")),
-    QuerySpec("mm4_wav_decode", mm4_wav_decode, MM4_ORACLE,
-              tags=("llm", "multimodal", "udf")),
-    QuerySpec("mm5_jpeg_decode", mm5_jpeg_decode, MM5_ORACLE,
-              tags=("llm", "multimodal", "udf", "codec")),
-    QuerySpec("mm6_video_headers", mm6_video_headers, MM6_ORACLE,
-              tags=("llm", "multimodal", "udf")),
+              EV4_ORACLE),
+    QuerySpec("tx1_language_id", tx1_language_id, TX1_ORACLE),
+    QuerySpec("tx2_token_stats", tx2_token_stats, TX2_ORACLE),
+    QuerySpec("tx3_rolling_fingerprint", tx3_rolling_fingerprint, TX3_ORACLE),
+    QuerySpec("tx4_char_entropy", tx4_char_entropy, TX4_ORACLE),
+    QuerySpec("tx5_dataset_card", tx5_dataset_card, TX5_ORACLE),
+    QuerySpec("mm1_multimodal_decode", mm1_multimodal_decode, MM1_ORACLE),
+    QuerySpec("mm3_pixel_decode", mm3_pixel_decode, MM3_ORACLE),
+    QuerySpec("mm4_wav_decode", mm4_wav_decode, MM4_ORACLE),
+    QuerySpec("mm5_jpeg_decode", mm5_jpeg_decode, MM5_ORACLE),
+    QuerySpec("mm6_video_headers", mm6_video_headers, MM6_ORACLE),
     QuerySpec("ppl1_unigram_perplexity", ppl1_unigram_perplexity,
-              PPL1_ORACLE, tags=("llm", "text", "quality", "agg")),
+              PPL1_ORACLE),
     QuerySpec("ccb1_perplexity_buckets", ccb1_perplexity_buckets,
-              CCB1_ORACLE,
-              tags=("llm", "text", "quality", "window", "agg")),
-    QuerySpec("mm2_header_decode", mm2_header_decode, MM2_ORACLE,
-              tags=("llm", "multimodal")),
+              CCB1_ORACLE),
+    QuerySpec("mm2_header_decode", mm2_header_decode, MM2_ORACLE),
     QuerySpec("smp1_stratified_sample", smp1_stratified_sample,
-              SMP1_ORACLE, tags=("llm", "sampling")),
+              SMP1_ORACLE),
     QuerySpec("mix2_segmented_mixture", mix2_segmented_mixture,
-              MIX1_ORACLE,
-              tags=("llm", "sampling", "window", "scale")),
-    QuerySpec("mix1_dataset_mixture", mix1_dataset_mixture, MIX1_ORACLE,
-              tags=("llm", "sampling")),
+              MIX1_ORACLE),
+    QuerySpec("mix1_dataset_mixture", mix1_dataset_mixture, MIX1_ORACLE),
     QuerySpec("mix3_temperature_mixture", mix3_temperature_mixture,
-              MIX3_ORACLE, tags=("llm", "sampling", "agg")),
+              MIX3_ORACLE),
     QuerySpec("mix4_exact_budget_quotas", mix4_exact_budget_quotas,
-              MIX4_ORACLE, tags=("llm", "sampling", "agg")),
+              MIX4_ORACLE),
     QuerySpec("mix5_token_budget_mixture", mix5_token_budget_mixture,
-              MIX5_ORACLE, tags=("llm", "sampling", "window", "agg")),
+              MIX5_ORACLE),
     QuerySpec("bud1_budget_revision_admission",
-              bud1_budget_revision_admission, BUD1_ORACLE,
-              tags=("llm", "sampling", "window", "agg", "streaming")),
+              bud1_budget_revision_admission, BUD1_ORACLE),
     QuerySpec("ord1_manifest_order_audit", ord1_manifest_order_audit,
-              ORD1_ORACLE,
-              tags=("llm", "dedup", "sampling", "streaming", "agg")),
+              ORD1_ORACLE),
     QuerySpec("man1_order_safe_manifest", man1_order_safe_manifest,
-              MAN1_ORACLE,
-              tags=("llm", "dedup", "sampling", "streaming", "agg",
-                    "composition")),
-    QuerySpec("vg1_vocab_growth", vg1_vocab_growth, VG1_ORACLE,
-              tags=("llm", "text", "agg", "window")),
+              MAN1_ORACLE),
+    QuerySpec("vg1_vocab_growth", vg1_vocab_growth, VG1_ORACLE),
 ]

@@ -2324,86 +2324,52 @@ SELECT metric, labels, value FROM (
 
 
 SPECS: list[QuerySpec] = [
-    QuerySpec("r1_latest_live_schema", r1_latest_live_schema, R1_ORACLE,
-              tags=("registry", "window")),
-    QuerySpec("r2_version_history", r2_version_history, R2_ORACLE,
-              tags=("registry",)),
-    QuerySpec("r3_schema_versions_view", r3_schema_versions_view, R3_ORACLE,
-              tags=("registry", "agg")),
-    QuerySpec("r4_registration_batch", r4_registration_batch, R4_ORACLE,
-              tags=("registry", "pipeline")),
-    QuerySpec("c1_compatibility_matrix", c1_compatibility_matrix, C1_ORACLE,
-              tags=("registry", "compat", "udf")),
-    QuerySpec("f13_field_extraction", f13_field_extraction, F13_ORACLE,
-              tags=("registry", "udf")),
-    QuerySpec("r7_registration_gated", r7_registration_gated, R7_ORACLE,
-              tags=("registry", "pipeline", "compat", "udf")),
-    QuerySpec("s9_import_with_ids", s9_import_with_ids, S9_ORACLE,
-              tags=("registry", "pipeline")),
-    QuerySpec("fs1_field_search", fs1_field_search, FS1_ORACLE,
-              tags=("registry", "udf")),
-    QuerySpec("a8r_schema_quality", a8r_schema_quality, A8R_ORACLE,
-              tags=("registry", "udf", "agg")),
-    QuerySpec("a8q_exact_quality", a8q_exact_quality, A8Q_ORACLE,
-              tags=("registry", "udf")),
-    QuerySpec("rf1_reserved_fields", rf1_reserved_fields, RF1_ORACLE,
-              tags=("registry", "registration")),
-    QuerySpec("j4r_subject_similarity", j4r_subject_similarity, J4R_ORACLE,
-              tags=("registry", "udf", "join")),
-    QuerySpec("r8_delete_reregister", r8_delete_reregister, R8_ORACLE,
-              tags=("registry", "pipeline")),
-    QuerySpec("j8_kek_dek_lifecycle", j8_kek_dek_lifecycle, J8_ORACLE,
-              tags=("registry", "join")),
-    QuerySpec("j8b_dek_rewrap", j8b_dek_rewrap, J8B_ORACLE,
-              tags=("registry", "join")),
-    QuerySpec("m1_metadata_merge", m1_metadata_merge, M1_ORACLE,
-              tags=("registry",)),
+    QuerySpec("r1_latest_live_schema", r1_latest_live_schema, R1_ORACLE),
+    QuerySpec("r2_version_history", r2_version_history, R2_ORACLE),
+    QuerySpec("r3_schema_versions_view", r3_schema_versions_view, R3_ORACLE),
+    QuerySpec("r4_registration_batch", r4_registration_batch, R4_ORACLE),
+    QuerySpec("c1_compatibility_matrix", c1_compatibility_matrix, C1_ORACLE),
+    QuerySpec("f13_field_extraction", f13_field_extraction, F13_ORACLE),
+    QuerySpec("r7_registration_gated", r7_registration_gated, R7_ORACLE),
+    QuerySpec("s9_import_with_ids", s9_import_with_ids, S9_ORACLE),
+    QuerySpec("fs1_field_search", fs1_field_search, FS1_ORACLE),
+    QuerySpec("a8r_schema_quality", a8r_schema_quality, A8R_ORACLE),
+    QuerySpec("a8q_exact_quality", a8q_exact_quality, A8Q_ORACLE),
+    QuerySpec("rf1_reserved_fields", rf1_reserved_fields, RF1_ORACLE),
+    QuerySpec("j4r_subject_similarity", j4r_subject_similarity, J4R_ORACLE),
+    QuerySpec("r8_delete_reregister", r8_delete_reregister, R8_ORACLE),
+    QuerySpec("j8_kek_dek_lifecycle", j8_kek_dek_lifecycle, J8_ORACLE),
+    QuerySpec("j8b_dek_rewrap", j8b_dek_rewrap, J8B_ORACLE),
+    QuerySpec("m1_metadata_merge", m1_metadata_merge, M1_ORACLE),
     QuerySpec("j3r_reference_resolution", j3r_reference_resolution,
-              J3R_ORACLE, tags=("registry", "join")),
-    QuerySpec("fs2_type_search", fs2_type_search, FS2_ORACLE,
-              tags=("registry", "udf")),
+              J3R_ORACLE),
+    QuerySpec("fs2_type_search", fs2_type_search, FS2_ORACLE),
     QuerySpec("ctx1_multitenant_listing", ctx1_multitenant_listing,
-              CTX1_ORACLE, tags=("registry",)),
-    QuerySpec("err1_lookup_taxonomy", err1_lookup_taxonomy, ERR1_ORACLE,
-              tags=("registry",)),
-    QuerySpec("rv1_ruleset_validation", rv1_ruleset_validation, RV1_ORACLE,
-              tags=("registry", "udf")),
-    QuerySpec("u1_user_role_stats", u1_user_role_stats, U1_ORACLE,
-              tags=("registry", "agg")),
-    QuerySpec("rc1_version_chain_audit", rc1_version_chain_audit, RC1_ORACLE,
-              tags=("registry", "compat", "window", "udf")),
-    QuerySpec("c2_compat_messages", c2_compat_messages, C2_ORACLE,
-              tags=("registry", "compat", "udf")),
-    QuerySpec("c3_compat_with_refs", c3_compat_with_refs, C3_ORACLE,
-              tags=("registry", "compat", "udf")),
-    QuerySpec("mode1_write_gating", mode1_write_gating, MODE1_ORACLE,
-              tags=("registry", "pipeline")),
-    QuerySpec("j3d_dependency_closure", j3d_dependency_closure, J3D_ORACLE,
-              tags=("registry", "join", "iterative")),
-    QuerySpec("x1_export_subject", x1_export_subject, X1_ORACLE,
-              tags=("registry", "agg", "join")),
-    QuerySpec("sg1_suggest_evolution", sg1_suggest_evolution, SG1_ORACLE,
-              tags=("registry", "compat", "udf")),
-    QuerySpec("v1_validate_normalize", v1_validate_normalize, V1_ORACLE,
-              tags=("registry", "udf")),
-    QuerySpec("ex1_explain_failure", ex1_explain_failure, EX1_ORACLE,
-              tags=("registry", "compat", "udf")),
-    QuerySpec("mp1_migration_path", mp1_migration_path, MP1_ORACLE,
-              tags=("registry", "udf", "setop")),
-    QuerySpec("del1_delete_taxonomy", del1_delete_taxonomy, DEL1_ORACLE,
-              tags=("registry", "filter")),
+              CTX1_ORACLE),
+    QuerySpec("err1_lookup_taxonomy", err1_lookup_taxonomy, ERR1_ORACLE),
+    QuerySpec("rv1_ruleset_validation", rv1_ruleset_validation, RV1_ORACLE),
+    QuerySpec("u1_user_role_stats", u1_user_role_stats, U1_ORACLE),
+    QuerySpec("rc1_version_chain_audit", rc1_version_chain_audit, RC1_ORACLE),
+    QuerySpec("c2_compat_messages", c2_compat_messages, C2_ORACLE),
+    QuerySpec("c3_compat_with_refs", c3_compat_with_refs, C3_ORACLE),
+    QuerySpec("mode1_write_gating", mode1_write_gating, MODE1_ORACLE),
+    QuerySpec("j3d_dependency_closure", j3d_dependency_closure, J3D_ORACLE),
+    QuerySpec("x1_export_subject", x1_export_subject, X1_ORACLE),
+    QuerySpec("sg1_suggest_evolution", sg1_suggest_evolution, SG1_ORACLE),
+    QuerySpec("v1_validate_normalize", v1_validate_normalize, V1_ORACLE),
+    QuerySpec("ex1_explain_failure", ex1_explain_failure, EX1_ORACLE),
+    QuerySpec("mp1_migration_path", mp1_migration_path, MP1_ORACLE),
+    QuerySpec("del1_delete_taxonomy", del1_delete_taxonomy, DEL1_ORACLE),
     QuerySpec("exp1_exporter_lifecycle", exp1_exporter_lifecycle,
-              EXP1_ORACLE, tags=("registry", "streaming", "agg")),
-    QuerySpec("aud1_audit_chain", aud1_audit_chain, AUD1_ORACLE,
-              tags=("registry", "streaming", "iterative")),
+              EXP1_ORACLE),
+    QuerySpec("aud1_audit_chain", aud1_audit_chain, AUD1_ORACLE),
     QuerySpec("del2_version_delete_taxonomy", del2_version_delete_taxonomy,
-              DEL2_ORACLE, tags=("registry", "filter")),
+              DEL2_ORACLE),
     QuerySpec("j8c_dek_undelete_lifecycle", j8c_dek_undelete_lifecycle,
-              J8C_ORACLE, tags=("registry", "iterative", "udf")),
+              J8C_ORACLE),
     QuerySpec("j8d_kek_cascade_lifecycle", j8d_kek_cascade_lifecycle,
-              J8D_ORACLE, tags=("registry", "iterative", "udf")),
+              J8D_ORACLE),
     QuerySpec("lv1_context_level_resolution", lv1_context_level_resolution,
-              LV1_ORACLE, tags=("registry", "pipeline", "compat", "udf")),
-    QuerySpec("met1_prometheus_export", met1_prometheus_export, MET1_ORACLE,
-              tags=("registry", "agg", "metrics")),
+              LV1_ORACLE),
+    QuerySpec("met1_prometheus_export", met1_prometheus_export, MET1_ORACLE),
 ]

@@ -1,11 +1,13 @@
 """Relational operator inventory (SURVEY.md §2.1-2.8) over the driver tables.
 
-Per FIXTURES.md §4, each reference operator's Spark primitive is exercised
-directly on the TPC-H-ish tables: prefix scans + pagination on ``part``,
-the reference-graph join shape on ``part ⋈ lineitem ⋈ orders ⋈ customer``,
+Per FIXTURES.md §4, each registry operator's Spark primitive is exercised
+directly on analog tables (the TPC-H-ish star schema stands in for
+subjects and versions): prefix scans + pagination on ``part``, the
+reference-graph join shape on ``part ⋈ lineitem ⋈ orders ⋈ customer``,
 latest-per-key on ``orders``, dedup anti-joins and content addressing on
 ``events``/``documents`` fingerprints, set-ops between brand snapshots,
-fuzzy/Levenshtein on ``part.p_name``.
+fuzzy/Levenshtein on ``part.p_name``, plus the as-of, range-join and
+hierarchical-rollup shapes.
 
 Every spec has a DuckDB oracle; aggregates over doubles follow the decimal
 determinism contract in ``.base``.  Timestamp outputs are formatted to
@@ -43,284 +45,6 @@ TS_FMT_DUCK = "%Y-%m-%d %H:%M:%S"
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return load_table(spark, sf_dir, name)
-
-
-# --------------------------------------------------------------------------
-# Headline analytical queries (bench set)
-# --------------------------------------------------------------------------
-
-def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H-Q1-shaped scan+agg: the A1/A4 aggregate pattern at fact scale.
-
-    Single scan of lineitem, map-side partial aggregation, 6 aggregates per
-    group; the filter and 8-column projection push into the parquet scan.
-    """
-    li = _t(spark, sf_dir, "lineitem")
-    disc_price = F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))
-    charge = disc_price * (F.lit(1.0) + F.col("l_tax"))
-    return (
-        li.filter(F.col("l_shipdate") <= F.lit("2000-12-01"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            dsum("l_quantity", 2, "sum_qty"),
-            dsum("l_extendedprice", 2, "sum_base_price"),
-            psum(disc_price).alias("sum_disc_price"),
-            psum(charge).alias("sum_charge"),
-            (dsum("l_quantity", 2) / F.count(F.lit(1))).alias("avg_qty"),
-            (dsum("l_extendedprice", 2) / F.count(F.lit(1))).alias("avg_price"),
-            F.count(F.lit(1)).alias("count_order"),
-        )
-    )
-
-
-Q1_ORACLE = f"""
-SELECT l_returnflag, l_linestatus,
-       {dsum_expr('l_quantity')} AS sum_qty,
-       {dsum_expr('l_extendedprice')} AS sum_base_price,
-       {psum_expr('l_extendedprice * (1.0 - l_discount)')} AS sum_disc_price,
-       {psum_expr('l_extendedprice * (1.0 - l_discount) * (1.0 + l_tax)')} AS sum_charge,
-       {dsum_expr('l_quantity')} / COUNT(*) AS avg_qty,
-       {dsum_expr('l_extendedprice')} / COUNT(*) AS avg_price,
-       COUNT(*) AS count_order
-FROM lineitem
-WHERE l_shipdate <= TIMESTAMP '2000-12-01 00:00:00'
-GROUP BY l_returnflag, l_linestatus
-"""
-
-
-def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H-Q3-shaped 3-way join + agg + deterministic top-10."""
-    cust = _t(spark, sf_dir, "customer").filter(
-        F.col("c_mktsegment") == "BUILDING")
-    orders = _t(spark, sf_dir, "orders").filter(
-        F.col("o_orderdate") < F.lit("1998-03-15"))
-    li = _t(spark, sf_dir, "lineitem").filter(
-        F.col("l_shipdate") > F.lit("1998-03-15"))
-    revenue = F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))
-    return (
-        li.join(orders.join(F.broadcast(cust),
-                            F.col("o_custkey") == F.col("c_custkey"))
-                .select("o_orderkey", "o_orderdate", "o_orderpriority"),
-                F.col("l_orderkey") == F.col("o_orderkey"))
-        .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
-        .agg(psum(revenue).alias("revenue"))
-        .select(
-            "l_orderkey",
-            F.date_format("o_orderdate", TS_FMT_SPARK).alias("o_orderdate"),
-            "o_orderpriority", "revenue")
-        .orderBy(F.desc("revenue"), F.asc("l_orderkey"))
-        .limit(10)
-    )
-
-
-Q3_ORACLE = f"""
-SELECT l_orderkey,
-       strftime(o_orderdate, '{TS_FMT_DUCK}') AS o_orderdate,
-       o_orderpriority,
-       {psum_expr('l_extendedprice * (1.0 - l_discount)')} AS revenue
-FROM lineitem
-JOIN orders   ON l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-WHERE c_mktsegment = 'BUILDING'
-  AND o_orderdate < TIMESTAMP '1998-03-15 00:00:00'
-  AND l_shipdate  > TIMESTAMP '1998-03-15 00:00:00'
-GROUP BY l_orderkey, o_orderdate, o_orderpriority
-ORDER BY revenue DESC, l_orderkey
-LIMIT 10
-"""
-
-
-def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H-Q5-shaped star join: revenue per nation where the supplier and
-    customer share a nation.  Dimensions are broadcast; only lineitem ⋈
-    orders shuffles (on orderkey)."""
-    nation = _t(spark, sf_dir, "nation")
-    cust = _t(spark, sf_dir, "customer")
-    supp = _t(spark, sf_dir, "supplier")
-    orders = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
-    revenue = F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))
-    return (
-        li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(F.broadcast(cust), F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(supp), (F.col("l_suppkey") == F.col("s_suppkey"))
-              & (F.col("c_nationkey") == F.col("s_nationkey")))
-        .join(F.broadcast(nation), F.col("s_nationkey") == F.col("n_nationkey"))
-        .groupBy("n_name")
-        .agg(psum(revenue).alias("revenue"),
-             F.count(F.lit(1)).alias("n_lineitems"))
-    )
-
-
-Q5_ORACLE = f"""
-SELECT n_name,
-       {psum_expr('l_extendedprice * (1.0 - l_discount)')} AS revenue,
-       COUNT(*) AS n_lineitems
-FROM lineitem
-JOIN orders   ON l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
-JOIN nation   ON s_nationkey = n_nationkey
-GROUP BY n_name
-"""
-
-
-def q7_nation_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H-Q7-shaped: shipping volume between two nations by year —
-    the multi-dimension broadcast + fact shuffle pattern."""
-    nation = _t(spark, sf_dir, "nation")
-    supp = _t(spark, sf_dir, "supplier")
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
-    n1 = nation.select(F.col("n_nationkey").alias("s_nk"),
-                       F.col("n_name").alias("supp_nation"))
-    n2 = nation.select(F.col("n_nationkey").alias("c_nk"),
-                       F.col("n_name").alias("cust_nation"))
-    revenue = F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))
-    return (
-        li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(F.broadcast(cust), F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(supp), F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(F.broadcast(n1), F.col("s_nationkey") == F.col("s_nk"))
-        .join(F.broadcast(n2), F.col("c_nationkey") == F.col("c_nk"))
-        .filter(F.col("supp_nation") != F.col("cust_nation"))
-        .groupBy("supp_nation", "cust_nation",
-                 F.year("l_shipdate").alias("ship_year"))
-        .agg(psum(revenue).alias("revenue"),
-             F.count(F.lit(1)).alias("n_items"))
-    )
-
-
-Q7_ORACLE = f"""
-SELECT sn.n_name AS supp_nation, cn.n_name AS cust_nation,
-       CAST(year(l_shipdate) AS INT) AS ship_year,
-       {psum_expr('l_extendedprice * (1.0 - l_discount)')} AS revenue,
-       COUNT(*) AS n_items
-FROM lineitem
-JOIN orders   ON l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-JOIN supplier ON l_suppkey = s_suppkey
-JOIN nation sn ON s_nationkey = sn.n_nationkey
-JOIN nation cn ON c_nationkey = cn.n_nationkey
-WHERE sn.n_name <> cn.n_name
-GROUP BY 1, 2, 3
-"""
-
-
-def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H-Q10-shaped: revenue lost to returns per customer, top 20."""
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
-    revenue = F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))
-    return (
-        li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(F.broadcast(cust), F.col("o_custkey") == F.col("c_custkey"))
-        .groupBy("c_custkey", "c_name", "c_mktsegment")
-        .agg(psum(revenue).alias("lost_revenue"),
-             F.count(F.lit(1)).alias("n_returned"))
-        .orderBy(F.desc("lost_revenue"), F.asc("c_custkey"))
-        .limit(20)
-    )
-
-
-Q10_ORACLE = f"""
-SELECT c_custkey, c_name, c_mktsegment,
-       {psum_expr('l_extendedprice * (1.0 - l_discount)')} AS lost_revenue,
-       COUNT(*) AS n_returned
-FROM lineitem
-JOIN orders   ON l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-WHERE l_returnflag = 'R'
-GROUP BY 1, 2, 3
-ORDER BY lost_revenue DESC, c_custkey
-LIMIT 20
-"""
-
-
-def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H-Q6-shaped: pure filter + aggregate — every predicate reaches
-    the parquet scan (PushedFilters), one scalar out."""
-    li = _t(spark, sf_dir, "lineitem")
-    return (li.filter((F.col("l_shipdate") >= F.lit("1996-01-01"))
-                      & (F.col("l_shipdate") < F.lit("1997-01-01"))
-                      & (F.col("l_discount") >= 0.02)
-                      & (F.col("l_discount") <= 0.08)
-                      & (F.col("l_quantity") < 24))
-            .agg(psum(F.col("l_extendedprice") * F.col("l_discount"))
-                 .alias("forecast_revenue"),
-                 F.count(F.lit(1)).alias("n_lineitems")))
-
-
-Q6_ORACLE = f"""
-SELECT {psum_expr('l_extendedprice * l_discount')} AS forecast_revenue,
-       COUNT(*) AS n_lineitems
-FROM lineitem
-WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
-  AND l_shipdate <  TIMESTAMP '1997-01-01 00:00:00'
-  AND l_discount BETWEEN 0.02 AND 0.08
-  AND l_quantity < 24
-"""
-
-
-def q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H-Q18-shaped: aggregate-then-semi-join (HAVING over the fact,
-    joined back to dimensions), deterministic top-k."""
-    li = _t(spark, sf_dir, "lineitem")
-    orders = _t(spark, sf_dir, "orders")
-    cust = _t(spark, sf_dir, "customer")
-    big = (li.groupBy("l_orderkey")
-             .agg(dsum("l_quantity", 2, "total_qty"))
-             .filter(F.col("total_qty") > 150))
-    return (big.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-               .join(F.broadcast(cust), F.col("o_custkey") == F.col("c_custkey"))
-               .select("c_name", "c_custkey", "o_orderkey",
-                       F.date_format("o_orderdate", TS_FMT_SPARK)
-                       .alias("o_orderdate"), "o_totalprice", "total_qty")
-               .orderBy(F.desc("total_qty"), F.asc("o_orderkey"))
-               .limit(100))
-
-
-Q18_ORACLE = f"""
-SELECT c_name, c_custkey, o_orderkey,
-       strftime(o_orderdate, '{TS_FMT_DUCK}') AS o_orderdate,
-       o_totalprice, total_qty
-FROM (
-  SELECT l_orderkey, {dsum_expr('l_quantity')} AS total_qty
-  FROM lineitem GROUP BY l_orderkey
-  HAVING {dsum_expr('l_quantity')} > 150) big
-JOIN orders   ON l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-ORDER BY total_qty DESC, o_orderkey
-LIMIT 100
-"""
-
-
-def q14_promo_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H-Q14-shaped: promo revenue share — conditional aggregate ratio
-    over a broadcast-dim join, single-row result."""
-    part = _t(spark, sf_dir, "part")
-    li = _t(spark, sf_dir, "lineitem")
-    revenue = F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))
-    promo = F.when(F.col("p_type").startswith("PROMO"), revenue) \
-        .otherwise(F.lit(0.0))
-    joined = li.join(F.broadcast(part),
-                     F.col("l_partkey") == F.col("p_partkey"))
-    return joined.agg(
-        (F.lit(100.0) * psum(promo) / psum(revenue)).alias("promo_share_pct"),
-        psum(revenue).alias("total_revenue"))
-
-
-Q14_ORACLE = f"""
-SELECT 100.0 * {psum_expr("CASE WHEN p_type LIKE 'PROMO%' "
-                          "THEN l_extendedprice * (1.0 - l_discount) "
-                          "ELSE 0.0 END")}
-         / {psum_expr('l_extendedprice * (1.0 - l_discount)')}
-         AS promo_share_pct,
-       {psum_expr('l_extendedprice * (1.0 - l_discount)')} AS total_revenue
-FROM lineitem JOIN part ON l_partkey = p_partkey
-"""
 
 
 # --------------------------------------------------------------------------
@@ -1055,376 +779,6 @@ FROM (SELECT DISTINCT source FROM documents)
 """
 
 
-def q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H-Q4-shaped EXISTS semi-join: orders of one quarter that have
-    at least one returned line, counted by priority (adapted to the
-    simplified lineitem schema: l_returnflag='R' plays the late-line
-    predicate).  The plan must be a LeftSemi join, never a join+distinct."""
-    orders = _t(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate") >= F.lit("1996-01-01"))
-        & (F.col("o_orderdate") < F.lit("1996-04-01")))
-    returned = _t(spark, sf_dir, "lineitem").filter(
-        F.col("l_returnflag") == "R").select("l_orderkey")
-    return (orders.join(returned,
-                        orders["o_orderkey"] == returned["l_orderkey"],
-                        "leftsemi")
-            .groupBy("o_orderpriority")
-            .agg(F.count(F.lit(1)).alias("order_count")))
-
-
-Q4_ORACLE = """
-SELECT o_orderpriority, COUNT(*) AS order_count
-FROM orders
-WHERE o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
-  AND o_orderdate <  TIMESTAMP '1996-04-01 00:00:00'
-  AND EXISTS (SELECT 1 FROM lineitem
-              WHERE l_orderkey = o_orderkey AND l_returnflag = 'R')
-GROUP BY o_orderpriority
-"""
-
-
-def q12_priority_linestatus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H-Q12-shaped case-sum over a fact-fact join: per linestatus,
-    how many 1996 lines belong to high- vs low-priority orders (adapted:
-    l_linestatus plays shipmode)."""
-    li = _t(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= F.lit("1996-01-01"))
-        & (F.col("l_shipdate") < F.lit("1997-01-01")))
-    orders = _t(spark, sf_dir, "orders").select("o_orderkey",
-                                                "o_orderpriority")
-    high = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
-    return (li.join(orders, li["l_orderkey"] == orders["o_orderkey"])
-            .groupBy("l_linestatus")
-            .agg(F.sum(F.when(high, 1).otherwise(0)).alias("high_line_count"),
-                 F.sum(F.when(high, 0).otherwise(1)).alias("low_line_count")))
-
-
-Q12_ORACLE = """
-SELECT l_linestatus,
-       CAST(SUM(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
-                THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
-       CAST(SUM(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
-                THEN 0 ELSE 1 END) AS BIGINT) AS low_line_count
-FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
-  AND l_shipdate <  TIMESTAMP '1997-01-01 00:00:00'
-GROUP BY l_linestatus
-"""
-
-
-def q16_supplier_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H-Q16-shaped anti-join + grouped COUNT(DISTINCT): per brand,
-    distinct suppliers shipping it, EXCLUDING suppliers in the
-    complaints set (negative balance stands in for the LIKE
-    '%Complaints%' filter; lineitem is the part↔supplier bridge since
-    the corpus has no partsupp)."""
-    li = _t(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey")
-    part = _t(spark, sf_dir, "part").filter(F.col("p_brand") != "Brand#1") \
-        .select("p_partkey", "p_brand")
-    complaints = _t(spark, sf_dir, "supplier").filter(
-        F.col("s_acctbal") < 0).select("s_suppkey")
-    return (li.join(complaints,
-                    li["l_suppkey"] == complaints["s_suppkey"], "leftanti")
-            .join(F.broadcast(part),
-                  F.col("l_partkey") == F.col("p_partkey"))
-            .groupBy("p_brand")
-            .agg(F.countDistinct("l_suppkey").alias("supplier_cnt")))
-
-
-Q16_ORACLE = """
-SELECT p_brand, COUNT(DISTINCT l_suppkey) AS supplier_cnt
-FROM lineitem
-JOIN part ON l_partkey = p_partkey
-WHERE p_brand <> 'Brand#1'
-  AND l_suppkey NOT IN (SELECT s_suppkey FROM supplier
-                        WHERE s_acctbal < 0)
-GROUP BY p_brand
-"""
-
-
-def q13_customer_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H-Q13-shaped outer-join distribution: orders per customer
-    (zero-preserving LEFT OUTER with a right-side predicate), then the
-    histogram of customers by order count — the classic two-level
-    aggregation over an outer join."""
-    cust = _t(spark, sf_dir, "customer").select("c_custkey")
-    orders = (_t(spark, sf_dir, "orders")
-              .filter(F.col("o_orderpriority") != "1-URGENT")
-              .select("o_orderkey", "o_custkey"))
-    per_cust = (cust.join(orders, cust["c_custkey"] == orders["o_custkey"],
-                          "left")
-                .groupBy("c_custkey")
-                .agg(F.count("o_orderkey").alias("c_count")))
-    return (per_cust.groupBy("c_count")
-            .agg(F.count(F.lit(1)).alias("custdist")))
-
-
-Q13_ORACLE = """
-SELECT c_count, COUNT(*) AS custdist
-FROM (SELECT c_custkey, COUNT(o_orderkey) AS c_count
-      FROM customer LEFT OUTER JOIN orders
-        ON c_custkey = o_custkey AND o_orderpriority <> '1-URGENT'
-      GROUP BY c_custkey)
-GROUP BY c_count
-"""
-
-
-def q17_small_quantity_revenue(spark: SparkSession,
-                               sf_dir: str) -> DataFrame:
-    """TPC-H-Q17-shaped correlated-average filter: revenue from
-    lineitems whose quantity is below 20% of their part's average.  The
-    correlated subquery decorrelates to one per-part aggregate + join;
-    the average COMPARISON avoids division entirely (qty*count*5 < sum
-    in exact DECIMAL) so both engines agree bit-exactly at the
-    threshold boundary."""
-    li = _t(spark, sf_dir, "lineitem")
-    part = (_t(spark, sf_dir, "part")
-            .filter(F.col("p_brand") == "Brand#2").select("p_partkey"))
-    stats = li.groupBy("l_partkey").agg(
-        F.sum(F.col("l_quantity").cast("decimal(20,6)")).alias("__qsum"),
-        F.count(F.lit(1)).alias("__qcnt"))
-    j = (li.join(part, li["l_partkey"] == part["p_partkey"])
-         .join(stats, "l_partkey")
-         .filter(F.col("l_quantity").cast("decimal(20,6)")
-                 * F.col("__qcnt") * 5 < F.col("__qsum")))
-    return j.agg((dsum("l_extendedprice") / 7.0).alias("avg_yearly"))
-
-
-Q17_ORACLE = f"""
-SELECT {dsum_expr('l_extendedprice')} / 7.0 AS avg_yearly
-FROM lineitem
-JOIN part ON p_partkey = l_partkey
-JOIN (SELECT l_partkey, SUM(CAST(l_quantity AS DECIMAL(20,6))) AS qsum,
-             COUNT(*) AS qcnt
-      FROM lineitem GROUP BY l_partkey) s USING (l_partkey)
-WHERE p_brand = 'Brand#2'
-  AND CAST(l_quantity AS DECIMAL(20,6)) * qcnt * 5 < qsum
-"""
-
-
-def q19_disjunctive_pushdown(spark: SparkSession,
-                             sf_dir: str) -> DataFrame:
-    """TPC-H-Q19-shaped disjunction of conjunctive ranges: revenue under
-    an OR of three (brand, size, quantity) envelopes.  Catalyst pushes
-    the common sub-predicates and keeps the disjunction a single
-    post-join filter — no union-of-three-scans blowup."""
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part").select("p_partkey", "p_brand",
-                                            "p_size")
-    j = li.join(F.broadcast(part), li["l_partkey"] == part["p_partkey"])
-    env = (
-        ((F.col("p_brand") == "Brand#1") & F.col("p_size").between(1, 5)
-         & F.col("l_quantity").between(1, 11))
-        | ((F.col("p_brand") == "Brand#2") & F.col("p_size").between(1, 10)
-           & F.col("l_quantity").between(10, 20))
-        | ((F.col("p_brand") == "Brand#3") & F.col("p_size").between(1, 15)
-           & F.col("l_quantity").between(20, 30)))
-    rev = psum(F.col("l_extendedprice") * (1 - F.col("l_discount")))
-    return j.filter(env).agg(rev.alias("revenue"))
-
-
-Q19_ORACLE = f"""
-SELECT {psum_expr('l_extendedprice * (1 - l_discount)')} AS revenue
-FROM lineitem JOIN part ON p_partkey = l_partkey
-WHERE (p_brand = 'Brand#1' AND p_size BETWEEN 1 AND 5
-       AND l_quantity BETWEEN 1 AND 11)
-   OR (p_brand = 'Brand#2' AND p_size BETWEEN 1 AND 10
-       AND l_quantity BETWEEN 10 AND 20)
-   OR (p_brand = 'Brand#3' AND p_size BETWEEN 1 AND 15
-       AND l_quantity BETWEEN 20 AND 30)
-"""
-
-
-def q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H-Q21-shaped EXISTS + NOT EXISTS pair: suppliers who were the
-    ONLY late shipper (shipdate > orderdate + 90 days) on finalized
-    multi-supplier orders.  Both correlated EXISTS decorrelate to one
-    semi-join and one anti-join on (orderkey, suppkey<>suppkey) — the
-    hardest relational shape in the TPC-H set."""
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey",
-                                              "l_shipdate")
-    ords = (_t(spark, sf_dir, "orders")
-            .filter(F.col("o_orderstatus") == "F")
-            .select("o_orderkey", "o_orderdate"))
-    late = (li.join(ords, li["l_orderkey"] == ords["o_orderkey"])
-            .filter(F.col("l_shipdate")
-                    > F.col("o_orderdate") + F.expr("INTERVAL 90 DAYS"))
-            .select("l_orderkey", "l_suppkey").distinct())
-    allp = li.select("l_orderkey", "l_suppkey").distinct()
-    a = late.alias("a")
-    semi = a.join(
-        allp.alias("b"),
-        (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-        & (F.col("a.l_suppkey") != F.col("b.l_suppkey")), "leftsemi")
-    anti = semi.alias("s").join(
-        late.alias("c"),
-        (F.col("s.l_orderkey") == F.col("c.l_orderkey"))
-        & (F.col("s.l_suppkey") != F.col("c.l_suppkey")), "leftanti")
-    supp = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
-    return (anti.groupBy("l_suppkey")
-            .agg(F.countDistinct("l_orderkey").alias("numwait"))
-            .join(F.broadcast(supp),
-                  F.col("l_suppkey") == F.col("s_suppkey"))
-            .select("s_name", "numwait"))
-
-
-Q21_ORACLE = """
-WITH late AS (
-  SELECT DISTINCT l_orderkey, l_suppkey
-  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-  WHERE o_orderstatus = 'F'
-    AND l_shipdate > o_orderdate + INTERVAL 90 DAY),
-allp AS (SELECT DISTINCT l_orderkey, l_suppkey FROM lineitem)
-SELECT s_name, COUNT(DISTINCT a.l_orderkey) AS numwait
-FROM late a JOIN supplier ON s_suppkey = a.l_suppkey
-WHERE EXISTS (SELECT 1 FROM allp b
-              WHERE b.l_orderkey = a.l_orderkey
-                AND b.l_suppkey <> a.l_suppkey)
-  AND NOT EXISTS (SELECT 1 FROM late c
-                  WHERE c.l_orderkey = a.l_orderkey
-                    AND c.l_suppkey <> a.l_suppkey)
-GROUP BY s_name
-"""
-
-
-def q22_dormant_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H-Q22-shaped anti-join opportunity report: per market
-    segment, customers with above-average positive balance and NO
-    orders.  The global average comparison uses the division-free
-    bal*count > sum DECIMAL form; the no-orders predicate is one
-    anti-join."""
-    cust = _t(spark, sf_dir, "customer")
-    bal = F.col("c_acctbal").cast("decimal(18,2)")
-    pos = (cust.filter(F.col("c_acctbal") > 0)
-           .agg(F.sum(bal).alias("__bsum"),
-                F.count(F.lit(1)).alias("__bcnt")))
-    orders = _t(spark, sf_dir, "orders").select("o_custkey")
-    eligible = (cust.crossJoin(F.broadcast(pos))
-                .filter(bal * F.col("__bcnt") > F.col("__bsum")))
-    dormant = eligible.join(
-        orders, eligible["c_custkey"] == orders["o_custkey"], "leftanti")
-    return (dormant.groupBy("c_mktsegment")
-            .agg(F.count(F.lit(1)).alias("numcust"),
-                 dsum("c_acctbal", alias="totacctbal")))
-
-
-Q22_ORACLE = f"""
-WITH pos AS (
-  SELECT SUM(CAST(c_acctbal AS DECIMAL(18,2))) AS bsum,
-         COUNT(*) AS bcnt
-  FROM customer WHERE c_acctbal > 0)
-SELECT c_mktsegment, COUNT(*) AS numcust,
-       {dsum_expr('c_acctbal')} AS totacctbal
-FROM customer, pos
-WHERE CAST(c_acctbal AS DECIMAL(18,2)) * bcnt > bsum
-  AND NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
-GROUP BY c_mktsegment
-"""
-
-
-def q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H-Q11-shaped share-of-total HAVING: parts whose shipped value
-    exceeds 1.3x the MEAN part value (the mean-relative form of Q11's
-    0.0001/SF knob, so the predicate stays selective at every scale
-    factor).  The global (total, count) enters as a 1-row broadcast and
-    the comparison stays in exact DECIMAL (val*n_parts*10 > total*13) —
-    division-free, so the HAVING boundary is bit-exact."""
-    li = _t(spark, sf_dir, "lineitem")
-    val = F.sum((F.col("l_extendedprice") * F.col("l_quantity"))
-                .cast("decimal(25,6)"))
-    per_part = li.groupBy("l_partkey").agg(val.alias("__val"))
-    total = per_part.agg(F.sum("__val").alias("__total"),
-                         F.count(F.lit(1)).alias("__nparts"))
-    return (per_part.crossJoin(F.broadcast(total))
-            .filter(F.col("__val") * F.col("__nparts") * 10
-                    > F.col("__total") * 13)
-            .select("l_partkey",
-                    F.col("__val").cast("double").alias("part_value")))
-
-
-Q11_ORACLE = """
-WITH per_part AS (
-  SELECT l_partkey,
-         SUM(CAST(l_extendedprice * l_quantity AS DECIMAL(25,6))) AS val
-  FROM lineitem GROUP BY l_partkey),
-total AS (SELECT SUM(val) AS t, COUNT(*) AS n FROM per_part)
-SELECT l_partkey, CAST(val AS DOUBLE) AS part_value
-FROM per_part, total WHERE val * n * 10 > t * 13
-"""
-
-
-def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H-Q15-shaped view + max: the supplier(s) with the maximum
-    total revenue over a ship-date quarter.  The revenue 'view' is one
-    aggregate; the max filter is a rank-1 window over it (no
-    re-aggregation, no self-join of the view)."""
-    li = (_t(spark, sf_dir, "lineitem")
-          .filter((F.col("l_shipdate") >= "1996-01-01")
-                  & (F.col("l_shipdate") < "1996-04-01")))
-    rev = (li.groupBy("l_suppkey")
-           .agg(psum(F.col("l_extendedprice") * (1 - F.col("l_discount")))
-                .alias("total_revenue")))
-    w = Window.orderBy(F.desc("total_revenue"))
-    top = (rev.withColumn("__r", F.rank().over(w))
-           .filter(F.col("__r") == 1).drop("__r"))
-    supp = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
-    return (top.join(F.broadcast(supp),
-                     top["l_suppkey"] == supp["s_suppkey"])
-            .select("s_suppkey", "s_name", "total_revenue"))
-
-
-Q15_ORACLE = f"""
-WITH revenue AS (
-  SELECT l_suppkey,
-         {psum_expr('l_extendedprice * (1 - l_discount)')} AS total_revenue
-  FROM lineitem
-  WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-    AND l_shipdate < TIMESTAMP '1996-04-01'
-  GROUP BY l_suppkey)
-SELECT s_suppkey, s_name, total_revenue
-FROM revenue JOIN supplier ON s_suppkey = l_suppkey
-WHERE total_revenue = (SELECT MAX(total_revenue) FROM revenue)
-"""
-
-
-def q20_excess_shippers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H-Q20-shaped nested semi-join: suppliers who shipped more
-    than half of some part's recent volume ('excess' share of a part's
-    quarter), as names — supplier ∈ (pairs whose shipped quantity
-    exceeds 50% of the part's total).  Two aggregates + one
-    division-free DECIMAL comparison + one semi-join."""
-    li = (_t(spark, sf_dir, "lineitem")
-          .filter(F.col("l_shipdate") >= "2000-01-01"))
-    qty = F.sum(F.col("l_quantity").cast("decimal(20,6)"))
-    pair = li.groupBy("l_partkey", "l_suppkey").agg(qty.alias("__pq"))
-    part_total = li.groupBy("l_partkey").agg(qty.alias("__pt"))
-    excess = (pair.join(part_total, "l_partkey")
-              .filter(F.col("__pq") * 2 > F.col("__pt"))
-              .select("l_suppkey").distinct())
-    supp = _t(spark, sf_dir, "supplier")
-    return (supp.join(excess,
-                      supp["s_suppkey"] == excess["l_suppkey"], "leftsemi")
-            .select("s_suppkey", "s_name"))
-
-
-Q20_ORACLE = """
-WITH li AS (SELECT * FROM lineitem
-            WHERE l_shipdate >= TIMESTAMP '2000-01-01'),
-pair AS (
-  SELECT l_partkey, l_suppkey,
-         SUM(CAST(l_quantity AS DECIMAL(20,6))) AS pq
-  FROM li GROUP BY l_partkey, l_suppkey),
-part_total AS (
-  SELECT l_partkey, SUM(CAST(l_quantity AS DECIMAL(20,6))) AS pt
-  FROM li GROUP BY l_partkey)
-SELECT s_suppkey, s_name
-FROM supplier
-WHERE s_suppkey IN (
-  SELECT l_suppkey FROM pair JOIN part_total USING (l_partkey)
-  WHERE pq * 2 > pt)
-"""
-
-
 def asof1_config_at_event_time(spark: SparkSession, sf_dir: str) -> DataFrame:
     """As-of join (point-in-time lookup): every event picks up the config
     snapshot that was in force when it happened — snapshots are every
@@ -1747,306 +1101,56 @@ FROM orders
 """
 
 
-def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H-Q2-shaped correlated-min supplier selection, adapted to
-    the driver schema (no partsupp table — the per-(part, supplier)
-    unit cost derives from lineitem's observed prices): for SMALL
-    parts of size 10, pick each part's cheapest EUROPE supplier.
-    The per-group min re-enters as an equi-join (the decorrelated
-    form Catalyst produces for Q2's scalar subquery)."""
-    part = _t(spark, sf_dir, "part")
-    supp = _t(spark, sf_dir, "supplier")
-    nation = _t(spark, sf_dir, "nation")
-    region = _t(spark, sf_dir, "region")
-    li = _t(spark, sf_dir, "lineitem")
-
-    europe_supp = (supp
-                   .join(F.broadcast(nation),
-                         F.col("s_nationkey") == F.col("n_nationkey"))
-                   .join(F.broadcast(region.filter(
-                       F.col("r_name") == "EUROPE")),
-                       F.col("n_regionkey") == F.col("r_regionkey"))
-                   .select("s_suppkey", "s_name", "s_acctbal", "n_name"))
-    target_parts = part.filter((F.col("p_size") == 10)
-                               & (F.col("p_type") == "SMALL")) \
-        .select("p_partkey", "p_name")
-    unit_cost = (li.groupBy("l_partkey", "l_suppkey")
-                 .agg(F.min(F.col("l_extendedprice")
-                            / F.col("l_quantity")).alias("unit_cost")))
-    offers = (unit_cost
-              .join(F.broadcast(target_parts),
-                    F.col("l_partkey") == F.col("p_partkey"))
-              .join(F.broadcast(europe_supp),
-                    F.col("l_suppkey") == F.col("s_suppkey")))
-    best = offers.groupBy("p_partkey").agg(
-        F.min("unit_cost").alias("__min_cost"))
-    return (offers.join(best, "p_partkey")
-            .filter(F.col("unit_cost") == F.col("__min_cost"))
-            .select("p_partkey", "p_name", "s_name", "n_name",
-                    "s_acctbal", "unit_cost")
-            .orderBy(F.desc("s_acctbal"), "p_partkey", "s_name")
-            .limit(100))
-
-
-Q2_ORACLE = """
-WITH europe_supp AS (
-  SELECT s_suppkey, s_name, s_acctbal, n_name
-  FROM supplier JOIN nation ON s_nationkey = n_nationkey
-  JOIN region ON n_regionkey = r_regionkey
-  WHERE r_name = 'EUROPE'),
-target_parts AS (
-  SELECT p_partkey, p_name FROM part
-  WHERE p_size = 10 AND p_type = 'SMALL'),
-unit_cost AS (
-  SELECT l_partkey, l_suppkey,
-         MIN(l_extendedprice / l_quantity) AS unit_cost
-  FROM lineitem GROUP BY l_partkey, l_suppkey),
-offers AS (
-  SELECT p_partkey, p_name, s_name, n_name, s_acctbal, unit_cost
-  FROM unit_cost
-  JOIN target_parts ON l_partkey = p_partkey
-  JOIN europe_supp ON l_suppkey = s_suppkey),
-best AS (SELECT p_partkey, MIN(unit_cost) AS min_cost FROM offers
-         GROUP BY p_partkey)
-SELECT o.p_partkey, p_name, s_name, n_name, s_acctbal, unit_cost
-FROM offers o JOIN best b
-  ON o.p_partkey = b.p_partkey AND o.unit_cost = b.min_cost
-ORDER BY s_acctbal DESC, o.p_partkey, s_name LIMIT 100
-"""
-
-
-def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H-Q8-shaped national market share: NATION_3's share of ASIA
-    customers' PROMO-part revenue per order year.  The share divides
-    two exact DECIMAL sums as doubles — bit-deterministic."""
-    part = _t(spark, sf_dir, "part")
-    supp = _t(spark, sf_dir, "supplier")
-    cust = _t(spark, sf_dir, "customer")
-    nation = _t(spark, sf_dir, "nation")
-    region = _t(spark, sf_dir, "region")
-    orders = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
-
-    cust_asia = (cust
-                 .join(F.broadcast(nation),
-                       F.col("c_nationkey") == F.col("n_nationkey"))
-                 .join(F.broadcast(region.filter(
-                     F.col("r_name") == "ASIA")),
-                     F.col("n_regionkey") == F.col("r_regionkey"))
-                 .select("c_custkey"))
-    supp_n = (supp
-              .join(F.broadcast(nation.select(
-                  F.col("n_nationkey").alias("sn_key"),
-                  F.col("n_name").alias("supp_nation"))),
-                  F.col("s_nationkey") == F.col("sn_key"))
-              .select("s_suppkey", "supp_nation"))
-    rev = F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))
-    base = (li
-            .join(F.broadcast(part.filter(F.col("p_type") == "PROMO")
-                              .select("p_partkey")),
-                  F.col("l_partkey") == F.col("p_partkey"))
-            .join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-            .join(cust_asia, F.col("o_custkey") == F.col("c_custkey"))
-            .join(F.broadcast(supp_n),
-                  F.col("l_suppkey") == F.col("s_suppkey")))
-    return (base.groupBy(F.year("o_orderdate").alias("o_year"))
-            .agg(psum(F.when(F.col("supp_nation") == "NATION_3", rev)
-                      .otherwise(F.lit(0.0))).alias("nation_revenue"),
-                 psum(rev).alias("total_revenue"))
-            .withColumn("mkt_share",
-                        F.col("nation_revenue")
-                        / F.col("total_revenue"))
-            .orderBy("o_year"))
-
-
-Q8_ORACLE = f"""
-SELECT CAST(year(o_orderdate) AS INT) AS o_year,
-       {psum_expr("CASE WHEN sn.n_name = 'NATION_3' THEN "
-                  "l_extendedprice * (1.0 - l_discount) ELSE 0.0 END")}
-         AS nation_revenue,
-       {psum_expr('l_extendedprice * (1.0 - l_discount)')}
-         AS total_revenue,
-       {psum_expr("CASE WHEN sn.n_name = 'NATION_3' THEN "
-                  "l_extendedprice * (1.0 - l_discount) ELSE 0.0 END")}
-         / {psum_expr('l_extendedprice * (1.0 - l_discount)')}
-         AS mkt_share
-FROM lineitem
-JOIN part ON l_partkey = p_partkey AND p_type = 'PROMO'
-JOIN orders ON l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-JOIN nation cn ON c_nationkey = cn.n_nationkey
-JOIN region ON cn.n_regionkey = r_regionkey AND r_name = 'ASIA'
-JOIN supplier ON l_suppkey = s_suppkey
-JOIN nation sn ON s_nationkey = sn.n_nationkey
-GROUP BY 1 ORDER BY 1
-"""
-
-
-def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H-Q9-shaped product-type profit by supplier nation and
-    year, adapted to the driver schema (no partsupp supplycost — the
-    cost side derives from the part's retail price): profit =
-    revenue - 0.5 * p_retailprice * quantity over STANDARD parts."""
-    part = _t(spark, sf_dir, "part")
-    supp = _t(spark, sf_dir, "supplier")
-    nation = _t(spark, sf_dir, "nation")
-    orders = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
-
-    amount = (F.col("l_extendedprice")
-              * (F.lit(1.0) - F.col("l_discount"))
-              - F.lit(0.5) * F.col("p_retailprice")
-              * F.col("l_quantity"))
-    return (li
-            .join(F.broadcast(part.filter(F.col("p_type") == "STANDARD")
-                              .select("p_partkey", "p_retailprice")),
-                  F.col("l_partkey") == F.col("p_partkey"))
-            .join(F.broadcast(supp),
-                  F.col("l_suppkey") == F.col("s_suppkey"))
-            .join(F.broadcast(nation),
-                  F.col("s_nationkey") == F.col("n_nationkey"))
-            .join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-            .groupBy(F.col("n_name").alias("nation"),
-                     F.year("o_orderdate").alias("o_year"))
-            .agg(psum(amount).alias("sum_profit"),
-                 F.count(F.lit(1)).alias("n_items"))
-            .orderBy("nation", F.desc("o_year")))
-
-
-Q9_ORACLE = f"""
-SELECT n_name AS nation, CAST(year(o_orderdate) AS INT) AS o_year,
-       {psum_expr('l_extendedprice * (1.0 - l_discount) '
-                  '- 0.5 * p_retailprice * l_quantity')} AS sum_profit,
-       COUNT(*) AS n_items
-FROM lineitem
-JOIN part ON l_partkey = p_partkey AND p_type = 'STANDARD'
-JOIN supplier ON l_suppkey = s_suppkey
-JOIN nation ON s_nationkey = n_nationkey
-JOIN orders ON l_orderkey = o_orderkey
-GROUP BY 1, 2 ORDER BY nation, o_year DESC
-"""
-
-
 SPECS: list[QuerySpec] = [
-    QuerySpec("q2_min_cost_supplier", q2_min_cost_supplier, Q2_ORACLE,
-              tags=("relational", "join", "correlated")),
-    QuerySpec("q8_market_share", q8_market_share, Q8_ORACLE,
-              tags=("relational", "join", "agg")),
-    QuerySpec("q9_product_profit", q9_product_profit, Q9_ORACLE,
-              tags=("relational", "join", "agg")),
-    QuerySpec("q1_pricing_summary", q1_pricing_summary, Q1_ORACLE,
-              doc="scan+agg flagship", tags=("agg",)),
-    QuerySpec("q3_shipping_priority", q3_shipping_priority, Q3_ORACLE,
-              doc="join+agg+topk", tags=("join",)),
-    QuerySpec("q5_local_supplier_volume", q5_local_supplier_volume, Q5_ORACLE,
-              doc="star join", tags=("join",)),
-    QuerySpec("q7_nation_volume", q7_nation_volume, Q7_ORACLE,
-              doc="two-dimension volume join", tags=("join",)),
-    QuerySpec("q10_returned_items", q10_returned_items, Q10_ORACLE,
-              doc="returned-items topk", tags=("join",)),
-    QuerySpec("q14_promo_revenue_share", q14_promo_revenue_share, Q14_ORACLE,
-              doc="promo share ratio", tags=("join",)),
-    QuerySpec("q6_forecast_revenue", q6_forecast_revenue, Q6_ORACLE,
-              doc="pushdown filter agg", tags=("agg",)),
-    QuerySpec("q18_large_orders", q18_large_orders, Q18_ORACLE,
-              doc="having semi-join topk", tags=("join",)),
-    QuerySpec("q4_order_priority", q4_order_priority, Q4_ORACLE,
-              doc="EXISTS semi-join", tags=("join",)),
-    QuerySpec("q12_priority_linestatus", q12_priority_linestatus,
-              Q12_ORACLE, doc="case-sum fact-fact join", tags=("join",)),
-    QuerySpec("q16_supplier_counts", q16_supplier_counts, Q16_ORACLE,
-              doc="anti-join + count-distinct", tags=("join",)),
-    QuerySpec("q13_customer_distribution", q13_customer_distribution,
-              Q13_ORACLE, doc="outer-join histogram", tags=("join", "agg")),
-    QuerySpec("q17_small_quantity_revenue", q17_small_quantity_revenue,
-              Q17_ORACLE, doc="correlated-average filter",
-              tags=("join", "agg")),
-    QuerySpec("q19_disjunctive_pushdown", q19_disjunctive_pushdown,
-              Q19_ORACLE, doc="OR-of-conjunctions filter", tags=("scan",)),
-    QuerySpec("q21_waiting_suppliers", q21_waiting_suppliers, Q21_ORACLE,
-              doc="EXISTS + NOT EXISTS pair", tags=("join",)),
-    QuerySpec("q22_dormant_customers", q22_dormant_customers, Q22_ORACLE,
-              doc="global-average anti-join", tags=("join", "agg")),
-    QuerySpec("q11_important_stock", q11_important_stock, Q11_ORACLE,
-              doc="share-of-total HAVING", tags=("agg",)),
-    QuerySpec("q15_top_supplier", q15_top_supplier, Q15_ORACLE,
-              doc="revenue view + rank-1 max", tags=("agg", "window")),
-    QuerySpec("q20_excess_shippers", q20_excess_shippers, Q20_ORACLE,
-              doc="nested semi-join", tags=("join",)),
     QuerySpec("asof1_config_at_event_time", asof1_config_at_event_time,
-              ASOF1_ORACLE, doc="as-of point-in-time join",
-              tags=("join", "window")),
-    QuerySpec("rj1_events_in_windows", rj1_events_in_windows, RJ1_ORACLE,
-              doc="bucketed range join", tags=("join",)),
-    QuerySpec("hr1_hypertable_rollup", hr1_hypertable_rollup, HR1_ORACLE,
-              doc="hierarchical continuous aggregate", tags=("agg",)),
-    QuerySpec("s1_prefix_listing", s1_prefix_listing, S1_ORACLE, tags=("scan",)),
-    QuerySpec("s2_point_lookup", s2_point_lookup, S2_ORACLE, tags=("scan",)),
+              ASOF1_ORACLE),
+    QuerySpec("rj1_events_in_windows", rj1_events_in_windows, RJ1_ORACLE),
+    QuerySpec("hr1_hypertable_rollup", hr1_hypertable_rollup, HR1_ORACLE),
+    QuerySpec("s1_prefix_listing", s1_prefix_listing, S1_ORACLE),
+    QuerySpec("s2_point_lookup", s2_point_lookup, S2_ORACLE),
     QuerySpec("s3_subject_version_lookup", s3_subject_version_lookup,
-              S3_ORACLE, tags=("scan",)),
-    QuerySpec("s4_fingerprint_lookup", s4_fingerprint_lookup, S4_ORACLE,
-              tags=("scan",)),
-    QuerySpec("s5_distinct_listing", s5_distinct_listing, S5_ORACLE,
-              tags=("scan",)),
-    QuerySpec("p1_live_view", p1_live_view, P1_ORACLE, tags=("filter",)),
-    QuerySpec("p4_status_split", p4_status_split, P4_ORACLE, tags=("filter",)),
+              S3_ORACLE),
+    QuerySpec("s4_fingerprint_lookup", s4_fingerprint_lookup, S4_ORACLE),
+    QuerySpec("s5_distinct_listing", s5_distinct_listing, S5_ORACLE),
+    QuerySpec("p1_live_view", p1_live_view, P1_ORACLE),
+    QuerySpec("p4_status_split", p4_status_split, P4_ORACLE),
     QuerySpec("p5_metadata_property_filter", p5_metadata_property_filter,
-              P5_ORACLE, tags=("filter",)),
-    QuerySpec("j1_referenced_by", j1_referenced_by, J1_ORACLE, tags=("join",)),
-    QuerySpec("j3_multilevel_resolution", j3_multilevel_resolution, J3_ORACLE,
-              tags=("join",)),
-    QuerySpec("j6_config_fallback", j6_config_fallback, J6_ORACLE,
-              tags=("join",)),
-    QuerySpec("j7_dedup_anti_join", j7_dedup_anti_join, J7_ORACLE,
-              tags=("join",)),
-    QuerySpec("a1_versions_view", a1_versions_view, A1_ORACLE, tags=("agg",)),
-    QuerySpec("a4_registry_statistics", a4_registry_statistics, A4_ORACLE,
-              tags=("agg",)),
-    QuerySpec("a5_field_patterns", a5_field_patterns, A5_ORACLE, tags=("agg",)),
-    QuerySpec("a6_type_consistency", a6_type_consistency, A6_ORACLE,
-              tags=("agg",)),
-    QuerySpec("a8_quality_scores", a8_quality_scores, A8_ORACLE, tags=("agg",)),
-    QuerySpec("a9_complexity", a9_complexity, A9_ORACLE, tags=("agg",)),
-    QuerySpec("a10_event_metrics", a10_event_metrics, A10_ORACLE,
-              tags=("agg",)),
-    QuerySpec("w1_latest_per_subject", w1_latest_per_subject, W1_ORACLE,
-              tags=("window",)),
-    QuerySpec("w3_content_addressed_ids", w3_content_addressed_ids, W3_ORACLE,
-              tags=("window",)),
-    QuerySpec("w5_prior_version_delta", w5_prior_version_delta, W5_ORACLE,
-              tags=("window",)),
+              P5_ORACLE),
+    QuerySpec("j1_referenced_by", j1_referenced_by, J1_ORACLE),
+    QuerySpec("j3_multilevel_resolution", j3_multilevel_resolution, J3_ORACLE),
+    QuerySpec("j6_config_fallback", j6_config_fallback, J6_ORACLE),
+    QuerySpec("j7_dedup_anti_join", j7_dedup_anti_join, J7_ORACLE),
+    QuerySpec("a1_versions_view", a1_versions_view, A1_ORACLE),
+    QuerySpec("a4_registry_statistics", a4_registry_statistics, A4_ORACLE),
+    QuerySpec("a5_field_patterns", a5_field_patterns, A5_ORACLE),
+    QuerySpec("a6_type_consistency", a6_type_consistency, A6_ORACLE),
+    QuerySpec("a8_quality_scores", a8_quality_scores, A8_ORACLE),
+    QuerySpec("a9_complexity", a9_complexity, A9_ORACLE),
+    QuerySpec("a10_event_metrics", a10_event_metrics, A10_ORACLE),
+    QuerySpec("w1_latest_per_subject", w1_latest_per_subject, W1_ORACLE),
+    QuerySpec("w3_content_addressed_ids", w3_content_addressed_ids, W3_ORACLE),
+    QuerySpec("w5_prior_version_delta", w5_prior_version_delta, W5_ORACLE),
     QuerySpec("o2_deterministic_pagination", o2_deterministic_pagination,
-              O2_ORACLE, tags=("sort",)),
-    QuerySpec("e1_schema_diff", e1_schema_diff, E1_ORACLE, tags=("setop",)),
-    QuerySpec("e2_subject_compare", e2_subject_compare, E2_ORACLE,
-              tags=("setop",)),
-    QuerySpec("e3_similarity_selfjoin", e3_similarity_selfjoin, E3_ORACLE,
-              tags=("setop",)),
-    QuerySpec("e5_union_segments", e5_union_segments, E5_ORACLE,
-              tags=("setop",)),
-    QuerySpec("f2_regex_search", f2_regex_search, F2_ORACLE, tags=("string",)),
-    QuerySpec("f3_glob_search", f3_glob_search, F3_ORACLE, tags=("string",)),
-    QuerySpec("f5_normalize_names", f5_normalize_names, F5_ORACLE,
-              tags=("string",)),
-    QuerySpec("f7_fuzzy_match", f7_fuzzy_match, F7_ORACLE, tags=("string",)),
-    QuerySpec("f10_global_fingerprint", f10_global_fingerprint, F10_ORACLE,
-              tags=("string",)),
+              O2_ORACLE),
+    QuerySpec("e1_schema_diff", e1_schema_diff, E1_ORACLE),
+    QuerySpec("e2_subject_compare", e2_subject_compare, E2_ORACLE),
+    QuerySpec("e3_similarity_selfjoin", e3_similarity_selfjoin, E3_ORACLE),
+    QuerySpec("e5_union_segments", e5_union_segments, E5_ORACLE),
+    QuerySpec("f2_regex_search", f2_regex_search, F2_ORACLE),
+    QuerySpec("f3_glob_search", f3_glob_search, F3_ORACLE),
+    QuerySpec("f5_normalize_names", f5_normalize_names, F5_ORACLE),
+    QuerySpec("f7_fuzzy_match", f7_fuzzy_match, F7_ORACLE),
+    QuerySpec("f10_global_fingerprint", f10_global_fingerprint, F10_ORACLE),
     QuerySpec("f14_subject_name_strategy", f14_subject_name_strategy,
-              F14_ORACLE, tags=("string",)),
+              F14_ORACLE),
     QuerySpec("j2_subjects_by_fingerprint", j2_subjects_by_fingerprint,
-              J2_ORACLE, tags=("join",)),
-    QuerySpec("j9_alias_resolution", j9_alias_resolution, J9_ORACLE,
-              tags=("join",)),
-    QuerySpec("e4_migration_plan", e4_migration_plan, E4_ORACLE,
-              tags=("setop",)),
-    QuerySpec("f1_substring_search", f1_substring_search, F1_ORACLE,
-              tags=("string",)),
-    QuerySpec("f6_naming_variants", f6_naming_variants, F6_ORACLE,
-              tags=("string",)),
+              J2_ORACLE),
+    QuerySpec("j9_alias_resolution", j9_alias_resolution, J9_ORACLE),
+    QuerySpec("e4_migration_plan", e4_migration_plan, E4_ORACLE),
+    QuerySpec("f1_substring_search", f1_substring_search, F1_ORACLE),
+    QuerySpec("f6_naming_variants", f6_naming_variants, F6_ORACLE),
     QuerySpec("w2_listing_with_latest_flag", w2_listing_with_latest_flag,
-              W2_ORACLE, tags=("window",)),
-    QuerySpec("a3_global_id_stats", a3_global_id_stats, A3_ORACLE,
-              tags=("agg",)),
-    QuerySpec("a4c_cube_statistics", a4c_cube_statistics, A4C_ORACLE,
-              tags=("agg",)),
+              W2_ORACLE),
+    QuerySpec("a3_global_id_stats", a3_global_id_stats, A3_ORACLE),
+    QuerySpec("a4c_cube_statistics", a4c_cube_statistics, A4C_ORACLE),
 ]

@@ -397,16 +397,13 @@ SELECT actor_id, event_id, allowed, tokens_after FROM fold
 
 
 SPECS: list[QuerySpec] = [
-    QuerySpec("st2_filtered_cef_lines", st2_filtered_cef_lines, ST2_ORACLE,
-              tags=("streaming",)),
-    QuerySpec("st9_token_bucket", st9_token_bucket, ST9_ORACLE,
-              tags=("streaming", "stateful")),
+    QuerySpec("st2_filtered_cef_lines", st2_filtered_cef_lines, ST2_ORACLE),
+    QuerySpec("st9_token_bucket", st9_token_bucket, ST9_ORACLE),
     QuerySpec("aud3_request_classification", aud3_request_classification,
-              AUD3_ORACLE, tags=("streaming", "audit", "agg")),
+              AUD3_ORACLE),
     QuerySpec("aud2_event_type_analytics", aud2_event_type_analytics,
-              AUD2_ORACLE, tags=("streaming", "registry")),
-    QuerySpec("st6_rate_limit_flags", st6_rate_limit_flags, ST6_ORACLE,
-              tags=("streaming",)),
+              AUD2_ORACLE),
+    QuerySpec("st6_rate_limit_flags", st6_rate_limit_flags, ST6_ORACLE),
     QuerySpec("st8_exporter_filter_rename", st8_exporter_filter_rename,
-              ST8_ORACLE, tags=("streaming", "registry")),
+              ST8_ORACLE),
 ]

@@ -13,9 +13,8 @@ from __future__ import annotations
 
 import pytest
 
-# Multi-epoch store-lifecycle / stream-fuzz scale suite: driver-window
-# opt-in (see pytest.ini); run with `pytest -m slow`.
-pytestmark = pytest.mark.slow
+# Multi-epoch store-lifecycle / stream-fuzz scale suite: every test but
+# one smoke test is slow-marked (see pytest.ini; run with `pytest -m slow`).
 
 import json
 import os
@@ -67,6 +66,7 @@ def _batch_buckets(spark, corpus):
                              planes)
 
 
+@pytest.mark.slow
 def test_store_buckets_equal_batch_any_order(spark, tmp_path):
     """Three interleaved non-id-ordered batches: the stored index
     equals the one-shot batch bucketing over the union — the
@@ -81,6 +81,7 @@ def test_store_buckets_equal_batch_any_order(spark, tmp_path):
         _batch_buckets(spark, corpus))
 
 
+@pytest.mark.slow
 def test_lookup_equals_batch_ann(spark, tmp_path):
     from axonops_schema_registry_spark.llm.similarity import (
         lsh_ann_topk_portable,
@@ -103,6 +104,7 @@ def test_lookup_equals_batch_ann(spark, tmp_path):
                                    multiprobe=True)) == wantm
 
 
+@pytest.mark.slow
 def test_compact_preserves_lookup_and_bounds_partitions(
         spark, tmp_path):
     """Fold epochs below the watermark into a generation base: lookup
@@ -136,6 +138,7 @@ def test_compact_preserves_lookup_and_bounds_partitions(
     assert os.path.isdir(os.path.join(d, "ann_buckets_base", "g1"))
 
 
+@pytest.mark.slow
 def test_replay_is_idempotent_and_reopen_serves_same_planes(
         spark, tmp_path):
     corpus = _corpus(spark)
@@ -155,6 +158,7 @@ def test_replay_is_idempotent_and_reopen_serves_same_planes(
         store.planes.select("g"))
 
 
+@pytest.mark.slow
 def test_params_pin_refuses_mismatch_and_corruption(spark, tmp_path):
     corpus = _corpus(spark)
     d = str(tmp_path / "s")
@@ -176,11 +180,13 @@ def test_params_pin_refuses_mismatch_and_corruption(spark, tmp_path):
         AnnIndexStore(spark, d, calibration=corpus, n_bits=4)
 
 
+@pytest.mark.slow
 def test_new_store_without_calibration_refuses(spark, tmp_path):
     with pytest.raises(RuntimeError, match="calibration"):
         AnnIndexStore(spark, str(tmp_path / "s"))
 
 
+@pytest.mark.slow
 def test_foreachbatch_wiring_stream_equals_batch(spark, tmp_path):
     """End-to-end: a structured-streaming file source delivers the
     corpus as three files through a real foreachBatch query targeting
@@ -240,6 +246,7 @@ def _batch_topk_fixed_planes(full_corpus, net_corpus, queries, k=5):
     return _exact_rerank(cand, queries, net_corpus, k, 4)
 
 
+@pytest.mark.slow
 def test_delete_resurrect_and_compact_consumes_tombstones(
         spark, tmp_path):
     """Deletion lifecycle (r18): a tombstone at epoch T kills inserts
@@ -287,6 +294,7 @@ def test_delete_resurrect_and_compact_consumes_tombstones(
     assert _rows(re.lookup_topk(queries, k=5)) == want3
 
 
+# Not slow-marked: the default gate's smoke test of this module.
 def test_delete_watermark_guard(spark, tmp_path):
     corpus = _corpus(spark)
     store = AnnIndexStore(spark, str(tmp_path / "s"),
@@ -297,6 +305,7 @@ def test_delete_watermark_guard(spark, tmp_path):
         store.delete_ids(corpus.select("corpus_id").limit(1), 0)
 
 
+@pytest.mark.slow
 def test_fuzz_random_splits_and_deletes_equal_batch(spark, tmp_path):
     """Seeded fuzz (the new-op convention): random batch assignments,
     random arrival order, and a random delete set — the store equals
@@ -330,6 +339,7 @@ def test_fuzz_random_splits_and_deletes_equal_batch(spark, tmp_path):
             f"trial {trial}: n_ep={n_ep} order={order} dead={dead}")
 
 
+@pytest.mark.slow
 def test_compact_crash_orphan_is_invisible_and_overwritten(
         spark, tmp_path):
     """The _EpochStore commit order under a simulated crash: a base
@@ -362,6 +372,7 @@ def test_compact_crash_orphan_is_invisible_and_overwritten(
     shutil.rmtree(d)
 
 
+@pytest.mark.slow
 def test_empty_store_reads(spark, tmp_path):
     corpus = _corpus(spark)
     store = AnnIndexStore(spark, str(tmp_path / "s"),

@@ -20,9 +20,8 @@ from __future__ import annotations
 
 import pytest
 
-# Multi-epoch store-lifecycle / stream-fuzz scale suite: driver-window
-# opt-in (see pytest.ini); run with `pytest -m slow`.
-pytestmark = pytest.mark.slow
+# Multi-epoch store-lifecycle / stream-fuzz scale suite: every test but
+# one smoke test is slow-marked (see pytest.ini; run with `pytest -m slow`).
 
 import hashlib
 
@@ -92,6 +91,7 @@ def _epochs(rows, n=4):
             for k in range(n)]
 
 
+@pytest.mark.slow
 def test_ccnet_stream_equals_batch_with_restart_and_replay(
         spark, tmp_path):
     """The capstone pin: aggregated per-epoch receipts equal the
@@ -143,6 +143,7 @@ def test_ccnet_stream_equals_batch_with_restart_and_replay(
     assert got2 == wrows
 
 
+@pytest.mark.slow
 def test_ccnet_fixture_orderings_hold():
     """The fixture's two planned preconditions, asserted directly so
     a fixture edit cannot silently void the capstone equality."""
@@ -161,6 +162,7 @@ def test_ccnet_fixture_orderings_hold():
         assert epoch_of[a] <= epoch_of[b]
 
 
+@pytest.mark.slow
 def test_ccnet_order_report_detects_violations(spark, tmp_path):
     """The arrival-order guard: an ordered feed reports every epoch
     OK; feeding the same two batches REVERSED flags the late epoch on
@@ -206,6 +208,7 @@ def test_ccnet_order_report_detects_violations(spark, tmp_path):
     assert got != want
 
 
+@pytest.mark.slow
 def test_ccnet_stream_foreachbatch_wiring(spark, tmp_path):
     """End-to-end wiring: a structured-streaming file source delivers
     the planted corpus as two hash-ordered files through a real
@@ -254,6 +257,7 @@ def test_ccnet_stream_foreachbatch_wiring(spark, tmp_path):
     assert all(r.admission_order_ok and r.line_order_ok for r in rep)
 
 
+@pytest.mark.slow
 def test_manifest_order_audit_polarities(spark):
     """The batch pre-flight audit on the planted corpus: stamping
     epochs by the fixture's hash cuts passes BOTH legs everywhere
@@ -288,6 +292,7 @@ def test_manifest_order_audit_polarities(spark):
     assert not line_ok and n_late == len(cross)
 
 
+@pytest.mark.slow
 def test_ccnet_stream_seeded_fuzz(spark, tmp_path):
     """Seeded random corpora through the same two-precondition
     construction (random language mix, doc lengths, planted-dup
@@ -350,6 +355,7 @@ def test_ccnet_stream_seeded_fuzz(spark, tmp_path):
                    for r in rep), f"trial {trial} order flags"
 
 
+# Not slow-marked: the default gate's smoke test of this module.
 def test_order_safe_manifest_fixes_unsafe_corpus(spark):
     """The constructive complement: the planted corpus with reversed
     stamps FAILS the audit (shown above), but order_safe_manifest

@@ -16,9 +16,8 @@ from __future__ import annotations
 
 import pytest
 
-# Multi-epoch store-lifecycle / stream-fuzz scale suite: driver-window
-# opt-in (see pytest.ini); run with `pytest -m slow`.
-pytestmark = pytest.mark.slow
+# Multi-epoch store-lifecycle / stream-fuzz scale suite: every test but
+# one smoke test is slow-marked (see pytest.ini; run with `pytest -m slow`).
 
 import os
 import random
@@ -64,6 +63,7 @@ def _two_stores(spark, batches):
     return stores, dirs
 
 
+@pytest.mark.slow
 def test_incremental_equals_full_reflag_and_batch(spark):
     """The deterministic scenario from the full-reflag test: epoch 0
     carries larger ids (near-dup pair + distincts), epoch 1 backfills
@@ -110,6 +110,7 @@ def test_incremental_equals_full_reflag_and_batch(spark):
             shutil.rmtree(d, ignore_errors=True)
 
 
+# Not slow-marked: the default gate's smoke test of this module.
 def test_incremental_reflag_preconditions(spark):
     b0 = _docs(spark, [(5, _distinct(5))])
     d = tempfile.mkdtemp(prefix="rfi_pre_")
@@ -124,6 +125,7 @@ def test_incremental_reflag_preconditions(spark):
         shutil.rmtree(d, ignore_errors=True)
 
 
+@pytest.mark.slow
 @pytest.mark.parametrize("seed", [11, 23, 47])
 def test_incremental_equals_full_on_random_out_of_order(spark, seed):
     """Seeded random corpora: identical-text groups (rep re-keys),
@@ -172,6 +174,7 @@ def test_incremental_equals_full_on_random_out_of_order(spark, seed):
             shutil.rmtree(d, ignore_errors=True)
 
 
+@pytest.mark.slow
 def test_two_successive_incremental_repairs(spark):
     """Repairs stack: a second out-of-order wave after the first
     repair commits a second overlay (later overrides earlier), still
@@ -214,6 +217,7 @@ def _u(*xs):
     return [float(x) for x in xs]
 
 
+@pytest.mark.slow
 def test_embedding_incremental_equals_full_reflag_and_batch(spark):
     """Embedding twin of the deterministic scenario: epoch 0 carries
     larger ids (a cosine near-pair + distincts), epoch 1 backfills
@@ -274,6 +278,7 @@ def test_embedding_incremental_equals_full_reflag_and_batch(spark):
             shutil.rmtree(d, ignore_errors=True)
 
 
+@pytest.mark.slow
 @pytest.mark.parametrize("seed", [5, 19])
 def test_embedding_incremental_random_out_of_order(spark, seed):
     import math
@@ -329,6 +334,7 @@ def test_embedding_incremental_random_out_of_order(spark, seed):
             shutil.rmtree(d, ignore_errors=True)
 
 
+@pytest.mark.slow
 def test_orphan_repair_dir_is_invisible_and_overwritten(spark):
     """Crash-safety of the repair commit: deltas are fully written to
     repairs/r<n> BEFORE meta.json advances nrep, so a crash in between
@@ -388,6 +394,7 @@ def _far(tag_a: str, tag_b: str) -> str:
 _CAP_KW = dict(n_hashes=2, bands=1, max_bucket=1)
 
 
+@pytest.mark.slow
 def test_capped_incremental_planted_eviction_withdrawal(spark):
     """The withdrawal case the r11 guard existed to avoid, now handled:
     a late SMALLER id lands in the one bucket that generated a stored
@@ -435,6 +442,7 @@ def test_capped_incremental_planted_eviction_withdrawal(spark):
             shutil.rmtree(d, ignore_errors=True)
 
 
+@pytest.mark.slow
 def test_capped_incremental_rekey_eviction(spark):
     """Re-key-driven ranking shift: a late doc byte-identical to the
     stored verdict's dup_of re-keys 10 → 5; in every shared bucket 5
@@ -463,6 +471,7 @@ def test_capped_incremental_rekey_eviction(spark):
             shutil.rmtree(d, ignore_errors=True)
 
 
+@pytest.mark.slow
 @pytest.mark.parametrize("seed", [3, 31, 59])
 def test_capped_incremental_random_equals_capped_full(spark, seed):
     """Seeded random out-of-order corpora on max_bucket=2 stores with
@@ -511,6 +520,7 @@ def test_capped_incremental_random_equals_capped_full(spark, seed):
             shutil.rmtree(d, ignore_errors=True)
 
 
+@pytest.mark.slow
 def test_embedding_capped_incremental_planted_eviction(spark):
     """Embedding twin of the planted withdrawal: one 1-bit hyperplane
     table puts the low-cosine late vector (searched offline, pinned by
@@ -559,6 +569,7 @@ def test_embedding_capped_incremental_planted_eviction(spark):
             shutil.rmtree(d, ignore_errors=True)
 
 
+@pytest.mark.slow
 @pytest.mark.parametrize("seed", [7, 41])
 def test_embedding_capped_incremental_random(spark, seed):
     import math
@@ -616,6 +627,7 @@ def test_embedding_capped_incremental_random(spark, seed):
 # the exact set
 # ---------------------------------------------------------------------------
 
+@pytest.mark.slow
 def test_repair_rejects_omitted_late_epoch(spark):
     b0 = _docs(spark, [(20, _near("pA")), (21, _distinct(21))])
     b1 = _docs(spark, [(10, _near("pA"))])      # late
@@ -638,6 +650,7 @@ def test_repair_rejects_omitted_late_epoch(spark):
         shutil.rmtree(d, ignore_errors=True)
 
 
+@pytest.mark.slow
 def test_repair_derives_late_set_when_none(spark):
     """late_epochs=None (the recommended call) derives the exact
     outstanding set and matches the full reflag; ordered stores
@@ -659,6 +672,7 @@ def test_repair_derives_late_set_when_none(spark):
             shutil.rmtree(d, ignore_errors=True)
 
 
+@pytest.mark.slow
 def test_ordered_store_derives_empty_even_after_replay(spark):
     """Per-epoch (min, max) entries — not a running max — so an
     at-least-once REPLAY of an epoch cannot fake lateness: the epoch's
@@ -679,6 +693,7 @@ def test_ordered_store_derives_empty_even_after_replay(spark):
         shutil.rmtree(d, ignore_errors=True)
 
 
+@pytest.mark.slow
 def test_compacting_unrepaired_late_epoch_disables_bounded_repair(spark):
     """A compact that folds an unrepaired late epoch bakes the stale
     verdicts into the base — the bounded repair must refuse from then
@@ -710,6 +725,7 @@ def test_compacting_unrepaired_late_epoch_disables_bounded_repair(spark):
         shutil.rmtree(d, ignore_errors=True)
 
 
+@pytest.mark.slow
 def test_embedding_store_tracks_late_epochs_too(spark):
     from axonops_schema_registry_spark.streaming.dedup_store import (
         EmbeddingDedupStore,
@@ -734,6 +750,7 @@ def test_embedding_store_tracks_late_epochs_too(spark):
         shutil.rmtree(d, ignore_errors=True)
 
 
+@pytest.mark.slow
 def test_hint_created_store_full_maintenance_lifecycle(spark):
     """VERDICT r11 ask #6: an EmbeddingDedupStore created through the
     expected_corpus constructor path (bits derived, not literal) runs
@@ -803,6 +820,7 @@ def test_hint_created_store_full_maintenance_lifecycle(spark):
         shutil.rmtree(d, ignore_errors=True)
 
 
+@pytest.mark.slow
 def test_capped_stacked_repairs_and_compact(spark):
     """Two out-of-order waves on a max_bucket store: the second capped
     repair runs ON TOP of the first delta (re-keyed views, rank
@@ -850,6 +868,7 @@ def test_capped_stacked_repairs_and_compact(spark):
             shutil.rmtree(d, ignore_errors=True)
 
 
+@pytest.mark.slow
 def test_untracked_legacy_epoch_refuses_derived_repair(spark):
     """ADVICE r12: a live NON-EMPTY epoch with no emm entry (a
     pre-tracking legacy store, simulated by stripping the entry from
@@ -884,6 +903,7 @@ def test_untracked_legacy_epoch_refuses_derived_repair(spark):
         shutil.rmtree(d, ignore_errors=True)
 
 
+@pytest.mark.slow
 def test_untracked_epoch_full_reflag_escape_hatch(spark):
     """Escape hatch 2 for the legacy-epoch refusal: one full reflag()
     rewrites every verdict (no emm needed), and after compaction folds
@@ -912,6 +932,7 @@ def test_untracked_epoch_full_reflag_escape_hatch(spark):
         shutil.rmtree(d, ignore_errors=True)
 
 
+@pytest.mark.slow
 def test_empty_epoch_partition_does_not_trigger_refusal(spark):
     """A genuinely EMPTY micro-batch writes a schema-only partition
     and records no emm entry by design — the one-row probe must not
@@ -930,6 +951,7 @@ def test_empty_epoch_partition_does_not_trigger_refusal(spark):
         shutil.rmtree(d, ignore_errors=True)
 
 
+@pytest.mark.slow
 def test_compacting_untracked_epoch_disables_bounded_repair(spark):
     """Compaction-side of the ADVICE r12 legacy hole: folding a
     non-empty UNTRACKED epoch erases the last evidence that it ever

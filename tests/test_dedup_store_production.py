@@ -14,9 +14,8 @@ from __future__ import annotations
 
 import pytest
 
-# Multi-epoch store-lifecycle / stream-fuzz scale suite: driver-window
-# opt-in (see pytest.ini); run with `pytest -m slow`.
-pytestmark = pytest.mark.slow
+# Multi-epoch store-lifecycle / stream-fuzz scale suite: every test but
+# one smoke test is slow-marked (see pytest.ini; run with `pytest -m slow`).
 
 import os
 import shutil
@@ -54,6 +53,7 @@ def _flags_dict(df) -> dict:
     return {r.doc_id: (r.is_dup, r.dup_of) for r in df.collect()}
 
 
+@pytest.mark.slow
 def test_bucketed_store_all_flags_across_restart(spark):
     """The DEFAULT construction (track_flags off) accumulates nothing
     on the driver; all_flags() — read by a SECOND store instance over
@@ -81,6 +81,7 @@ def test_bucketed_store_all_flags_across_restart(spark):
         shutil.rmtree(d, ignore_errors=True)
 
 
+@pytest.mark.slow
 def test_embedding_store_all_flags_across_restart(spark):
     vecs = [(100, [1.0, 0.0, 0.0, 0.0]), (101, [0.0, 1.0, 0.0, 0.0]),
             (102, [0.0, 0.0, 1.0, 0.0])]
@@ -107,6 +108,7 @@ def test_embedding_store_all_flags_across_restart(spark):
         shutil.rmtree(d, ignore_errors=True)
 
 
+@pytest.mark.slow
 def test_bucketed_store_reflag_repairs_out_of_order(spark):
     """A backfilled epoch carrying SMALLER ids than stored documents
     leaves stale first-wins verdicts (the store cannot flip flags it
@@ -176,6 +178,7 @@ def test_bucketed_store_reflag_repairs_out_of_order(spark):
         shutil.rmtree(d, ignore_errors=True)
 
 
+@pytest.mark.slow
 def test_embedding_store_reflag_repairs_out_of_order(spark):
     b0 = spark.createDataFrame(
         [(100, [1.0, 0.0, 0.0, 0.0]), (101, [0.0, 1.0, 0.0, 0.0]),
@@ -205,6 +208,7 @@ def test_embedding_store_reflag_repairs_out_of_order(spark):
         shutil.rmtree(d, ignore_errors=True)
 
 
+@pytest.mark.slow
 def test_reflag_enforces_quiescence(spark):
     """reflag's docstring precondition is enforced, not advisory: a
     live epoch at-or-above below_epoch raises instead of silently
@@ -223,6 +227,7 @@ def test_reflag_enforces_quiescence(spark):
         shutil.rmtree(d, ignore_errors=True)
 
 
+@pytest.mark.slow
 def test_compact_raises_on_partial_layout(spark):
     """compact() must not silently no-op forever on a store whose
     layout predates the fps/flags tables (or lost a directory): data
@@ -238,6 +243,7 @@ def test_compact_raises_on_partial_layout(spark):
         shutil.rmtree(d, ignore_errors=True)
 
 
+@pytest.mark.slow
 def test_max_bucket_caps_candidates_and_keeps_first_wins(spark):
     """The hot-bucket rank cap: on a near-identical (but not
     byte-identical, so the exact-collapse guard cannot help) corpus,
@@ -275,6 +281,7 @@ def test_max_bucket_caps_candidates_and_keeps_first_wins(spark):
             shutil.rmtree(p, ignore_errors=True)
 
 
+@pytest.mark.slow
 def test_incremental_sink_flags_dir_disk_path(spark):
     """IncrementalDedupSink with flags_dir (and NO driver dict): the
     per-epoch verdict parquet equals the batch operator, replay of an
@@ -302,6 +309,7 @@ def test_incremental_sink_flags_dir_disk_path(spark):
         shutil.rmtree(d, ignore_errors=True)
 
 
+@pytest.mark.slow
 def test_curation_sink_results_dir_disk_path(spark):
     """CurationSink with results_dir and a store_dir — the all-disk
     production shape: nothing accumulates on the driver, all_results()
@@ -342,6 +350,7 @@ def test_curation_sink_results_dir_disk_path(spark):
             shutil.rmtree(p, ignore_errors=True)
 
 
+@pytest.mark.slow
 def test_embedding_store_max_bucket_cap(spark):
     """The embedding twin's hot-bucket cap: near-identical-but-
     byte-distinct vectors (the case the fingerprint collapse cannot
@@ -375,6 +384,7 @@ def test_embedding_store_max_bucket_cap(spark):
             shutil.rmtree(p, ignore_errors=True)
 
 
+@pytest.mark.slow
 def test_store_params_pinned_across_restart(spark):
     """The signature parameters are written on first ingest and a
     reopen with DIFFERENT values fails loudly — silently mismatched
@@ -399,6 +409,7 @@ def test_store_params_pinned_across_restart(spark):
         shutil.rmtree(d, ignore_errors=True)
 
 
+@pytest.mark.slow
 def test_embedding_store_params_pinned(spark):
     """The embedding twin pins (threshold, dim, n_bits, n_tables,
     seed0) — a reopen with different planes would bucket new vectors
@@ -423,6 +434,7 @@ def test_embedding_store_params_pinned(spark):
         shutil.rmtree(d, ignore_errors=True)
 
 
+# Not slow-marked: the default gate's smoke test of this module.
 def test_store_params_corrupt_file_fails_loudly(spark):
     """A present-but-unreadable params.json is store corruption, not
     'no params yet' — the same discipline as the corrupt-meta guard."""
@@ -439,6 +451,7 @@ def test_store_params_corrupt_file_fails_loudly(spark):
         shutil.rmtree(d, ignore_errors=True)
 
 
+@pytest.mark.slow
 def test_legacy_store_without_params_refuses_auto_pin(spark):
     """A store that holds data but no params.json (created before
     parameter pinning existed) must NOT silently adopt the current
@@ -471,6 +484,7 @@ def test_legacy_store_without_params_refuses_auto_pin(spark):
         shutil.rmtree(d, ignore_errors=True)
 
 
+@pytest.mark.slow
 def test_empty_dir_still_auto_pins(spark):
     """The legacy guard keys on DATA, not on the directory existing:
     a pre-created empty store_dir (mkdtemp, a mounted volume) is a
@@ -484,6 +498,7 @@ def test_empty_dir_still_auto_pins(spark):
         shutil.rmtree(d, ignore_errors=True)
 
 
+@pytest.mark.slow
 def test_embedding_store_expected_corpus_sizes_bits(spark):
     """VERDICT r10 ask #5: since params.json pins n_bits forever at
     first ingest, the constructor must offer the occupancy-targeted

@@ -16,9 +16,8 @@ from __future__ import annotations
 
 import pytest
 
-# Multi-epoch store-lifecycle / stream-fuzz scale suite: driver-window
-# opt-in (see pytest.ini); run with `pytest -m slow`.
-pytestmark = pytest.mark.slow
+# Multi-epoch store-lifecycle / stream-fuzz scale suite: every test but
+# one smoke test is slow-marked (see pytest.ini; run with `pytest -m slow`).
 
 import random
 import shutil
@@ -55,6 +54,7 @@ def _got(store):
             for r in store.all_results().collect()}
 
 
+@pytest.mark.slow
 def test_line_store_ordered_arrival_equals_batch(spark):
     """In-id-order epochs: the store's union of outputs IS the batch
     answer with no repair at all, and re-delivering an epoch against
@@ -76,6 +76,7 @@ def test_line_store_ordered_arrival_equals_batch(spark):
         shutil.rmtree(d, ignore_errors=True)
 
 
+@pytest.mark.slow
 def test_line_store_out_of_order_repair_equals_batch(spark):
     """A late epoch carrying SMALLER doc ids: before repair the
     arrival-first keepers hold the duplicated blocks (sink semantics);
@@ -103,6 +104,7 @@ def test_line_store_out_of_order_repair_equals_batch(spark):
         shutil.rmtree(d, ignore_errors=True)
 
 
+@pytest.mark.slow
 def test_line_store_foreachbatch_out_of_order_stream(spark, tmp_path):
     """End-to-end wiring: a structured-streaming file source delivers
     the HIGH-id file first and the low-id file second (out-of-order
@@ -138,6 +140,7 @@ def test_line_store_foreachbatch_out_of_order_stream(spark, tmp_path):
     assert _got(store) == want
 
 
+@pytest.mark.slow
 def test_line_store_repair_seeded_fuzz(spark):
     """Seeded random corpora split into shuffled-id epochs: repair
     always converges the store to the batch answer (the
@@ -166,6 +169,7 @@ def test_line_store_repair_seeded_fuzz(spark):
             shutil.rmtree(d, ignore_errors=True)
 
 
+@pytest.mark.slow
 def test_line_store_repair_large_ids_integer_unpack(spark):
     """Doc ids >= 2^33 round-trip the packed election key exactly
     (ADVICE r15: a float divide would make the double quotient inexact
@@ -187,6 +191,7 @@ def test_line_store_repair_large_ids_integer_unpack(spark):
         shutil.rmtree(d, ignore_errors=True)
 
 
+@pytest.mark.slow
 def test_line_store_repair_does_not_accrete_overlays(spark):
     """A second repair that recomputes an identical delta SKIPS the
     overlay write (ADVICE r15 #3): the overlay-dir count — and with it
@@ -211,6 +216,7 @@ def test_line_store_repair_does_not_accrete_overlays(spark):
         shutil.rmtree(d, ignore_errors=True)
 
 
+@pytest.mark.slow
 def test_line_store_compact_preserves_results_and_repairability(spark):
     """compact() folds epochs + repair overlays into a generation base:
     all_results is value-identical before/after, the repair-overlay
@@ -272,6 +278,7 @@ def test_line_store_compact_preserves_results_and_repairability(spark):
         shutil.rmtree(d, ignore_errors=True)
 
 
+# Not slow-marked: the default gate's smoke test of this module.
 def test_line_store_ingest_below_watermark_refused(spark):
     """Replaying an epoch the compaction already folded must fail
     loudly — the fold deleted its partitions, so a silent rewrite
@@ -288,6 +295,7 @@ def test_line_store_ingest_below_watermark_refused(spark):
         shutil.rmtree(d, ignore_errors=True)
 
 
+@pytest.mark.slow
 def test_line_store_repair_composes_across_late_arrivals(spark):
     """Repair after repair: a SECOND late batch arriving after an
     earlier repair moved the keep to an intermediate winner must
@@ -313,6 +321,7 @@ def test_line_store_repair_composes_across_late_arrivals(spark):
         shutil.rmtree(d, ignore_errors=True)
 
 
+@pytest.mark.slow
 def test_line_store_signature_params_pinned(spark):
     """Reopening a LineDedupStore with a DIFFERENT segmentation must
     fail loudly (the _EpochStore params-pin discipline, extended to
