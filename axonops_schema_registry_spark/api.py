@@ -16,11 +16,15 @@ One object bundling the query surface a reference user actually calls
 Every method returns a DataFrame (lazy; callers compose further or
 collect).  The corpus contract is the FIXTURES.md §1 ``schemas`` shape:
 (subject, version, schema_type, schema_text[, deleted][, fingerprint]).
+
+This class is the one implementation of the registry's reads: the SQL
+surface's registry views and the registry query specs call it, so the
+specs' DuckDB oracles check these methods.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from axonops_schema_registry_spark.operators.core import latest_per_key
@@ -32,6 +36,7 @@ from axonops_schema_registry_spark.registry.compat import check_compatibility
 from axonops_schema_registry_spark.registry.registration import (
     import_batch,
     register_batch,
+    version_delete_status,
 )
 from axonops_schema_registry_spark.registry.spark_udfs import (
     extract_fields_udf,
@@ -113,11 +118,11 @@ class RegistryAnalytics:
                      .select("subject", "version", "name", "path", "type")
 
     def similar_subjects(self, threshold: float = 0.3) -> DataFrame:
-        """GET /analysis/similarity — Jaccard over latest field-name sets."""
-        latest_fields = (self.fields()
-                         .withColumn("__maxv", F.max("version").over(
-                             Window.partitionBy("subject")))
-                         .filter(F.col("version") == F.col("__maxv")))
+        """GET /analysis/similarity — Jaccard over the field-name sets of
+        each subject's latest live version (a latest version without
+        fields gives the subject an empty set, not an older version's).
+        Fields are extracted from the latest rows only, one per subject."""
+        latest_fields = RegistryAnalytics(self.spark, self.latest()).fields()
         names = (latest_fields
                  .select("subject",
                          normalize_name_snake(F.col("name"))
@@ -263,10 +268,6 @@ class RegistryAnalytics:
         """DELETE /subjects/{s}/versions/{v} (version -1 = 'latest'):
         the full status taxonomy (42202/40401/40402/40407/200) with the
         resolved version number, as a 1-row DataFrame."""
-        from axonops_schema_registry_spark.queries.registry_queries import (
-            version_delete_status,
-        )
-
         requests = self.spark.createDataFrame(
             [(subject, version, permanent)],
             "subject string, version int, permanent boolean")

@@ -146,14 +146,6 @@ class CurationPipeline:
         return contamination_flags(self.docs, test_docs, self.id_col,
                                    self.text_col, n)
 
-    def dataset_card(self, spark, sf_dir: str):
-        """Per-source curation rollup (tx5)."""
-        from axonops_schema_registry_spark.queries.llm_queries import (
-            tx5_dataset_card,
-        )
-
-        return tx5_dataset_card(spark, sf_dir)
-
     def quality_flags(self):
         """Per-document Gopher rule verdicts (gq1's per-doc stage)."""
         from pyspark.sql import functions as F

@@ -86,26 +86,6 @@ def recommended_lsh_bits(n_rows: int, target_occupancy: int = 200,
                    math.ceil(math.log2(n_rows / target_occupancy))))
 
 
-def hyperplane_bucket_udf(dim: int, n_bits: int, seed: int):
-    """Vectorized random-hyperplane LSH bucket: sign-pattern of ``n_bits``
-    fixed random projections, as one int bucket id.
-
-    numpy matmul over the whole Arrow batch — one BLAS call per batch,
-    not per row.
-    """
-    rng = np.random.default_rng(seed)
-    planes = rng.standard_normal((dim, n_bits))
-    weights = (1 << np.arange(n_bits)).astype(np.int64)
-
-    @F.pandas_udf("long")
-    def _bucket(vecs: pd.Series) -> pd.Series:
-        mat = np.vstack(vecs.to_numpy())          # (batch, dim)
-        bits = (mat @ planes) > 0                  # (batch, n_bits)
-        return pd.Series(bits @ weights)
-
-    return _bucket
-
-
 def hyperplane_buckets_all_tables_udf(dim: int, n_bits: int, n_tables: int,
                                       seed0: int = 1000):
     """All ``n_tables`` bucket ids in ONE UDF pass: a single
@@ -169,26 +149,12 @@ def _refine_centroids(corpus: DataFrame, centroids: DataFrame,
     return centroids
 
 
-def ivf_ann_topk(queries: DataFrame, corpus: DataFrame, k: int = 5,
-                 n_centroids: int = 16, n_probe: int = 4,
-                 round_digits: int = 4, n_kmeans_iter: int = 2) -> DataFrame:
-    """IVF-style approximate top-k: corpus rows are assigned to their
-    nearest centroid (inverted lists); each query probes its ``n_probe``
-    closest centroids and reranks exactly within those lists only.
-
-    Centroids seed from a deterministic corpus sample (lowest ids) and
-    are refined with ``n_kmeans_iter`` distributed Lloyd iterations; at
-    scale the corpus side is WRITTEN partitioned by ``centroid_id``, so
-    a probe reads n_probe/n_centroids of the data (partition pruning
-    does the rest).
-    """
-    w_cent = Window.orderBy("corpus_id")
-    centroids = (corpus.orderBy("corpus_id").limit(n_centroids)
-                 .select(F.row_number().over(w_cent).alias("centroid_id"),
-                         F.col("corpus_vec").alias("centroid_vec")))
-    if n_kmeans_iter > 0:
-        centroids = _refine_centroids(corpus, centroids,
-                                      n_kmeans_iter).localCheckpoint()
+def _ivf_probe_topk(queries: DataFrame, corpus: DataFrame,
+                    centroids: DataFrame, k: int, n_probe: int,
+                    round_digits: int) -> DataFrame:
+    """The IVF search both centroid choices share: each corpus row joins
+    the list of its nearest centroid, each query probes its ``n_probe``
+    nearest lists, and exact cosine ranks the pairs found there."""
     cent_n = with_norm(centroids, "centroid_vec", "cent_norm")
 
     def nearest(df: DataFrame, vec: str, norm: str, keep: int) -> DataFrame:
@@ -214,8 +180,31 @@ def ivf_ann_topk(queries: DataFrame, corpus: DataFrame, k: int = 5,
     return (pairs.withColumn("cosine_sim", F.round(sim, round_digits))
                  .withColumn("rank", F.row_number().over(w))
                  .filter(F.col("rank") <= k)
-                 .select("query_id", "corpus_id", "cosine_sim", "rank")
-                 .distinct())
+                 .select("query_id", "corpus_id", "cosine_sim", "rank"))
+
+
+def ivf_ann_topk(queries: DataFrame, corpus: DataFrame, k: int = 5,
+                 n_centroids: int = 16, n_probe: int = 4,
+                 round_digits: int = 4, n_kmeans_iter: int = 2) -> DataFrame:
+    """IVF-style approximate top-k: corpus rows are assigned to their
+    nearest centroid (inverted lists); each query probes its ``n_probe``
+    closest centroids and reranks exactly within those lists only.
+
+    Centroids seed from a deterministic corpus sample (lowest ids) and
+    are refined with ``n_kmeans_iter`` distributed Lloyd iterations; at
+    scale the corpus side is WRITTEN partitioned by ``centroid_id``, so
+    a probe reads n_probe/n_centroids of the data (partition pruning
+    does the rest).
+    """
+    w_cent = Window.orderBy("corpus_id")
+    centroids = (corpus.orderBy("corpus_id").limit(n_centroids)
+                 .select(F.row_number().over(w_cent).alias("centroid_id"),
+                         F.col("corpus_vec").alias("centroid_vec")))
+    if n_kmeans_iter > 0:
+        centroids = _refine_centroids(corpus, centroids,
+                                      n_kmeans_iter).localCheckpoint()
+    return _ivf_probe_topk(queries, corpus, centroids, k, n_probe,
+                           round_digits).distinct()
 
 
 def _portable_planes(corpus: DataFrame, n_bits: int, n_tables: int,
@@ -461,32 +450,8 @@ def ivf_ann_topk_portable(queries: DataFrame, corpus: DataFrame,
                      corpus["corpus_id"] == cent_ids["__id"])
                  .select(F.col("corpus_id").alias("centroid_id"),
                          F.col("corpus_vec").alias("centroid_vec")))
-    cent_n = with_norm(centroids, "centroid_vec", "cent_norm")
-
-    def nearest(df: DataFrame, vec: str, norm: str, keep: int) -> DataFrame:
-        sim = _dot_expr(vec, "centroid_vec") / (F.col(norm)
-                                                * F.col("cent_norm"))
-        w = Window.partitionBy(df.columns[0]).orderBy(
-            F.desc("cent_sim"), F.asc("centroid_id"))
-        return (df.crossJoin(F.broadcast(cent_n))
-                  .withColumn("cent_sim", F.round(sim, round_digits))
-                  .withColumn("__r", F.row_number().over(w))
-                  .filter(F.col("__r") <= keep)
-                  .drop("centroid_vec", "cent_norm", "cent_sim", "__r"))
-
-    c = nearest(with_norm(corpus, "corpus_vec", "c_norm"),
-                "corpus_vec", "c_norm", 1)
-    q = nearest(with_norm(queries, "query_vec", "q_norm"),
-                "query_vec", "q_norm", n_probe)
-    pairs = q.join(c, "centroid_id")
-    sim = _dot_expr("query_vec", "corpus_vec") / (F.col("q_norm")
-                                                  * F.col("c_norm"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine_sim"), F.asc("corpus_id"))
-    return (pairs.withColumn("cosine_sim", F.round(sim, round_digits))
-                 .withColumn("rank", F.row_number().over(w))
-                 .filter(F.col("rank") <= k)
-                 .select("query_id", "corpus_id", "cosine_sim", "rank"))
+    return _ivf_probe_topk(queries, corpus, centroids, k, n_probe,
+                           round_digits)
 
 
 def lsh_ann_topk(queries: DataFrame, corpus: DataFrame, k: int = 5,
@@ -505,18 +470,7 @@ def lsh_ann_topk(queries: DataFrame, corpus: DataFrame, k: int = 5,
           .select("corpus_id", F.posexplode("__bs").alias("table", "bucket")))
     cand = (qb.join(cb, ["table", "bucket"])
             .select("query_id", "corpus_id").distinct())
-
-    q = with_norm(queries, "query_vec", "q_norm")
-    c = with_norm(corpus, "corpus_vec", "c_norm")
-    pairs = cand.join(q, "query_id").join(c, "corpus_id")
-    sim = _dot_expr("query_vec", "corpus_vec") / (F.col("q_norm")
-                                                  * F.col("c_norm"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine_sim"), F.asc("corpus_id"))
-    return (pairs.withColumn("cosine_sim", F.round(sim, round_digits))
-                 .withColumn("rank", F.row_number().over(w))
-                 .filter(F.col("rank") <= k)
-                 .select("query_id", "corpus_id", "cosine_sim", "rank"))
+    return _exact_rerank(cand, queries, corpus, k, round_digits)
 
 
 def quantize_int8(df: DataFrame, id_col: str = "vec_id",

@@ -24,7 +24,7 @@ from __future__ import annotations
 import threading
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -114,13 +114,6 @@ def diff_keyed_sets(a: DataFrame, b: DataFrame, key: str, value: str,
     return (joined.withColumn(status_col, status)
                   .filter(F.col(status_col) != "unchanged")
                   .withColumnRenamed("__k", key))
-
-
-def coalesce_fallback(specific: Column, fallback: Column,
-                      default: str) -> Column:
-    """Config fallback chain subject → global → default (J6;
-    internal/registry/registry.go:747-799)."""
-    return F.coalesce(specific, fallback, F.lit(default))
 
 
 def range_join_bucketed(left: DataFrame, ts_col: str,

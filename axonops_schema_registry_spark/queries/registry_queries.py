@@ -6,14 +6,22 @@ derivation (model.py) so they remain DuckDB-checkable; the compatibility /
 field-extraction queries run the real domain library via Arrow UDFs against
 fixture documents, with frozen golden VALUES oracles (the goldens are
 pinned by tests/test_registry_domain.py's spec-derived unit tests).
+
+Registry reads (latest version, history, the versions view, the field
+table, field search, subject similarity) are calls on
+:class:`~axonops_schema_registry_spark.api.RegistryAnalytics` over the
+same corpus, so each oracle here also checks the facade.
 """
 
 from __future__ import annotations
+
+from functools import reduce
 
 import pandas as pd  # module-level: pandas-UDF type hints resolve from here
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from axonops_schema_registry_spark.api import RegistryAnalytics
 from axonops_schema_registry_spark.queries.base import QuerySpec
 from axonops_schema_registry_spark.registry import model
 from axonops_schema_registry_spark.registry.model import (
@@ -21,7 +29,10 @@ from axonops_schema_registry_spark.registry.model import (
     fixture_schemas,
     registry_corpus,
 )
-from axonops_schema_registry_spark.registry.registration import register_batch
+from axonops_schema_registry_spark.registry.registration import (
+    register_batch,
+    version_delete_status,
+)
 from axonops_schema_registry_spark.registry.spark_udfs import (
     check_pair_udf,
     extract_fields_udf,
@@ -29,14 +40,20 @@ from axonops_schema_registry_spark.registry.spark_udfs import (
 )
 
 
+def _corpus_reg(spark: SparkSession, sf_dir: str) -> RegistryAnalytics:
+    return RegistryAnalytics(spark, registry_corpus(spark, sf_dir))
+
+
+def _fixture_reg(spark: SparkSession) -> RegistryAnalytics:
+    return RegistryAnalytics(spark, fixture_schemas(spark))
+
+
 def r1_latest_live_schema(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W1+P1 on the registry corpus: latest non-deleted version per subject
-    (GET /subjects/{s}/versions/latest; postgres/store.go:210-212)."""
-    corpus = registry_corpus(spark, sf_dir).filter(~F.col("deleted"))
-    w = Window.partitionBy("subject").orderBy(F.desc("version"))
-    return (corpus.withColumn("__rn", F.row_number().over(w))
-                  .filter(F.col("__rn") == 1)
-                  .select("subject", "version", "schema_id", "fingerprint"))
+    (GET /subjects/{s}/versions/latest; postgres/store.go:210-212) —
+    ``RegistryAnalytics.latest()``."""
+    return (_corpus_reg(spark, sf_dir).latest()
+            .select("subject", "version", "schema_id", "fingerprint"))
 
 
 R1_ORACLE = f"""
@@ -49,9 +66,10 @@ QUALIFY row_number() OVER (PARTITION BY subject ORDER BY version DESC) = 1
 
 def r2_version_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S3/W4: full version history of one subject, soft-deletes visible
-    (GET /subjects/{s}/versions?deleted=true)."""
-    return (registry_corpus(spark, sf_dir)
-            .filter(F.col("subject") == "src1")
+    (GET /subjects/{s}/versions?deleted=true) —
+    ``RegistryAnalytics.history(include_deleted=True)``."""
+    return (_corpus_reg(spark, sf_dir)
+            .history("src1", include_deleted=True)
             .select("subject", "version", "schema_id", "fingerprint",
                     "deleted"))
 
@@ -65,12 +83,8 @@ FROM corpus WHERE subject = 'src1'
 
 def r3_schema_versions_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A1: the schema_versions materialized view
-    (postgres/migrations.go:230-234)."""
-    return (registry_corpus(spark, sf_dir)
-            .filter(~F.col("deleted"))
-            .groupBy("subject")
-            .agg(F.max("version").alias("latest_version"),
-                 F.count(F.lit(1)).alias("version_count")))
+    (postgres/migrations.go:230-234) — ``RegistryAnalytics.versions_view()``."""
+    return _corpus_reg(spark, sf_dir).versions_view()
 
 
 R3_ORACLE = f"""
@@ -273,23 +287,14 @@ SELECT * FROM (VALUES (1, TRUE, 0), (2, FALSE, 1))
 
 def f13_field_extraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F13: recursive field extraction exploded into the fields table
-    (internal/analysis/fields.go:28-242) — compute once, reuse everywhere."""
-    ship_package(spark)
-    fields = extract_fields_udf()
-    fx = fixture_schemas(spark).filter(
-        F.col("subject").isin("user-value", "order-events-value",
-                              "profile-value", "event-value")
-        & (F.col("version") == F.when(F.col("subject") == "order-events-value",
-                                      1).otherwise(2)))
-    return (fx.withColumn("field", F.explode(fields("schema_text",
-                                                    "schema_type")))
-              .select("subject", "version",
-                      F.col("field.name").alias("name"),
-                      F.col("field.path").alias("path"),
-                      F.col("field.type").alias("type"),
-                      F.col("field.required").alias("required"),
-                      F.col("field.has_default").alias("has_default"),
-                      F.col("field.doc").alias("doc")))
+    (internal/analysis/fields.go:28-242) — ``RegistryAnalytics.fields()``
+    at each fixture subject's latest version."""
+    return (_fixture_reg(spark).fields()
+            .filter(F.col("version")
+                    == F.when(F.col("subject") == "order-events-value", 1)
+                    .otherwise(2))
+            .select("subject", "version", "name", "path", "type",
+                    "required", "has_default", "doc"))
 
 
 F13_ORACLE = """
@@ -394,29 +399,15 @@ FROM incoming i LEFT JOIN existing e ON i.schema_id = e.schema_id
 
 def fs1_field_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """§3.3 restructured field search: the reference's O(subjects) N+1
-    loop (analysis.go:157-264) becomes ONE join against the precomputed
+    loop (analysis.go:157-264) becomes one filter per term over the
     exploded fields table, with snake-normalization on both sides so
-    naming variants match (exact mode)."""
-    from axonops_schema_registry_spark.operators.text import (
-        normalize_name_snake,
-    )
-
-    ship_package(spark)
-    fields_udf = extract_fields_udf()
-    fields = (fixture_schemas(spark)
-              .withColumn("field", F.explode(fields_udf("schema_text",
-                                                        "schema_type")))
-              .select("subject", "version",
-                      F.col("field.name").alias("name"),
-                      F.col("field.path").alias("path"))
-              .withColumn("norm_name",
-                          normalize_name_snake(F.col("name"))))
-    terms = spark.createDataFrame(
-        [("name",), ("customer_id",), ("qty",)], "term string") \
-        .withColumn("norm_term", normalize_name_snake(F.col("term")))
-    return (fields.join(F.broadcast(terms),
-                        fields["norm_name"] == terms["norm_term"])
-            .select("term", "subject", "version", "path"))
+    naming variants match (exact mode) — ``RegistryAnalytics.search_fields``
+    per term."""
+    reg = _fixture_reg(spark)
+    return reduce(DataFrame.unionByName, [
+        reg.search_fields(term).select(F.lit(term).alias("term"), "subject",
+                                       "version", "path")
+        for term in ("name", "customer_id", "qty")])
 
 
 FS1_ORACLE = """
@@ -615,15 +606,9 @@ FROM winner GROUP BY subject
 
 def a8r_schema_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A8 registry flavor: per-schema quality counters + grade bucketing
-    over extracted fields (internal/analysis/quality.go:25-141) —
-    integer counters so the check is arithmetic-exact."""
-    ship_package(spark)
-    fields_udf = extract_fields_udf()
-    fields = (fixture_schemas(spark)
-              .withColumn("field", F.explode(fields_udf("schema_text",
-                                                        "schema_type")))
-              .select("subject", "version", "field.*"))
-    counts = (fields.groupBy("subject", "version")
+    over ``RegistryAnalytics.fields()`` (internal/analysis/quality.go:25-141)
+    — integer counters so the check is arithmetic-exact."""
+    counts = (_fixture_reg(spark).fields().groupBy("subject", "version")
               .agg(F.count(F.lit(1)).alias("n_fields"),
                    F.sum(F.when(F.col("doc").isNotNull(), 1).otherwise(0))
                    .alias("n_documented"),
@@ -800,41 +785,9 @@ SELECT * FROM (VALUES
 def j4r_subject_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J4 registry flavor: subject-pair similarity — Jaccard over the
     normalized field-name sets of each subject's LATEST schema
-    (analysis.go:376-429), as a join + aggregate, not a cross product."""
-    from axonops_schema_registry_spark.operators.text import (
-        normalize_name_snake,
-    )
-
-    ship_package(spark)
-    fields_udf = extract_fields_udf()
-    fx = fixture_schemas(spark)
-    w = Window.partitionBy("subject").orderBy(F.desc("version"))
-    latest = (fx.withColumn("__rn", F.row_number().over(w))
-                .filter(F.col("__rn") == 1))
-    names = (latest
-             .withColumn("field", F.explode(fields_udf("schema_text",
-                                                       "schema_type")))
-             .select("subject",
-                     normalize_name_snake(F.col("field.name"))
-                     .alias("norm_name"))
-             .distinct())
-    sizes = names.groupBy("subject").agg(F.count(F.lit(1)).alias("set_size"))
-    a = names.select(F.col("subject").alias("subject_a"), "norm_name")
-    b = names.select(F.col("subject").alias("subject_b"), "norm_name")
-    inter = (a.join(b, "norm_name")
-              .filter(F.col("subject_a") < F.col("subject_b"))
-              .groupBy("subject_a", "subject_b")
-              .agg(F.count(F.lit(1)).alias("n_shared")))
-    return (inter
-            .join(sizes.select(F.col("subject").alias("subject_a"),
-                               F.col("set_size").alias("size_a")), "subject_a")
-            .join(sizes.select(F.col("subject").alias("subject_b"),
-                               F.col("set_size").alias("size_b")), "subject_b")
-            .withColumn("jaccard",
-                        F.col("n_shared").cast("double")
-                        / (F.col("size_a") + F.col("size_b")
-                           - F.col("n_shared")).cast("double"))
-            .filter(F.col("jaccard") >= 0.3)
+    (analysis.go:376-429), as a join + aggregate, not a cross product —
+    ``RegistryAnalytics.similar_subjects(0.3)``."""
+    return (_fixture_reg(spark).similar_subjects(0.3)
             .select("subject_a", "subject_b", "n_shared", "size_a", "size_b",
                     "jaccard"))
 
@@ -930,16 +883,10 @@ FROM reach GROUP BY subject, ref_subject
 
 def fs2_type_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """§3.3 search-by-type (analysis.go:266-339), restructured to one
-    filter over the precomputed fields table."""
-    ship_package(spark)
-    fields_udf = extract_fields_udf()
-    return (fixture_schemas(spark)
-            .withColumn("field", F.explode(fields_udf("schema_text",
-                                                      "schema_type")))
-            .select("subject", "version",
-                    F.col("field.path").alias("path"),
-                    F.col("field.type").alias("type"))
-            .filter(F.col("type") == "string"))
+    filter over ``RegistryAnalytics.fields()``."""
+    return (_fixture_reg(spark).fields()
+            .filter(F.col("type") == "string")
+            .select("subject", "version", "path", "type"))
 
 
 FS2_ORACLE = """
@@ -961,14 +908,14 @@ def ctx1_multitenant_listing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """§1.1 registry context (tenant namespace, context.go:13-18): the
     corpus partitioned by registry_ctx first — per-(ctx, subject) latest
     live version.  At scale registry_ctx is the leading partition column,
-    so per-tenant queries prune to one partition subtree."""
-    corpus = registry_corpus(spark, sf_dir).filter(~F.col("deleted"))
+    so per-tenant queries prune to one partition subtree.  The context is
+    a function of the subject, so this is ``RegistryAnalytics.versions_view()``
+    with the context column added."""
     ctx = (F.when(F.substring("subject", 4, 10).cast("int") % 3 == 0,
                   "tenant-a").otherwise("."))
-    return (corpus.withColumn("registry_ctx", ctx)
-            .groupBy("registry_ctx", "subject")
-            .agg(F.max("version").alias("latest_version"),
-                 F.count(F.lit(1)).alias("n_versions")))
+    return (_corpus_reg(spark, sf_dir).versions_view()
+            .select(ctx.alias("registry_ctx"), "subject", "latest_version",
+                    F.col("version_count").alias("n_versions")))
 
 
 CTX1_ORACLE = f"""
@@ -1158,9 +1105,10 @@ def x1_export_subject(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Export bundle per subject (ExportSubject/ExportSchema,
     analysis.go:985-1060): every live version as one serialized document
     plus the subject's references resolved to their target's latest live
-    fingerprint.  Arrays are serialized with array_join (driver
-    canonicalizer takes atomic columns only)."""
-    corpus = registry_corpus(spark, sf_dir).filter(~F.col("deleted"))
+    fingerprint (``RegistryAnalytics.latest()``).  Arrays are serialized
+    with array_join (driver canonicalizer takes atomic columns only)."""
+    reg = _corpus_reg(spark, sf_dir)
+    corpus = reg.live()
     entry = F.concat_ws(
         ":", F.lpad(F.col("version").cast("string"), 4, "0"),
         F.col("schema_id").cast("string"), F.col("fingerprint"))
@@ -1168,11 +1116,8 @@ def x1_export_subject(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_versions"),
         F.array_join(F.sort_array(F.collect_list(entry)), "|")
         .alias("versions_bundle"))
-    w = Window.partitionBy("subject").orderBy(F.desc("version"))
-    latest = (corpus.withColumn("__rn", F.row_number().over(w))
-              .filter(F.col("__rn") == 1)
-              .select(F.col("subject").alias("ref_subject"),
-                      F.col("fingerprint").alias("ref_fp")))
+    latest = reg.latest().select(F.col("subject").alias("ref_subject"),
+                                 F.col("fingerprint").alias("ref_fp"))
     refs = spark.createDataFrame(
         _EXPORT_REFS, "subject string, ref_subject string")
     resolved = (refs.join(F.broadcast(latest), "ref_subject")
@@ -1755,60 +1700,6 @@ _DEL2_REQUESTS = [
 #: synthetic subject whose versions are ALL soft-deleted — exercises the
 #: 'latest on fully-tombstoned subject' 40401 branch absent from the corpus
 _DEL2_TOMB = [("tomb", 1, True), ("tomb", 2, True)]
-
-
-def version_delete_status(corpus: DataFrame,
-                          requests: DataFrame) -> DataFrame:
-    """Version-level delete taxonomy (DELETE /subjects/{s}/versions/{v},
-    handlers.go:880-935, registry.go:623-676): version ids must be in
-    [1, 2^31-1] or the sentinel ``latest``/-1 (42202 otherwise, parsed
-    BEFORE any storage access); soft delete resolves ``latest`` against
-    LIVE versions and rejects already-deleted or unknown versions with
-    40402 (GetSchemaBySubjectVersion filters deleted rows); permanent
-    delete resolves ``latest`` against SOFT-DELETED versions, requires
-    the version be soft-deleted first (40407 —
-    ErrorCodeVersionNotSoftDeleted, types.go:176; 40405 is the
-    SUBJECT-level sibling), and unknown subjects are
-    40401.  Successful deletes report the RESOLVED version number.
-
-    ``corpus``: (subject, version, deleted, ...);
-    ``requests``: (subject, version, permanent).
-    """
-    per_subj = corpus.groupBy("subject").agg(
-        F.count(F.lit(1)).alias("n_total"),
-        F.max(F.when(~F.col("deleted"), F.col("version"))).alias("max_live"),
-        F.max(F.when(F.col("deleted"), F.col("version")))
-        .alias("max_deleted"))
-    req = requests.join(F.broadcast(per_subj), "subject", "left")
-    resolved = F.when(
-        F.col("version") == -1,
-        F.when(F.col("permanent"), F.col("max_deleted"))
-         .otherwise(F.col("max_live"))).otherwise(F.col("version"))
-    req = req.withColumn("resolved_version", resolved)
-    ver = corpus.select("subject",
-                        F.col("version").alias("resolved_version"),
-                        F.col("deleted").alias("ver_deleted"))
-    j = req.join(ver, ["subject", "resolved_version"], "left")
-    status = (
-        F.when((F.col("version") < -1) | (F.col("version") == 0),
-               "invalid_version_42202")
-        .when(F.col("n_total").isNull(), "subject_not_found_40401")
-        # 'latest' soft delete on a subject whose versions are ALL
-        # soft-deleted: GetSchemaBySubjectVersion(-1) sees no live rows
-        # and reports the SUBJECT as missing (memory/store.go
-        # GetLatestSchema path → ErrSubjectNotFound, 40401), not 40402
-        .when((F.col("version") == -1) & ~F.col("permanent")
-              & F.col("max_live").isNull(), "subject_not_found_40401")
-        .when(F.col("ver_deleted").isNull(), "version_not_found_40402")
-        .when(~F.col("permanent") & ~F.col("ver_deleted"),
-              "soft_deleted_200")
-        .when(~F.col("permanent"), "version_not_found_40402")
-        .when(F.col("ver_deleted"), "permanently_deleted_200")
-        .otherwise("not_soft_deleted_40407"))
-    return j.select(
-        "subject", "version", "permanent", status.alias("status"),
-        F.when(status.endswith("_200"), F.col("resolved_version"))
-         .cast("int").alias("resolved_version"))
 
 
 def del2_version_delete_taxonomy(spark: SparkSession,

@@ -321,3 +321,57 @@ def import_batch(spark: SparkSession, existing: DataFrame,
                         "not_import_mode").otherwise(status)
     return joined.select("schema_id", "subject", "fingerprint",
                          status.alias("status"))
+
+
+def version_delete_status(corpus: DataFrame,
+                          requests: DataFrame) -> DataFrame:
+    """Version-level delete taxonomy (DELETE /subjects/{s}/versions/{v},
+    handlers.go:880-935, registry.go:623-676): version ids must be in
+    [1, 2^31-1] or the sentinel ``latest``/-1 (42202 otherwise, parsed
+    BEFORE any storage access); soft delete resolves ``latest`` against
+    LIVE versions and rejects already-deleted or unknown versions with
+    40402 (GetSchemaBySubjectVersion filters deleted rows); permanent
+    delete resolves ``latest`` against SOFT-DELETED versions, requires
+    the version be soft-deleted first (40407 —
+    ErrorCodeVersionNotSoftDeleted, types.go:176; 40405 is the
+    SUBJECT-level sibling), and unknown subjects are
+    40401.  Successful deletes report the RESOLVED version number.
+
+    ``corpus``: (subject, version, deleted, ...);
+    ``requests``: (subject, version, permanent).
+    """
+    per_subj = corpus.groupBy("subject").agg(
+        F.count(F.lit(1)).alias("n_total"),
+        F.max(F.when(~F.col("deleted"), F.col("version"))).alias("max_live"),
+        F.max(F.when(F.col("deleted"), F.col("version")))
+        .alias("max_deleted"))
+    req = requests.join(F.broadcast(per_subj), "subject", "left")
+    resolved = F.when(
+        F.col("version") == -1,
+        F.when(F.col("permanent"), F.col("max_deleted"))
+         .otherwise(F.col("max_live"))).otherwise(F.col("version"))
+    req = req.withColumn("resolved_version", resolved)
+    ver = corpus.select("subject",
+                        F.col("version").alias("resolved_version"),
+                        F.col("deleted").alias("ver_deleted"))
+    j = req.join(ver, ["subject", "resolved_version"], "left")
+    status = (
+        F.when((F.col("version") < -1) | (F.col("version") == 0),
+               "invalid_version_42202")
+        .when(F.col("n_total").isNull(), "subject_not_found_40401")
+        # 'latest' soft delete on a subject whose versions are ALL
+        # soft-deleted: GetSchemaBySubjectVersion(-1) sees no live rows
+        # and reports the SUBJECT as missing (memory/store.go
+        # GetLatestSchema path → ErrSubjectNotFound, 40401), not 40402
+        .when((F.col("version") == -1) & ~F.col("permanent")
+              & F.col("max_live").isNull(), "subject_not_found_40401")
+        .when(F.col("ver_deleted").isNull(), "version_not_found_40402")
+        .when(~F.col("permanent") & ~F.col("ver_deleted"),
+              "soft_deleted_200")
+        .when(~F.col("permanent"), "version_not_found_40402")
+        .when(F.col("ver_deleted"), "permanently_deleted_200")
+        .otherwise("not_soft_deleted_40407"))
+    return j.select(
+        "subject", "version", "permanent", status.alias("status"),
+        F.when(status.endswith("_200"), F.col("resolved_version"))
+         .cast("int").alias("resolved_version"))

@@ -5,7 +5,9 @@ query surface is reachable from ``spark.sql``:
 
 - temp views: every driver table, the ``registry_corpus`` derivation, its
   ``registry_live`` (soft-delete-filtered) twin, and the exploded
-  ``fixture_fields`` table;
+  ``fixture_fields`` table.  These three are ``RegistryAnalytics.corpus``,
+  ``.live()`` and ``.fields()`` (``api.py``), so the SQL door and the
+  facade read the registry through one implementation;
 - SQL functions: ``canonical_fingerprint(text, type)``,
   ``check_compat(reader, writer, type)`` (returns is_compatible),
   ``normalize_field_name(name)``, ``glob_regex(pattern)``.
@@ -21,29 +23,23 @@ import pandas as pd
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from axonops_schema_registry_spark.api import RegistryAnalytics
 from axonops_schema_registry_spark.catalog import register_views
 from axonops_schema_registry_spark.registry.model import (
     fixture_schemas,
     registry_corpus,
 )
-from axonops_schema_registry_spark.registry.spark_udfs import (
-    extract_fields_udf,
-    ship_package,
-)
+from axonops_schema_registry_spark.registry.spark_udfs import ship_package
 
 
 def register_all(spark: SparkSession, sf_dir: str) -> None:
     ship_package(spark)
     register_views(spark, sf_dir)
 
-    corpus = registry_corpus(spark, sf_dir)
-    corpus.createOrReplaceTempView("registry_corpus")
-    corpus.filter(~F.col("deleted")).createOrReplaceTempView("registry_live")
-
-    fields_udf = extract_fields_udf()
-    (fixture_schemas(spark)
-     .withColumn("field", F.explode(fields_udf("schema_text", "schema_type")))
-     .select("subject", "version", "field.*")
+    reg = RegistryAnalytics(spark, registry_corpus(spark, sf_dir))
+    reg.corpus.createOrReplaceTempView("registry_corpus")
+    reg.live().createOrReplaceTempView("registry_live")
+    (RegistryAnalytics(spark, fixture_schemas(spark)).fields()
      .createOrReplaceTempView("fixture_fields"))
 
     @F.pandas_udf("string")

@@ -84,7 +84,7 @@ def test_register_batch_ctx_none_mode_carries_ctx(spark):
 
 @pytest.mark.slow  # driver-window opt-in (pytest.ini)
 def test_latest_soft_delete_all_tombstoned_is_40401(spark):
-    from axonops_schema_registry_spark.queries.registry_queries import (
+    from axonops_schema_registry_spark.registry.registration import (
         version_delete_status,
     )
 

@@ -55,6 +55,20 @@ def test_similar_subjects(reg):
         [("profile-value", "user-value")]
 
 
+def test_similar_subjects_uses_latest_version_without_fields(spark):
+    """A latest version with no fields gives its subject an empty field
+    set; similarity must not fall back to an older version's fields."""
+    empty_v3 = spark.createDataFrame(
+        [("profile-value", 3, "JSON", '{"type":"object","properties":{}}')],
+        "subject string, version int, schema_type string, schema_text string")
+    reg = RegistryAnalytics(spark,
+                            fixture_schemas(spark).unionByName(empty_v3))
+    assert [r.version for r in reg.latest("profile-value").collect()] == [3]
+    sims = reg.similar_subjects(0.3).collect()
+    assert all("profile-value" not in (r.subject_a, r.subject_b)
+               for r in sims), sims
+
+
 def test_check_verdicts(reg):
     ok, _ = reg.check(AVRO_USER_V3, "user-value", "BACKWARD")
     assert ok
