@@ -13,9 +13,23 @@ One object bundling the query surface a reference user actually calls
     reg.similar_subjects(0.3)                          # GET  /analysis/similarity
     reg.statistics()                                   # GET  /analysis/statistics
 
-Every method returns a DataFrame (lazy; callers compose further or
-collect).  The corpus contract is the FIXTURES.md §1 ``schemas`` shape:
+The corpus contract is the FIXTURES.md §1 ``schemas`` shape:
 (subject, version, schema_type, schema_text[, deleted][, fingerprint]).
+
+A facade is one generation of its corpus.  Point reads (``latest(s)``,
+``history(s)``, ``check``, ``suggest_evolution``) and field reads
+(``fields``, ``search_fields``, ``similar_subjects``) answer from a
+driver-side snapshot of that corpus: one Arrow collect on the first such
+call, the field table extracted in-process on the first field read, both
+kept for the facade's life and freed with it (no Spark cache).  Their
+DataFrames are built from the snapshot and collect without a Spark job.
+A corpus above ``SNAPSHOT_ROW_CAP`` rows keeps every read on Spark.  The
+snapshot does not see rows appended after it was taken: build a new
+facade after an append (a ``spark.read.parquet`` DataFrame keeps the file
+list it was created with, so its generation is fixed anyway).  The
+all-subject reads (``latest()``, ``live``, ``subjects``,
+``versions_view``, ``statistics``), ``field_plan`` (the SQL surface's
+field view), ``register`` and the rest return lazy Spark DataFrames.
 
 This class is the one implementation of the registry's reads: the SQL
 surface's registry views and the registry query specs call it, so the
@@ -24,8 +38,22 @@ specs' DuckDB oracles check these methods.
 
 from __future__ import annotations
 
+import threading
+
+import numpy as np
+import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import (
+    DataType,
+    DoubleType,
+    LongType,
+    StructField,
+    StructType,
+)
 
 from axonops_schema_registry_spark.operators.core import latest_per_key
 from axonops_schema_registry_spark.operators.text import (
@@ -33,6 +61,10 @@ from axonops_schema_registry_spark.operators.text import (
     normalize_name_snake_str,
 )
 from axonops_schema_registry_spark.registry.compat import check_compatibility
+from axonops_schema_registry_spark.registry.fields import (
+    FIELD_INFO_DDL,
+    extract_fields,
+)
 from axonops_schema_registry_spark.registry.registration import (
     import_batch,
     register_batch,
@@ -44,7 +76,113 @@ from axonops_schema_registry_spark.registry.spark_udfs import (
 )
 
 
+class _Snapshot:
+    """One corpus generation in driver memory: the collected Arrow table,
+    its row positions per subject sorted by version, and, built on first
+    use, the exploded field table and the subject-similarity pairs."""
+
+    def __init__(self, table: pa.Table, schema: StructType) -> None:
+        self.table = table
+        self.schema = schema
+        keys = table.select(["subject", "version", "deleted"]).to_pandas()
+        # Spark's ascending order puts null versions first
+        order = keys.sort_values("version", kind="stable",
+                                 na_position="first").index.to_numpy()
+        groups = keys.iloc[order].groupby("subject", sort=False).indices
+        self.rows = {s: order[p] for s, p in groups.items()}
+        # a null ``deleted`` fails Spark's ~deleted filter too
+        self.live_mask = keys["deleted"].eq(False).to_numpy()
+        self.field_schema = StructType(
+            [schema["subject"], schema["version"],
+             *DataType.fromDDL(FIELD_INFO_DDL).fields])
+        subject = schema["subject"]
+        self.pair_schema = StructType(
+            [StructField("subject_b", subject.dataType, subject.nullable),
+             StructField("subject_a", subject.dataType, subject.nullable),
+             StructField("n_shared", LongType(), False),
+             StructField("size_a", LongType(), False),
+             StructField("size_b", LongType(), False),
+             StructField("jaccard", DoubleType(), True)])
+        self._lock = threading.RLock()
+        self._fields: pa.Table | None = None
+        self._pairs: pd.DataFrame | None = None
+
+    def positions(self, subject: str, include_deleted: bool) -> np.ndarray:
+        pos = self.rows.get(subject, np.empty(0, dtype=np.int64))
+        return pos if include_deleted else pos[self.live_mask[pos]]
+
+    def column(self, name: str, pos: np.ndarray) -> list:
+        return self.table.column(name).take(pos).to_pylist()
+
+    def fields(self) -> pa.Table:
+        """Every live row's extracted fields, plus ``norm_name`` and the
+        row's position in ``table`` (``__row``)."""
+        with self._lock:
+            if self._fields is None:
+                self._fields = self._extract_fields()
+            return self._fields
+
+    def _extract_fields(self) -> pa.Table:
+        names = self.field_schema.fieldNames()
+        cols: dict[str, list] = {n: [] for n in names + ["__row"]}
+        pos = np.flatnonzero(self.live_mask)
+        for row, subject, version, text, stype in zip(
+                pos, *(self.column(c, pos) for c in (
+                    "subject", "version", "schema_text", "schema_type"))):
+            for f in extract_fields(text, stype):
+                cols["subject"].append(subject)
+                cols["version"].append(version)
+                for n in names[2:]:
+                    cols[n].append(f.get(n))
+                cols["__row"].append(int(row))
+        arrow = to_arrow_schema(self.field_schema)
+        table = pa.Table.from_pydict(
+            cols, schema=arrow.append(pa.field("__row", pa.int64())))
+        norm = [normalize_name_snake_str(n) if n is not None else None
+                for n in cols["name"]]
+        return table.append_column("norm_name", pa.array(norm, pa.string()))
+
+    def pairs(self) -> pd.DataFrame:
+        """Jaccard over the normalised field-name sets of each subject's
+        latest live version, for every pair sharing at least one name."""
+        with self._lock:
+            if self._pairs is None:
+                self._pairs = self._similarity_pairs()
+            return self._pairs
+
+    def _similarity_pairs(self) -> pd.DataFrame:
+        latest = [p[-1] for p in (self.positions(s, False)
+                                  for s in self.rows) if len(p)]
+        ft = self.fields().select(["__row", "subject", "norm_name"])
+        names = (ft.filter(pc.is_in(ft["__row"], pa.array(latest, pa.int64())))
+                 .select(["subject", "norm_name"]).to_pandas()
+                 .drop_duplicates())
+        sizes = names.groupby("subject").size()
+        named = names.dropna(subset=["norm_name"])
+        pairs = named.merge(named, on="norm_name", suffixes=("_a", "_b"))
+        pairs = pairs[pairs["subject_a"] < pairs["subject_b"]]
+        out = (pairs.groupby(["subject_a", "subject_b"]).size()
+               .rename("n_shared").reset_index())
+        out["size_a"] = out["subject_a"].map(sizes)
+        out["size_b"] = out["subject_b"].map(sizes)
+        out["jaccard"] = (out["n_shared"]
+                          / (out["size_a"] + out["size_b"] - out["n_shared"]))
+        return out[self.pair_schema.fieldNames()]
+
+
 class RegistryAnalytics:
+    # Point and field reads hold the whole corpus in driver memory: every
+    # schema text (a few KB each) plus a field table several rows per
+    # schema.  At 20,000 rows that is on the order of 100 MB of driver
+    # heap; a larger corpus keeps those reads distributed on Spark.
+    SNAPSHOT_ROW_CAP = 20_000
+
+    # A subject's history is versions-per-subject sized (small), but a
+    # point check must not OOM the driver on a pathological subject: cap
+    # the collect at the NEWEST versions — exactly the scope every
+    # latest-only mode uses, and the tail transitive modes check first.
+    CHECK_HISTORY_CAP = 1000
+
     def __init__(self, spark: SparkSession, corpus: DataFrame,
                  sf_dir: str | None = None) -> None:
         self.spark = spark
@@ -52,6 +190,9 @@ class RegistryAnalytics:
             corpus = corpus.withColumn("deleted", F.lit(False))
         self.corpus = corpus
         self.sf_dir = sf_dir
+        self._lock = threading.Lock()
+        self._snap: _Snapshot | None = None
+        self._snap_built = False
 
     @classmethod
     def from_sf_dir(cls, spark: SparkSession,
@@ -64,6 +205,25 @@ class RegistryAnalytics:
             "schema_type", F.lit("RAW"))
         return cls(spark, corpus, sf_dir=sf_dir)
 
+    # -- the driver-side snapshot ------------------------------------------
+
+    def _snapshot(self) -> _Snapshot | None:
+        """The corpus as one driver-side snapshot, collected on first use;
+        None when the corpus is above ``SNAPSHOT_ROW_CAP``."""
+        with self._lock:
+            if not self._snap_built:
+                table = self.corpus.limit(self.SNAPSHOT_ROW_CAP + 1).toArrow()
+                if table.num_rows <= self.SNAPSHOT_ROW_CAP:
+                    self._snap = _Snapshot(table, self.corpus.schema)
+                self._snap_built = True
+            return self._snap
+
+    def _frame(self, table: pa.Table, schema: StructType) -> DataFrame:
+        """A DataFrame over driver rows, built through Arrow so that it
+        collects without a Spark job."""
+        return self.spark.createDataFrame(
+            table.select(schema.fieldNames()), schema=schema)
+
     # -- read surface ------------------------------------------------------
 
     def live(self) -> DataFrame:
@@ -75,6 +235,10 @@ class RegistryAnalytics:
 
     def latest(self, subject: str | None = None) -> DataFrame:
         """GET /subjects/{s}/versions/latest (all subjects when None)."""
+        snap = self._snapshot() if subject is not None else None
+        if snap is not None:
+            pos = snap.positions(subject, False)[-1:]
+            return self._frame(snap.table.take(pos), snap.schema)
         live = self.live()
         if subject is not None:
             live = live.filter(F.col("subject") == subject)
@@ -83,6 +247,10 @@ class RegistryAnalytics:
     def history(self, subject: str,
                 include_deleted: bool = False) -> DataFrame:
         """GET /subjects/{s}/versions"""
+        snap = self._snapshot()
+        if snap is not None:
+            pos = snap.positions(subject, include_deleted)
+            return self._frame(snap.table.take(pos), snap.schema)
         src = self.corpus if include_deleted else self.live()
         return src.filter(F.col("subject") == subject).orderBy("version")
 
@@ -101,7 +269,17 @@ class RegistryAnalytics:
     # -- schema intelligence ----------------------------------------------
 
     def fields(self) -> DataFrame:
-        """The exploded FieldInfo table (computed once, reuse downstream)."""
+        """The exploded FieldInfo table of the live rows (extracted once
+        per snapshot, reuse downstream)."""
+        snap = self._snapshot()
+        if snap is not None:
+            return self._frame(snap.fields(), snap.field_schema)
+        return self.field_plan()
+
+    def field_plan(self) -> DataFrame:
+        """The same table as a lazy Spark plan that extracts on every
+        evaluation: what ``fields`` runs above the cap, and the body of
+        SQL views, which must not read the corpus when registered."""
         ship_package(self.spark)
         fields_udf = extract_fields_udf()
         return (self.live()
@@ -111,9 +289,14 @@ class RegistryAnalytics:
 
     def search_fields(self, term: str) -> DataFrame:
         """POST /schemas/search/field (exact mode w/ naming variants)."""
-        fields = self.fields().withColumn(
-            "norm_name", normalize_name_snake(F.col("name")))
         norm_term = normalize_name_snake_str(term)
+        snap = self._snapshot()
+        if snap is not None:
+            ft = snap.fields()
+            hits = ft.filter(pc.equal(ft["norm_name"], norm_term))
+            return self._frame(hits, snap.field_schema[:5])
+        fields = self.field_plan().withColumn(
+            "norm_name", normalize_name_snake(F.col("name")))
         return fields.filter(F.col("norm_name") == norm_term) \
                      .select("subject", "version", "name", "path", "type")
 
@@ -122,7 +305,15 @@ class RegistryAnalytics:
         each subject's latest live version (a latest version without
         fields gives the subject an empty set, not an older version's).
         Fields are extracted from the latest rows only, one per subject."""
-        latest_fields = RegistryAnalytics(self.spark, self.latest()).fields()
+        snap = self._snapshot()
+        if snap is not None:
+            pairs = snap.pairs()
+            hits = pairs[pairs["jaccard"] >= threshold]
+            return self._frame(
+                pa.Table.from_pandas(hits, preserve_index=False),
+                snap.pair_schema)
+        latest_fields = RegistryAnalytics(self.spark,
+                                          self.latest()).field_plan()
         names = (latest_fields
                  .select("subject",
                          normalize_name_snake(F.col("name"))
@@ -150,21 +341,20 @@ class RegistryAnalytics:
 
     # -- write surface -----------------------------------------------------
 
-    # A subject's history is versions-per-subject sized (small), but a
-    # point check must not OOM the driver on a pathological subject: cap
-    # the collect at the NEWEST versions — exactly the scope every
-    # latest-only mode uses, and the tail transitive modes check first.
-    CHECK_HISTORY_CAP = 1000
-
     def check(self, new_schema: str, subject: str, mode: str = "BACKWARD",
               schema_type: str = "AVRO") -> tuple[bool, list[str]]:
         """POST /compatibility/subjects/{s}/versions — driver-side verdict
-        against the subject's (collected, capped) history."""
-        rows = (self.history(subject).select("version", "schema_text")
-                .orderBy(F.desc("version")).limit(self.CHECK_HISTORY_CAP)
-                .collect())
-        history = [r.schema_text for r in sorted(rows,
-                                                 key=lambda r: r.version)]
+        against the subject's (capped) history."""
+        snap = self._snapshot()
+        if snap is not None:
+            pos = snap.positions(subject, False)[-self.CHECK_HISTORY_CAP:]
+            history = snap.column("schema_text", pos)
+        else:
+            rows = (self.history(subject).select("version", "schema_text")
+                    .orderBy(F.desc("version")).limit(self.CHECK_HISTORY_CAP)
+                    .collect())
+            history = [r.schema_text
+                       for r in sorted(rows, key=lambda r: r.version)]
         return check_compatibility(new_schema, history, mode, schema_type)
 
     def register(self, incoming: DataFrame, mode: str = "BACKWARD",
@@ -240,12 +430,18 @@ class RegistryAnalytics:
             suggest_and_verify,
         )
 
-        row = (self.latest(subject)
-               .select("schema_type", "schema_text").take(1))
-        if not row:
+        snap = self._snapshot()
+        if snap is not None:
+            pos = snap.positions(subject, False)[-1:]
+            rows = list(zip(snap.column("schema_text", pos),
+                            snap.column("schema_type", pos)))
+        else:
+            rows = [(r.schema_text, r.schema_type) for r in
+                    self.latest(subject).select("schema_text",
+                                                "schema_type").take(1)]
+        if not rows:
             return {"error": "Subject not found"}
-        return suggest_and_verify(row[0].schema_text, row[0].schema_type,
-                                  level, change_type, field_name,
+        return suggest_and_verify(*rows[0], level, change_type, field_name,
                                   field_type, enum_symbol)
 
     def validate_schema(self, schema_text: str,

@@ -6,8 +6,10 @@ query surface is reachable from ``spark.sql``:
 - temp views: every driver table, the ``registry_corpus`` derivation, its
   ``registry_live`` (soft-delete-filtered) twin, and the exploded
   ``fixture_fields`` table.  These three are ``RegistryAnalytics.corpus``,
-  ``.live()`` and ``.fields()`` (``api.py``), so the SQL door and the
-  facade read the registry through one implementation;
+  ``.live()`` and ``.field_plan()`` (``api.py``), so the SQL door and the
+  facade read the registry through one implementation.  They stay lazy
+  Spark plans: registering them reads nothing, and the facade's
+  driver-side snapshot does not back them;
 - SQL functions: ``canonical_fingerprint(text, type)``,
   ``check_compat(reader, writer, type)`` (returns is_compatible),
   ``normalize_field_name(name)``, ``glob_regex(pattern)``.
@@ -39,7 +41,7 @@ def register_all(spark: SparkSession, sf_dir: str) -> None:
     reg = RegistryAnalytics(spark, registry_corpus(spark, sf_dir))
     reg.corpus.createOrReplaceTempView("registry_corpus")
     reg.live().createOrReplaceTempView("registry_live")
-    (RegistryAnalytics(spark, fixture_schemas(spark)).fields()
+    (RegistryAnalytics(spark, fixture_schemas(spark)).field_plan()
      .createOrReplaceTempView("fixture_fields"))
 
     @F.pandas_udf("string")

@@ -2,11 +2,15 @@
 
 from __future__ import annotations
 
+import hashlib
+
 import pytest
 from pyspark.sql import functions as F
 
 from axonops_schema_registry_spark.api import RegistryAnalytics
 from axonops_schema_registry_spark.registry.model import (
+    AVRO_USER_V1,
+    AVRO_USER_V2,
     AVRO_USER_V2_BAD,
     AVRO_USER_V3,
     fixture_schemas,
@@ -122,7 +126,10 @@ def test_facade_mode_gating(spark, reg):
 def test_facade_export_subject(reg):
     bundle = {r.subject: r for r in reg.export_subject().collect()}
     assert bundle["user-value"].n_versions == 2
-    assert bundle["user-value"].versions_bundle.startswith("0001:")
+    # "vvvv:sha256(schema_text)" per live version, sorted, "|"-joined
+    assert bundle["user-value"].versions_bundle == "|".join(
+        f"{v:04d}:{hashlib.sha256(text.encode()).hexdigest()}"
+        for v, text in ((1, AVRO_USER_V1), (2, AVRO_USER_V2)))
 
 
 def test_facade_dependency_graph(spark, reg):
