@@ -17,8 +17,9 @@ The corpus contract is the FIXTURES.md §1 ``schemas`` shape:
 (subject, version, schema_type, schema_text[, deleted][, fingerprint]).
 
 A facade is one generation of its corpus.  Point reads (``latest(s)``,
-``history(s)``, ``check``, ``suggest_evolution``) and field reads
-(``fields``, ``search_fields``, ``similar_subjects``) answer from a
+``history(s)``, ``check``, ``suggest_evolution``), ``statistics`` and
+field reads (``fields``, ``search_fields``, ``similar_subjects``) answer
+from a
 driver-side snapshot of that corpus: one Arrow collect on the first such
 call, the field table extracted in-process on the first field read, both
 kept for the facade's life and freed with it (no Spark cache).  Their
@@ -28,8 +29,9 @@ snapshot does not see rows appended after it was taken: build a new
 facade after an append (a ``spark.read.parquet`` DataFrame keeps the file
 list it was created with, so its generation is fixed anyway).  The
 all-subject reads (``latest()``, ``live``, ``subjects``,
-``versions_view``, ``statistics``), ``field_plan`` (the SQL surface's
-field view), ``register`` and the rest return lazy Spark DataFrames.
+``versions_view``), ``field_plan`` (the SQL surface's field view) and
+the rest return lazy Spark DataFrames.  ``register`` is eager for a
+batch below ``registration.REGISTER_ROW_CAP`` rows (see its docstring).
 
 This class is the one implementation of the registry's reads: the SQL
 surface's registry views and the registry query specs call it, so the
@@ -261,7 +263,23 @@ class RegistryAnalytics:
                      F.count(F.lit(1)).alias("version_count")))
 
     def statistics(self) -> DataFrame:
-        """GET /analysis/statistics"""
+        """GET /analysis/statistics: per schema type (a null type is one
+        group), the distinct non-null subjects and the live versions."""
+        snap = self._snapshot()
+        if snap is not None:
+            schema = StructType(
+                [snap.schema["schema_type"],
+                 StructField("n_subjects", LongType(), False),
+                 StructField("n_versions", LongType(), False)])
+            stats = (snap.table.filter(pa.array(snap.live_mask))
+                     .group_by("schema_type")
+                     .aggregate([("subject", "count_distinct"),
+                                 ("subject", "count",
+                                  pc.CountOptions(mode="all"))])
+                     .select(["schema_type", "subject_count_distinct",
+                              "subject_count"])
+                     .rename_columns(schema.fieldNames()))
+            return self._frame(stats, schema)
         return (self.live().groupBy("schema_type")
                 .agg(F.countDistinct("subject").alias("n_subjects"),
                      F.count(F.lit(1)).alias("n_versions")))
@@ -360,9 +378,13 @@ class RegistryAnalytics:
     def register(self, incoming: DataFrame, mode: str = "BACKWARD",
                  modes: DataFrame | None = None,
                  levels: DataFrame | None = None) -> DataFrame:
-        """POST /subjects/{s}/versions for a batch: one cogroup per
-        subject over the batch and that subject's stored history only
-        (:func:`registry.registration.register_batch`); caches nothing.
+        """POST /subjects/{s}/versions for a batch
+        (:func:`registry.registration.register_batch`): the per-subject
+        write path over the batch and its subjects' stored histories only;
+        caches nothing.  Below ``REGISTER_ROW_CAP`` rows it runs on the
+        driver and is eager — the batch, the histories and each config
+        table are read here, once, and the returned DataFrame collects
+        without a Spark job; above the cap it returns the lazy cogroup.
         ``modes`` enables write-mode gating (PUT /mode semantics) and
         ``levels`` per-subject configured compatibility (PUT /config)."""
         return register_batch(

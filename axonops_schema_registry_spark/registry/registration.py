@@ -1,44 +1,63 @@
-"""The registration pipeline (SURVEY.md §2.10) as one cogroup per subject.
+"""The registration pipeline (SURVEY.md §2.10): the per-subject serial
+write path, run on the driver for a small batch and as one cogroup per
+subject above ``REGISTER_ROW_CAP``.
 
 Reference write path (/root/reference/internal/registry/registry.go:63-220 +
 postgres/store.go:540-680): parse → canonicalize → fingerprint → dedup →
 compatibility gate → version allocation → append.  The reference takes a
 per-subject lock and runs that pipeline serially; the batch model keeps
 the per-subject serial order and drops the lock — subjects are
-independent, so they run in parallel, one group each.
+independent, so each one is a group of its own.
 
-Plan (lazy, one cogroup):
-1. write modes and configured levels resolve onto the incoming rows with
-   the broadcast joins of :mod:`registry.modes` — the block status and
-   the level ride along as columns;
-2. the existing corpus is cut to the batch's (ctx, subject) keys with a
-   broadcast ``left_semi`` join, so Python sees only the histories of the
-   subjects the batch writes to, never the rest of the corpus;
-3. ``groupBy(keys).cogroup(...).applyInPandas`` runs the whole write path
-   per subject, candidates in ``seq`` order (:func:`_register_subject`):
-   block → fingerprint → dedup vs the live history → compatibility gate →
-   version allocation.  A candidate identical to an earlier *accepted*
-   candidate is a duplicate; identical to an earlier *rejected* one is
-   re-checked (and rejected as incompatible, not duplicate) — both match
-   sequential-server behavior.
+:func:`_write_path` runs the whole write path for one subject,
+candidates in ``seq`` order: block → fingerprint → dedup vs the live
+history → compatibility gate → version allocation.  A candidate identical
+to an earlier *accepted* candidate is a duplicate; identical to an
+earlier *rejected* one is re-checked (and rejected as incompatible, not
+duplicate) — both match sequential-server behavior.  Two dispatchers feed
+it the same rows, and each input is read once:
 
-Fingerprints are computed in-process for the batch's subjects only (a few
-rows per subject), so no corpus-wide fingerprint pass and no cache is
-needed.  Level NONE is the same path with the compatibility check
-answering yes.  Per-group state is one subject's version history, which
-is bounded.
+- **in-process** (a batch and its subjects' histories of at most
+  ``REGISTER_ROW_CAP`` rows each): one Arrow collect of the batch, one of
+  the stored rows of its subjects (a literal ``isin`` filter the parquet
+  scan can push down, so the batch is not evaluated again), and one
+  collect per config table (:func:`registry.modes.resolve_mode` /
+  ``resolve_level``, looked up per row on the driver).  The groups run in
+  the driver process and the result is an Arrow-built DataFrame, so
+  ``register_batch`` is eager on this path: its Spark jobs run when it is
+  called, and collecting the result runs none.
+- **cogroup** (above the cap): a lazy plan once each config table is
+  read (one collect each).  The write modes and levels resolve onto the
+  incoming rows as one broadcast join each
+  (:func:`registry.modes.with_resolved_mode` / ``with_resolved_level``);
+  the corpus is cut to the batch's (ctx, subject) keys with a broadcast
+  ``left_semi`` join; ``groupBy(keys).cogroup(...).applyInPandas`` runs
+  the write path per subject in Python workers.  It is also the oracle
+  of the in-process path (``tests/test_registration_oracle.py``).
+
+Fingerprints are computed for the batch's subjects only (a few rows per
+subject), so no corpus-wide fingerprint pass and no cache is needed.
+Level NONE is the same path with the compatibility check answering yes.
+Per-group state is one subject's version history, which is bounded.
 """
 
 from __future__ import annotations
 
 import hashlib
 from collections import defaultdict
+from functools import partial
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
 from axonops_schema_registry_spark.registry.modes import (
+    BLOCK_STATUS,
+    resolve_level,
+    resolve_mode,
     with_resolved_level,
     with_resolved_mode,
     write_block_status,
@@ -47,6 +66,13 @@ from axonops_schema_registry_spark.registry.spark_udfs import (
     canonical_fingerprint,
     ship_package,
 )
+
+# The in-process path holds the batch and its subjects' stored histories
+# in driver memory: every schema text (a few KB each) of each.  At 20,000
+# rows a side that is on the order of 100 MB of driver heap, the bound
+# the read snapshot keeps too (``RegistryAnalytics.SNAPSHOT_ROW_CAP``); a
+# larger batch or history runs the cogroup.
+REGISTER_ROW_CAP = 20_000
 
 def _reserved_set(metadata_json) -> set[str]:
     """'confluent:reserved' comma-list from a metadata JSON text
@@ -89,14 +115,17 @@ def _group_key(value):
     return None if pd.isna(value) else value
 
 
-def _register_subject(ctx_col: str | None, native_fingerprint: bool,
-                      grouped: bool, validate_fields: bool):
+def _write_path(cand: list[tuple], hist: list[tuple],
+                native_fingerprint: bool,
+                validate_fields: bool) -> tuple[list, list, list]:
     """The serial write path for one (ctx, subject): candidates × history.
 
-    ``cand`` holds the subject's batch rows with ``__block`` (the write-mode
-    block status, NULL when writes are allowed) and ``__level`` (the
-    resolved compatibility level); ``hist`` holds the subject's stored
-    rows, soft-deleted ones included.  Per candidate, in ``seq`` order:
+    ``cand`` holds the subject's batch rows in ``seq`` order as (block,
+    level, schema_text, schema_type, group, metadata): ``block`` is the
+    write-mode block status (None when writes are allowed), ``level`` the
+    resolved compatibility level.  ``hist`` holds the subject's stored
+    rows, soft-deleted ones included, in ``version`` order as (version,
+    deleted, schema_text, schema_type, group, metadata).  Per candidate:
 
     1. a blocked row short-circuits with its block status;
     2. fingerprint (:func:`_fingerprint`);
@@ -105,7 +134,7 @@ def _register_subject(ctx_col: str | None, native_fingerprint: bool,
     4. the compatibility check runs against the (group's) live history
        plus this batch's earlier acceptances.  With ``validate_fields``
        the reserved-field rules run next, on the candidate's RAW
-       ``__metadata`` against the latest stored metadata
+       metadata against the latest stored metadata
        (registry.go:175-180, 1483-1512): a reserved name colliding with a
        top-level schema field, or a previously reserved name dropped from
        the request, rejects the row as ``reserved_conflict`` (the
@@ -117,67 +146,77 @@ def _register_subject(ctx_col: str | None, native_fingerprint: bool,
        (store.go:553-557), and allocation stays per subject across
        compatibility groups.
 
-    With ``grouped`` the dedup and the gate see only the history of the
-    candidate's own ``__group`` (registry.go:1399-1431)."""
+    Groups are None unless the batch has a compatibility-group column:
+    then the dedup and the gate see only the history of the candidate's
+    own group (registry.go:1399-1431).  Returns the status, the assigned
+    version and the issue count per candidate."""
+    from axonops_schema_registry_spark.registry.compat import (
+        check_compatibility,
+    )
 
-    def column(df: pd.DataFrame, name: str, present: bool = True) -> list:
-        return df[name].tolist() if present else [None] * len(df)
+    # per gate group: [live texts oldest first, their fingerprints plus
+    # this batch's accepted ones, latest stored metadata]
+    state: dict = defaultdict(lambda: [[], set(), None])
+    version = int(max((r[0] for r in hist if pd.notna(r[0])), default=0))
+    for _, deleted, text, stype, group, meta in hist:
+        if deleted is None or deleted:
+            continue
+        g = state[_group_key(group)]
+        g[0].append(text)
+        g[1].add(_fingerprint(text, stype, native_fingerprint))
+        g[2] = meta
+
+    status, assigned, n_issues = [], [], []
+    for block, level, text, stype, group, meta in cand:
+        verdict, issues = block or "registered", 0
+        if block is None:
+            g = state[_group_key(group)]
+            fp = _fingerprint(text, stype, native_fingerprint)
+            if fp in g[1]:
+                verdict = "duplicate"
+            else:
+                ok, msgs = check_compatibility(text, g[0], level, stype)
+                if not ok:
+                    verdict, issues = "incompatible", len(msgs)
+                elif validate_fields:
+                    reserved = _reserved_set(meta)
+                    issues = len(_reserved_set(g[2]) - reserved)
+                    issues += len(reserved & _top_level_fields(text, stype))
+                    if issues:
+                        verdict = "reserved_conflict"
+                    elif meta is not None:
+                        g[2] = meta
+            if verdict == "registered":
+                g[0].append(text)
+                g[1].add(fp)
+                version += 1
+        status.append(verdict)
+        assigned.append(version if verdict == "registered" else None)
+        n_issues.append(issues)
+    return status, assigned, n_issues
+
+
+CAND_COLUMNS = ("__block", "__level", "schema_text", "schema_type",
+                "__group", "__metadata")
+HIST_COLUMNS = ("version", "deleted", "schema_text", "schema_type",
+                "__group", "__metadata")
+
+
+def _register_subject(ctx_col: str | None, write):
+    """:func:`_write_path` as the cogroup's function: one (ctx, subject)'s
+    candidate and history frames in, its result frame out.  A column the
+    frames lack (``__group``, ``__metadata``) reads as None."""
+
+    def rows(df: pd.DataFrame, names: tuple) -> list[tuple]:
+        return list(zip(*(df[n].tolist() if n in df.columns
+                          else [None] * len(df) for n in names)))
 
     def register(cand: pd.DataFrame, hist: pd.DataFrame) -> pd.DataFrame:
-        from axonops_schema_registry_spark.registry.compat import (
-            check_compatibility,
-        )
-
-        # per gate group: [live texts oldest first, their fingerprints plus
-        # this batch's accepted ones, latest stored metadata]
-        state: dict = defaultdict(lambda: [[], set(), None])
-        version = 0
         if len(hist):  # an empty cogroup side arrives without columns
             hist = hist.sort_values("version", kind="stable")
-            version = int(hist["version"].max())
-            live = hist[hist["deleted"].eq(False)]
-            for text, stype, group, meta in zip(
-                    column(live, "schema_text"), column(live, "schema_type"),
-                    column(live, "__group", grouped),
-                    column(live, "__metadata", validate_fields)):
-                g = state[_group_key(group)]
-                g[0].append(text)
-                g[1].add(_fingerprint(text, stype, native_fingerprint))
-                g[2] = meta
-
         cand = cand.sort_values("seq", kind="stable")
-        status, assigned, n_issues = [], [], []
-        for block, level, text, stype, group, meta in zip(
-                column(cand, "__block"), column(cand, "__level"),
-                column(cand, "schema_text"), column(cand, "schema_type"),
-                column(cand, "__group", grouped),
-                column(cand, "__metadata", validate_fields)):
-            verdict, issues = block or "registered", 0
-            if block is None:
-                g = state[_group_key(group)]
-                fp = _fingerprint(text, stype, native_fingerprint)
-                if fp in g[1]:
-                    verdict = "duplicate"
-                else:
-                    ok, msgs = check_compatibility(text, g[0], level, stype)
-                    if not ok:
-                        verdict, issues = "incompatible", len(msgs)
-                    elif validate_fields:
-                        reserved = _reserved_set(meta)
-                        issues = len(_reserved_set(g[2]) - reserved)
-                        issues += len(reserved & _top_level_fields(text,
-                                                                   stype))
-                        if issues:
-                            verdict = "reserved_conflict"
-                        elif meta is not None:
-                            g[2] = meta
-                if verdict == "registered":
-                    g[0].append(text)
-                    g[1].add(fp)
-                    version += 1
-            status.append(verdict)
-            assigned.append(version if verdict == "registered" else None)
-            n_issues.append(issues)
+        status, assigned, n_issues = write(rows(cand, CAND_COLUMNS),
+                                           rows(hist, HIST_COLUMNS))
         out = cand[([ctx_col] if ctx_col else []) + ["subject", "seq"]]
         return out.assign(status=status,
                           assigned_version=pd.array(assigned, dtype="Int32"),
@@ -215,8 +254,8 @@ def register_batch(spark: SparkSession, existing: DataFrame,
     j6_config_fallback is the read-side twin).  With ``ctx_col`` set and
     a (registry_ctx, subject, level) table, the FULL 4-tier chain
     applies: per-(ctx, subject) → ctx global → __GLOBAL context global
-    → ``mode``.  Broadcast joins only; the gate reads the resolved level
-    per row.
+    → ``mode``.  Each config table is read once; the gate reads the
+    resolved level per row.
 
     ``native_fingerprint``: dedup on SHA-256 of the raw text instead of
     the strict canonical form — for opaque (RAW) content.
@@ -235,7 +274,7 @@ def register_batch(spark: SparkSession, existing: DataFrame,
     version allocation stays per subject (store.go:553-557).
 
     ``metadata_col`` + ``validate_fields``: the reserved-field rules on
-    the request metadata (see :func:`_register_subject`); the column must
+    the request metadata (see :func:`_write_path`); the column must
     be present in BOTH frames.
 
     Soft-delete lifecycle (postgres/store.go:617-625,
@@ -247,46 +286,129 @@ def register_batch(spark: SparkSession, existing: DataFrame,
 
     Returns ([ctx,] subject, seq, status, assigned_version, n_issues) with
     status ∈ {registered, duplicate, incompatible, reserved_conflict,
-    readonly_mode, import_mode}; ``seq`` keeps the incoming column's type.
+    readonly_mode, import_mode}; ``seq`` keeps the incoming column's type
+    and every column is nullable.  A batch and a subject history of at
+    most ``REGISTER_ROW_CAP`` rows each run in-process and eagerly (the
+    Spark jobs that read the inputs run here); a larger one returns the
+    lazy cogroup plan.
     """
-    ship_package(spark)
     mode = (mode or "BACKWARD").upper()
     keys = ([ctx_col] if ctx_col else []) + ["subject"]
     vf = validate_fields and metadata_col is not None
     extra = (([F.col(group_col).alias("__group")] if group_col else [])
              + ([F.col(metadata_col).alias("__metadata")] if vf else []))
-
-    # duplicates are harmless on the build side of a semi join
-    batch_keys = incoming.select(*keys)
-    if modes is not None:
-        incoming = with_resolved_mode(incoming, modes, ctx_col=ctx_col) \
-            .withColumn("__block", write_block_status())
-    else:
-        incoming = incoming.withColumn("__block", F.lit(None).cast("string"))
-    if levels is not None:
-        incoming = with_resolved_level(incoming, levels, ctx_col=ctx_col,
-                                       default=mode) \
-            .withColumnRenamed("resolved_level", "__level")
-    else:
-        incoming = incoming.withColumn("__level", F.lit(mode))
     cand = incoming.select(*keys, "seq", "schema_type", "schema_text",
-                           "__block", "__level", *extra)
-
+                           *extra)
     if "deleted" not in existing.columns:
         existing = existing.withColumn("deleted", F.lit(False))
-    hist = (existing.join(F.broadcast(batch_keys), keys, "left_semi")
-            .select(*keys, "version", "schema_type", "schema_text",
-                    "deleted", *extra))
+    hist = existing.select(*keys, "version", "schema_type", "schema_text",
+                           "deleted", *extra)
+    out_schema = StructType(
+        [StructField(k, StringType()) for k in keys]
+        + [StructField("seq", incoming.schema["seq"].dataType),
+           StructField("status", StringType()),
+           StructField("assigned_version", IntegerType()),
+           StructField("n_issues", IntegerType())])
+    write = partial(_write_path, native_fingerprint=native_fingerprint,
+                    validate_fields=vf)
 
-    ctx_ddl = f"{ctx_col} string, " if ctx_col else ""
-    seq_ddl = incoming.schema["seq"].dataType.simpleString()
-    out_ddl = (f"{ctx_ddl}subject string, seq {seq_ddl}, status string, "
-               "assigned_version int, n_issues int")
-    return (cand.groupBy(*keys)
+    batch = cand.limit(REGISTER_ROW_CAP + 1).toArrow()
+    if batch.num_rows <= REGISTER_ROW_CAP:
+        subjects = sorted(set(batch.column("subject").to_pylist()) - {None})
+        stored = (hist.filter(F.col("subject").isin(subjects))
+                  .limit(REGISTER_ROW_CAP + 1).toArrow() if subjects
+                  else None)
+        if stored is None or stored.num_rows <= REGISTER_ROW_CAP:
+            return _register_in_process(
+                spark, batch, stored, keys, mode, modes, levels, ctx_col,
+                write, out_schema)
+    return _register_cogroup(spark, cand, hist, keys, mode, modes, levels,
+                             ctx_col, write, out_schema)
+
+
+def _nulls_last(value) -> tuple:
+    """Sort key of pandas' stable ascending sort: nulls last."""
+    return (value is None, 0 if value is None else value)
+
+
+def _register_in_process(spark: SparkSession, batch: pa.Table,
+                         stored: pa.Table | None, keys: list[str],
+                         mode: str, modes: DataFrame | None,
+                         levels: DataFrame | None, ctx_col: str | None,
+                         write, out_schema: StructType) -> DataFrame:
+    """The per-subject write path over collected rows, on the driver: the
+    groups and orders the cogroup gives it, without Spark or pandas."""
+    n = batch.num_rows
+    cols = batch.to_pydict()
+    subjects = cols["subject"]
+    ctxs = cols[ctx_col] if ctx_col else [None] * n
+    block, level = [None] * n, [mode] * n
+    if modes is not None:
+        res = resolve_mode(modes, ctx_col)
+        block = [BLOCK_STATUS.get(res.get(s, c))
+                 for s, c in zip(subjects, ctxs)]
+    if levels is not None:
+        res = resolve_level(levels, ctx_col, default=mode)
+        level = [res.get(s, c) for s, c in zip(subjects, ctxs)]
+    cols.update(__block=block, __level=level)
+    cand = list(zip(*(cols.get(c, [None] * n) for c in CAND_COLUMNS)))
+
+    # the batch's NULL keys form one group (as in the cogroup); a NULL key
+    # matches no stored row (as in the semi join)
+    groups: dict = defaultdict(list)
+    for i, key in enumerate(zip(*(cols[k] for k in keys))):
+        groups[key].append(i)
+    histories: dict = defaultdict(list)
+    if stored is not None:
+        m, h = stored.num_rows, stored.to_pydict()
+        for key, row in zip(zip(*(h[k] for k in keys)),
+                            zip(*(h.get(c, [None] * m)
+                                  for c in HIST_COLUMNS))):
+            if None not in key:
+                histories[key].append(row)
+
+    status, assigned, n_issues = [None] * n, [None] * n, [0] * n
+    seq = cols["seq"]
+    for key, idx in groups.items():
+        idx.sort(key=lambda i: _nulls_last(seq[i]))
+        hist = sorted(histories.get(key, ()), key=lambda r: _nulls_last(r[0]))
+        for i, *verdict in zip(idx, *write([cand[i] for i in idx], hist)):
+            status[i], assigned[i], n_issues[i] = verdict
+    arrow = to_arrow_schema(out_schema)
+    table = pa.Table.from_arrays(
+        [batch.column(c) for c in keys + ["seq"]]
+        + [pa.array(status, pa.string()), pa.array(assigned, pa.int32()),
+           pa.array(n_issues, pa.int32())],
+        names=arrow.names).cast(arrow)
+    return spark.createDataFrame(table, schema=out_schema)
+
+
+def _register_cogroup(spark: SparkSession, cand: DataFrame,
+                      hist: DataFrame, keys: list[str], mode: str,
+                      modes: DataFrame | None, levels: DataFrame | None,
+                      ctx_col: str | None, write,
+                      out_schema: StructType) -> DataFrame:
+    """The per-subject write path as one lazy cogroup per (ctx, subject)
+    over the batch and the histories of its keys."""
+    ship_package(spark)
+    # duplicates are harmless on the build side of a semi join
+    hist = hist.join(F.broadcast(cand.select(*keys)), keys, "left_semi")
+    columns = cand.columns
+    if modes is not None:
+        cand = with_resolved_mode(cand, modes, ctx_col=ctx_col) \
+            .withColumn("__block", write_block_status())
+    else:
+        cand = cand.withColumn("__block", F.lit(None).cast("string"))
+    if levels is not None:
+        cand = with_resolved_level(cand, levels, ctx_col=ctx_col,
+                                   default=mode) \
+            .withColumnRenamed("resolved_level", "__level")
+    else:
+        cand = cand.withColumn("__level", F.lit(mode))
+    return (cand.select(*columns, "__block", "__level")
+            .groupBy(*keys)
             .cogroup(hist.groupBy(*keys))
-            .applyInPandas(_register_subject(
-                ctx_col, native_fingerprint, group_col is not None, vf),
-                out_ddl))
+            .applyInPandas(_register_subject(ctx_col, write), out_schema))
 
 
 def import_batch(spark: SparkSession, existing: DataFrame,

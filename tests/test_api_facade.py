@@ -8,6 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from axonops_schema_registry_spark.api import RegistryAnalytics
+from axonops_schema_registry_spark.registry import registration
 from axonops_schema_registry_spark.registry.model import (
     AVRO_USER_V1,
     AVRO_USER_V2,
@@ -89,17 +90,50 @@ def test_register_through_facade(spark, reg):
     assert out["registered"].assigned_version == 3
 
 
-def test_register_pins_nothing(spark, reg):
+def test_register_pins_nothing(spark, reg, monkeypatch):
     """A long-lived session calling register() must not grow the set of
-    persisted RDDs: register caches nothing."""
+    persisted RDDs: register caches nothing, in-process or as the cogroup
+    (forced by a row cap of 0)."""
     persistent = spark.sparkContext._jsc.getPersistentRDDs()
     before = persistent.size()
     incoming = spark.createDataFrame(
         [("user-value", 1, "AVRO", AVRO_USER_V3),
          ("user-value", 2, "AVRO", AVRO_USER_V2_BAD)],
         "subject string, seq int, schema_type string, schema_text string")
-    reg.register(incoming).collect()
-    assert spark.sparkContext._jsc.getPersistentRDDs().size() == before
+    for cap in (registration.REGISTER_ROW_CAP, 0):
+        monkeypatch.setattr(registration, "REGISTER_ROW_CAP", cap)
+        reg.register(incoming).collect()
+        assert spark.sparkContext._jsc.getPersistentRDDs().size() == before
+
+
+def test_register_below_cap_runs_at_most_four_jobs(spark, reg):
+    """Below the cap, register reads the batch, its subjects' histories
+    and each config table once (4 jobs) and collecting its result runs
+    none."""
+    incoming = spark.createDataFrame(
+        [("user-value", 1, "AVRO", AVRO_USER_V3),
+         ("user-value", 2, "AVRO", AVRO_USER_V3),
+         ("user-value", 3, "AVRO", AVRO_USER_V2_BAD),
+         ("event-value", 4, "AVRO", AVRO_USER_V1)],
+        "subject string, seq int, schema_type string, schema_text string")
+    modes = spark.createDataFrame([("event-value", "READONLY"),
+                                   (None, "READWRITE")],
+                                  "subject string, mode string")
+    levels = spark.createDataFrame([("user-value", "BACKWARD_TRANSITIVE"),
+                                    (None, "BACKWARD")],
+                                   "subject string, level string")
+    sc = spark.sparkContext
+    gid = "register-below-cap"
+    sc.setJobGroup(gid, gid)
+    try:
+        rows = reg.register(incoming, modes=modes, levels=levels).collect()
+        jobs = sc.statusTracker().getJobIdsForGroup(gid)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert {r.seq: (r.status, r.assigned_version) for r in rows} == {
+        1: ("registered", 3), 2: ("duplicate", None),
+        3: ("incompatible", None), 4: ("readonly_mode", None)}
+    assert len(jobs) <= 4, list(jobs)
 
 
 def test_corpus_backed_facade(corpus_reg):

@@ -4,10 +4,16 @@ import_mode_comprehensive.feature, registry.go:889-930 GetMode chain)."""
 from __future__ import annotations
 
 import json
+import re
 
 from pyspark.sql import functions as F
 
-from axonops_schema_registry_spark.registry.modes import with_resolved_mode
+from axonops_schema_registry_spark.registry.modes import (
+    resolve_level,
+    resolve_mode,
+    with_resolved_level,
+    with_resolved_mode,
+)
 from axonops_schema_registry_spark.registry.registration import (
     import_batch,
     register_batch,
@@ -230,3 +236,92 @@ def test_context_kill_switch_on_default_context(spark):
         [("tenant-a", "s1", "READWRITE"),
          ("__GLOBAL", None, "READONLY_OVERRIDE")])
     assert got2[("tenant-a", "s1")] == "READONLY_OVERRIDE"
+
+
+def _plan_nodes(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_resolvers_plan_one_broadcast_join_no_shuffle(spark):
+    """Both chains, both shapes: the config is folded on the driver, so
+    the plan is a broadcast join plus literals — no aggregate and no
+    shuffle exchange (``BroadcastExchange`` is the broadcast itself)."""
+    df = spark.createDataFrame([("a", "s1"), ("b", "s2")],
+                               "registry_ctx string, subject string")
+    plain_modes = _modes(spark, [("s1", "IMPORT"), (None, "READONLY")])
+    ctx_modes = spark.createDataFrame(
+        [("a", "s1", "IMPORT"), ("a", None, "READONLY"),
+         (".", None, "READWRITE"), ("__GLOBAL", None, "READONLY")],
+        "registry_ctx string, subject string, mode string")
+    plain_levels = spark.createDataFrame(
+        [("s1", "FULL"), (None, "NONE")], "subject string, level string")
+    ctx_levels = spark.createDataFrame(
+        [("a", "s1", "FULL"), ("b", None, "NONE"),
+         ("__GLOBAL", None, "FORWARD")],
+        "registry_ctx string, subject string, level string")
+    plans = {
+        "mode": with_resolved_mode(df, plain_modes),
+        "mode_ctx": with_resolved_mode(df, ctx_modes,
+                                       ctx_col="registry_ctx"),
+        "level": with_resolved_level(df, plain_levels),
+        "level_ctx": with_resolved_level(df, ctx_levels,
+                                         ctx_col="registry_ctx"),
+    }
+    for name, out in plans.items():
+        plan = _plan_nodes(out)
+        assert "BroadcastHashJoin" in plan, (name, plan)
+        assert not re.search(r"\bExchange\b", plan), (name, plan)
+        assert "HashAggregate" not in plan, (name, plan)
+    got = {name: {(r["registry_ctx"], r["subject"]):
+                  r["resolved_mode" if name.startswith("mode")
+                    else "resolved_level"] for r in out.collect()}
+           for name, out in plans.items()}
+    assert got == {
+        "mode": {("a", "s1"): "IMPORT", ("b", "s2"): "READONLY"},
+        "mode_ctx": {("a", "s1"): "IMPORT", ("b", "s2"): "READONLY"},
+        "level": {("a", "s1"): "FULL", ("b", "s2"): "NONE"},
+        "level_ctx": {("a", "s1"): "FULL", ("b", "s2"): "NONE"},
+    }
+
+
+def test_duplicate_config_rows_resolve_to_max(spark):
+    """Several rows for one key resolve to their ``max`` — the rule the
+    global row already used — and each incoming row stays one row."""
+    df = spark.createDataFrame([("a", "s"), ("a", "t")],
+                               "registry_ctx string, subject string")
+    modes = _modes(spark, [("s", "IMPORT"), ("s", "READONLY"),
+                           (None, "IMPORT"), (None, "READONLY")])
+    out = with_resolved_mode(df, modes).collect()
+    assert sorted((r["subject"], r["resolved_mode"]) for r in out) == [
+        ("s", "READONLY"), ("t", "READONLY")]
+    assert resolve_mode(modes).get("s") == "READONLY"
+
+    ctx_modes = spark.createDataFrame(
+        [("a", "s", "IMPORT"), ("a", "s", "READONLY"),
+         ("a", None, "IMPORT"), ("a", None, "READONLY")],
+        "registry_ctx string, subject string, mode string")
+    out = with_resolved_mode(df, ctx_modes, ctx_col="registry_ctx").collect()
+    assert sorted((r["subject"], r["resolved_mode"]) for r in out) == [
+        ("s", "READONLY"), ("t", "READONLY")]
+
+    levels = spark.createDataFrame([("s", "BACKWARD"), ("s", "FULL")],
+                                   "subject string, level string")
+    out = with_resolved_level(df, levels).collect()
+    assert sorted((r["subject"], r["resolved_level"]) for r in out) == [
+        ("s", "FULL"), ("t", "BACKWARD")]
+    assert resolve_level(levels, default="NONE").get("s") == "FULL"
+
+    # register_batch gates with the same rule: dropping a defaultless
+    # field is BACKWARD-compatible, but FULL rejects it
+    doc = json.loads(_SCHEMA)
+    doc["fields"].append({"name": "y", "type": "string"})
+    existing = spark.createDataFrame(
+        [("s", 1, "AVRO", json.dumps(doc))],
+        "subject string, version int, schema_type string, "
+        "schema_text string")
+    incoming = spark.createDataFrame(
+        [("s", 1, "AVRO", _SCHEMA)],
+        "subject string, seq int, schema_type string, schema_text string")
+    out = register_batch(spark, existing, incoming, levels=levels)
+    assert [(r["seq"], r["status"]) for r in out.collect()] == [
+        (1, "incompatible")]

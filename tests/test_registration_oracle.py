@@ -6,12 +6,15 @@ The replay shares only the domain cores with the engine
 (``check_compatibility`` and the strict canonical fingerprint); the mode
 and level chains, dedup, the soft-delete rules, scoping by context and
 compatibility group, and version allocation are re-derived here, so the
-property checks the Spark plan and the per-subject pass it runs.
+property checks both of ``register_batch``'s dispatchers (the in-process
+path, and the cogroup forced with ``REGISTER_ROW_CAP = 0``) and the
+per-subject pass they share.
 """
 
 from __future__ import annotations
 
 import hashlib
+import itertools
 import json
 from collections import defaultdict
 
@@ -26,6 +29,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from axonops_schema_registry_spark.registry import registration
 from axonops_schema_registry_spark.registry.compat import check_compatibility
 from axonops_schema_registry_spark.registry.registration import register_batch
 from axonops_schema_registry_spark.registry.spark_udfs import (
@@ -256,8 +260,29 @@ CONFIGS = {"plain": (False, False, False), "native": (False, False, True),
            "ctx": (True, False, False), "group": (False, True, False)}
 
 
+# the row cap that selects each of register_batch's dispatchers; every
+# non-empty batch exceeds a cap of 0
+PATHS = {"in_process": registration.REGISTER_ROW_CAP, "cogroup": 0}
+
+
+def _ran(out) -> str:
+    plan = out._jdf.queryExecution().logical().toString()
+    return "cogroup" if "FlatMapCoGroupsInPandas" in plan else "in_process"
+
+
 @pytest.mark.parametrize("config", list(CONFIGS))
 def test_register_batch_matches_serial_replay(spark, config):
+    _check_serial_replay(spark, config, "in_process")
+
+
+@pytest.mark.parametrize("config", list(CONFIGS))
+def test_register_batch_cogroup_matches_serial_replay(spark, config,
+                                                      monkeypatch):
+    monkeypatch.setattr(registration, "REGISTER_ROW_CAP", PATHS["cogroup"])
+    _check_serial_replay(spark, config, "cogroup")
+
+
+def _check_serial_replay(spark, config: str, path: str) -> None:
     with_ctx, with_group, native = CONFIGS[config]
 
     # each example runs a Spark job: no shrinking, the first failing
@@ -276,6 +301,7 @@ def test_register_batch_matches_serial_replay(spark, config):
                              levels=levels_df,
                              ctx_col="ctx" if with_ctx else None,
                              group_col="grp" if with_group else None)
+        assert _ran(out) == path
         got = {(r["ctx"] if with_ctx else None, r["subject"], r["seq"]):
                (r["status"], r["assigned_version"], r["n_issues"])
                for r in out.collect()}
@@ -307,17 +333,26 @@ def test_register_batch_matches_serial_replay(spark, config):
 
 @pytest.mark.parametrize("seq_type,spark_type",
                          [("int", IntegerType()), ("long", LongType())])
-def test_register_batch_output_schema(spark, seq_type, spark_type):
+def test_register_batch_output_schema(spark, seq_type, spark_type,
+                                     monkeypatch):
     """The output schema is the gate path's: names, order, types and
-    nullability; ``seq`` keeps the incoming column's type."""
-    for ctx in (None, "ctx"):
+    nullability; ``seq`` keeps the incoming column's type.  Checked on
+    both paths, on an empty batch (in-process either way: 0 rows is under
+    any cap) and a one-row batch."""
+    text = _record(BASE)
+    for path, ctx, rows in itertools.product(
+            PATHS, (None, "ctx"), ([], [("s", 1)])):
+        monkeypatch.setattr(registration, "REGISTER_ROW_CAP", PATHS[path])
+        rows = [(("a",) if ctx else ()) + r for r in rows]
         prefix = f"{ctx} string, " if ctx else ""
         ex = spark.createDataFrame(
-            [], prefix + "subject string, version int, "
-                         "schema_type string, schema_text string")
+            [r[:-1] + (1, "AVRO", text) for r in rows],
+            prefix + "subject string, version int, "
+                     "schema_type string, schema_text string")
         inc = spark.createDataFrame(
-            [], prefix + f"subject string, seq {seq_type}, "
-                         "schema_type string, schema_text string")
+            [r + ("AVRO", text) for r in rows],
+            prefix + f"subject string, seq {seq_type}, "
+                     "schema_type string, schema_text string")
         want = StructType(
             ([StructField(ctx, StringType())] if ctx else [])
             + [StructField("subject", StringType()),
@@ -328,3 +363,24 @@ def test_register_batch_output_schema(spark, seq_type, spark_type):
         for mode in ("BACKWARD", "NONE"):
             out = register_batch(spark, ex, inc, mode=mode, ctx_col=ctx)
             assert out.schema == want
+            assert [r.status for r in out.collect()] == (
+                ["duplicate"] if rows else [])
+            if rows:
+                assert _ran(out) == path
+
+
+def test_reserved_fields_equal_on_both_paths(spark, monkeypatch):
+    """The reserved-field rules (``metadata_col`` + ``validate_fields``,
+    which the generated scenarios leave out) give the same rows on the
+    in-process path and on the cogroup."""
+    from axonops_schema_registry_spark.queries.registry_queries import (
+        rf1_reserved_fields,
+    )
+
+    in_process = rf1_reserved_fields(spark, None)
+    monkeypatch.setattr(registration, "REGISTER_ROW_CAP", PATHS["cogroup"])
+    cogroup = rf1_reserved_fields(spark, None)
+    assert (_ran(in_process), _ran(cogroup)) == ("in_process", "cogroup")
+    rows = [tuple(r) for r in in_process.collect()]
+    assert rows == [tuple(r) for r in cogroup.collect()]
+    assert [r[2] for r in rows].count("reserved_conflict") == 4

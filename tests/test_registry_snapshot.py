@@ -1,5 +1,5 @@
-"""RegistryAnalytics' driver-side snapshot: the point and field reads it
-answers must equal the Spark path they bypass, and it must be built once
+"""RegistryAnalytics' driver-side snapshot: the point, statistics and
+field reads it answers must equal the Spark path they bypass, and it must be built once
 per facade, run no Spark job once built and pin nothing in Spark."""
 
 from __future__ import annotations
@@ -141,6 +141,7 @@ def test_snapshot_answers_equal_spark_path(spark, corpus, data):
         _same(snap.history(subject, include_deleted),
               spark_side.history(subject, include_deleted), ordered=True)
     _same(snap.fields(), spark_side.fields())
+    _same(snap.statistics(), spark_side.statistics())
     term = data.draw(st.sampled_from(SEARCH_TERMS))
     _same(snap.search_fields(term), spark_side.search_fields(term))
     threshold = data.draw(st.sampled_from([0.0, 0.3, 0.5, 1.0]))
@@ -151,6 +152,23 @@ def test_snapshot_answers_equal_spark_path(spark, corpus, data):
     for mode in MODES:
         assert (snap.check(probe, subject, mode, stype)
                 == spark_side.check(probe, subject, mode, stype)), mode
+
+
+def test_statistics_null_type_and_subject_equal_spark_path(spark):
+    """A null schema type is one group; a null subject counts as a version
+    but not as a subject; deleted rows count as neither."""
+    rows = [("a-value", 1, "AVRO", "{}", False),
+            ("a-value", 2, "AVRO", "{}", True),
+            ("b-value", 1, None, "{}", False),
+            (None, 1, None, "{}", False),
+            (None, 2, "AVRO", "{}", False),
+            ("c-value", 1, "JSON", "{}", True)]
+    snap, spark_side = _pair(
+        spark, rows, "subject string, version int, schema_type string, "
+                     "schema_text string, deleted boolean")
+    _same(snap.statistics(), spark_side.statistics())
+    assert sorted((tuple(r) for r in snap.statistics().collect()),
+                  key=repr) == [("AVRO", 1, 2), (None, 1, 2)]
 
 
 def test_snapshot_built_once_under_concurrent_first_reads(spark,
