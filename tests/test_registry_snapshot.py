@@ -1,6 +1,7 @@
 """RegistryAnalytics' driver-side snapshot: the point, statistics and
-field reads it answers must equal the Spark path they bypass, and it must be built once
-per facade, run no Spark job once built and pin nothing in Spark."""
+field reads it answers must equal the Spark path they bypass, and it must
+be built once per facade, run no Spark job once built and pin nothing in
+Spark."""
 
 from __future__ import annotations
 
