@@ -19,8 +19,11 @@ derivation runs per-subject, so state is bounded by versions-per-subject.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
 from axonops_schema_registry_spark.catalog import load_table
 
@@ -89,8 +92,18 @@ PROTO_EVENT_V2 = ('syntax = "proto3";\nmessage Event {\n  string id = 1;\n'
                   '  string source = 2;\n}\n')
 
 
+_FIXTURE_SCHEMA = StructType([
+    StructField("subject", StringType()),
+    StructField("version", IntegerType()),
+    StructField("schema_type", StringType()),
+    StructField("schema_text", StringType()),
+])
+
+
 def fixture_schemas(spark: SparkSession) -> DataFrame:
-    """(subject, version, schema_type, schema_text) fixture table."""
+    """(subject, version, schema_type, schema_text) fixture table, every
+    column nullable.  Built through Arrow: Spark folds it into a local
+    relation, so no job over it starts a Python worker."""
     rows = [
         ("user-value", 1, "AVRO", AVRO_USER_V1),
         ("user-value", 2, "AVRO", AVRO_USER_V2),
@@ -100,6 +113,7 @@ def fixture_schemas(spark: SparkSession) -> DataFrame:
         ("event-value", 1, "PROTOBUF", PROTO_EVENT_V1),
         ("event-value", 2, "PROTOBUF", PROTO_EVENT_V2),
     ]
-    return spark.createDataFrame(
-        rows, "subject string, version int, schema_type string, "
-              "schema_text string")
+    table = pa.Table.from_pylist(
+        [dict(zip(_FIXTURE_SCHEMA.fieldNames(), r)) for r in rows],
+        schema=to_arrow_schema(_FIXTURE_SCHEMA))
+    return spark.createDataFrame(table, schema=_FIXTURE_SCHEMA)

@@ -19,7 +19,7 @@ it the same rows, and each input is read once:
 
 - **in-process** (a batch and its subjects' histories of at most
   ``REGISTER_ROW_CAP`` rows each): one Arrow collect of the batch, one of
-  the stored rows of its subjects (a literal ``isin`` filter the parquet
+  the stored rows of its subjects (one literal ``IN`` filter the parquet
   scan can push down, so the batch is not evaluated again), and one
   collect per config table (:func:`registry.modes.resolve_mode` /
   ``resolve_level``, looked up per row on the driver).  The groups run in
@@ -315,7 +315,7 @@ def register_batch(spark: SparkSession, existing: DataFrame,
     batch = cand.limit(REGISTER_ROW_CAP + 1).toArrow()
     if batch.num_rows <= REGISTER_ROW_CAP:
         subjects = sorted(set(batch.column("subject").to_pylist()) - {None})
-        stored = (hist.filter(F.col("subject").isin(subjects))
+        stored = (hist.filter(_subject_in(subjects))
                   .limit(REGISTER_ROW_CAP + 1).toArrow() if subjects
                   else None)
         if stored is None or stored.num_rows <= REGISTER_ROW_CAP:
@@ -324,6 +324,16 @@ def register_batch(spark: SparkSession, existing: DataFrame,
                 write, out_schema)
     return _register_cogroup(spark, cand, hist, keys, mode, modes, levels,
                              ctx_col, write, out_schema)
+
+
+def _subject_in(subjects: list[str]):
+    """``subject IN (...)`` as one SQL expression: one JVM call, where
+    ``Column.isin`` makes one per literal.  Each subject is a hex literal
+    cast to string, so no text needs escaping under any parser setting;
+    the cast folds to a string literal, and the scan pushes the ``In``
+    down as it does ``isin``'s."""
+    return F.expr("subject IN ({})".format(", ".join(
+        f"CAST(X'{s.encode().hex()}' AS STRING)" for s in subjects)))
 
 
 def _nulls_last(value) -> tuple:

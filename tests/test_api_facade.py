@@ -6,14 +6,20 @@ import hashlib
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
 from axonops_schema_registry_spark.api import RegistryAnalytics
 from axonops_schema_registry_spark.registry import registration
 from axonops_schema_registry_spark.registry.model import (
+    AVRO_ORDER,
     AVRO_USER_V1,
     AVRO_USER_V2,
     AVRO_USER_V2_BAD,
     AVRO_USER_V3,
+    JSON_USER_V1,
+    JSON_USER_V2,
+    PROTO_EVENT_V1,
+    PROTO_EVENT_V2,
     fixture_schemas,
 )
 
@@ -26,6 +32,28 @@ def reg(spark):
 @pytest.fixture(scope="module")
 def corpus_reg(spark, sf_dir):
     return RegistryAnalytics.from_sf_dir(spark, sf_dir)
+
+
+def test_fixture_schemas_is_an_arrow_local_relation(spark):
+    """The fixture table's schema (every column nullable) and rows; built
+    through Arrow, its plan is a local relation, so no job over it starts
+    a Python worker."""
+    fx = fixture_schemas(spark)
+    assert fx.schema == StructType([
+        StructField("subject", StringType(), True),
+        StructField("version", IntegerType(), True),
+        StructField("schema_type", StringType(), True),
+        StructField("schema_text", StringType(), True)])
+    assert [tuple(r) for r in fx.collect()] == [
+        ("user-value", 1, "AVRO", AVRO_USER_V1),
+        ("user-value", 2, "AVRO", AVRO_USER_V2),
+        ("order-events-value", 1, "AVRO", AVRO_ORDER),
+        ("profile-value", 1, "JSON", JSON_USER_V1),
+        ("profile-value", 2, "JSON", JSON_USER_V2),
+        ("event-value", 1, "PROTOBUF", PROTO_EVENT_V1),
+        ("event-value", 2, "PROTOBUF", PROTO_EVENT_V2)]
+    plan = fx._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.startswith("LocalRelation"), plan
 
 
 def test_subjects_and_latest(reg):

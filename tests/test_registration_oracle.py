@@ -115,6 +115,8 @@ BASE = [("a", True)]
 PLUS_B = BASE + [("b", False)]
 PLUS_C = PLUS_B + [("c", False)]
 
+QUOTED = "it's\\a\\'path"
+
 OPS = ("add_optional", "add_required", "drop_last", "dup_live",
        "spaced_live", "dup_deleted", "repeat")
 
@@ -130,9 +132,11 @@ def scenarios(draw, with_ctx: bool, with_group: bool):
     READONLY_OVERRIDE, IMPORT), ``none`` (level NONE), ``spaced`` (a
     whitespace variant of a live version, a duplicate unless dedup runs
     on the raw text), ``grp`` (two compatibility groups) with
-    ``with_group``, and with ``with_ctx`` a second context whose ``acc``
-    already holds the text the first context registers.  Filler
-    subjects draw their history, modes, levels, groups and requests."""
+    ``with_group``, ``QUOTED`` (a duplicate in a subject whose name holds
+    ``'`` and ``\\``, so its history must be found), and with
+    ``with_ctx`` a second context whose ``acc`` already holds the text
+    the first context registers.  Filler subjects draw their history,
+    modes, levels, groups and requests."""
     groups = ["g1", "g2"] if with_group else [None]
     subjects = {
         "acc": (_history([BASE]), [("add_optional", "g1"),
@@ -146,6 +150,7 @@ def scenarios(draw, with_ctx: bool, with_group: bool):
         "imp": (_history([]), [("add_optional", "g1")]),
         "none": (_history([BASE]), [("add_required", "g1")]),
         "spaced": (_history([BASE, PLUS_B]), [("spaced_live", "g1")]),
+        QUOTED: (_history([BASE]), [("dup_live", "g1")]),
     }
     modes = [("ro", "READONLY"), ("rov", "READONLY_OVERRIDE"),
              ("imp", "IMPORT")]
@@ -320,6 +325,7 @@ def _check_serial_replay(spark, config: str, path: str) -> None:
                                                       None)]
         assert statuses("imp") == [("import_mode", None)]
         assert statuses("none") == [("registered", 2)]
+        assert statuses(QUOTED) == [("duplicate", None)]
         assert statuses("spaced")[0][0] == (
             "registered" if native else "duplicate")
         if with_group:
